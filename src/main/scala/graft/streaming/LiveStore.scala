@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.EventSourcing
+import Streams.deleteRec
 
 /** The continuously-maintained queryable state store.
   *
@@ -62,7 +63,7 @@ object LiveStore {
   // flat 16 shards a 2-task bench batch commits ~32 tiny files per
   // trigger to carry ~500 keys — the same constant-fan-out defect
   // class the r14 state-shard sizing removed. The layout now derives
-  // from the split source's TOTAL footer row mass at store creation
+  // from the source stream's TOTAL footer row mass at store creation
   // (~500k rows/shard, min 2 so multi-shard pruning stays exercised,
   // capped at the session default) and is RECORDED in the store dir
   // (`_nshards`), because the modulus is store METADATA: upsert and
@@ -72,8 +73,7 @@ object LiveStore {
   private[graft] def storeShardsFor(totalRows: Option[Long], sessionMax: Int): Int =
     totalRows match {
       case None => nShards
-      case Some(r) =>
-        math.max(2L, math.min(sessionMax.toLong, (r + 499999L) / 500000L)).toInt
+      case Some(r) => Streams.widthFor(r, 2, sessionMax)
     }
 
   private val shardCache =
@@ -100,10 +100,6 @@ object LiveStore {
 
   private def shardOf(dir: String, c: Column) =
     pmod(c, lit(storeShards(dir).toLong))
-
-  private def deleteRec(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(deleteRec)); f.delete(); ()
-  }
 
   private def subdirs(dir: String, prefix: String): Seq[java.io.File] =
     Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
@@ -268,17 +264,12 @@ object LiveStore {
   private def runStoreTo(s: SparkSession, d: String, dir: String): Unit = {
     deleteRec(new java.io.File(dir))
     shardCache.remove(dir)
-    // build the source BEFORE withStreamShards: the source records its
-    // measured per-batch row mass into the session conf, and the shard
-    // sizing reads that conf at withStreamShards entry — constructing
-    // the stream inside the body would size shards from whatever the
-    // PREVIOUS op's source left behind
     val src = Streams.eventStream(s, d).toDF()
     // pin the fresh store's shard layout from the source's measured
     // total mass (the _nshards marker — see storeShardsFor)
-    recordShards(dir, storeShardsFor(Streams.eventSourceRows(s, d),
+    recordShards(dir, storeShardsFor(Streams.sourceRows(s, src),
       s.sessionState.conf.numShufflePartitions))
-    Streams.withStreamShards(s) {
+    Streams.withStreamShards(s, src) {
       val q = src.writeStream
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
           upsert(batch, id, dir)

@@ -120,6 +120,11 @@ object Streams extends OpFamily {
 
   private val splitCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
+  /** Delete a file or directory tree (missing paths are a no-op). */
+  private[graft] def deleteRec(f: java.io.File): Unit = {
+    Option(f.listFiles()).foreach(_.foreach(deleteRec)); f.delete(); ()
+  }
+
   /** Split the events table into [[sourceBatches]] CHRONOLOGICAL files
     * (built once per session+dataset). Chronology between files is the
     * one ordering constraint the operators have: every stateful op here
@@ -130,7 +135,7 @@ object Streams extends OpFamily {
     * Cache key = the full TARGET path (workDir is session-specific): a
     * second session in this JVM with a different scratch root must
     * build its own split, not reuse a path another session owns. */
-  private def splitSource(s: SparkSession, d: String): String = {
+  private[graft] def splitSource(s: SparkSession, d: String): String = {
     val target = s"${Tables.workDir(s)}/events_split_" +
       Tables.datasetTag(d)
     splitCache.computeIfAbsent(target, base => {
@@ -139,27 +144,11 @@ object Streams extends OpFamily {
       // event-time type: watermarks reject TIMESTAMP_NTZ, and the raw
       // parquet has shipped as nanos-int64 AND µs-NTZ across testdata
       // generations.
-      val raw = Tables.events(s, d)
-      val tagged = Tables.stableCheckpoint(
-        raw.repartitionByRange(sourceBatches, col("ts"), col("event_id"))
-          .withColumn("_p", org.apache.spark.sql.functions.spark_partition_id())
-        ) // one shuffle, then three cheap filters
-      new java.io.File(base).mkdirs()
-      for (i <- 0 until sourceBatches) {
-        val tmp = s"$base/_build_$i"
-        tagged.filter(col("_p") === i).drop("_p")
-          .coalesce(1).write.mode("overwrite").parquet(tmp)
-        val part = Option(new java.io.File(tmp).listFiles()).get
-          .find(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("_")).get
-        val dst = new java.io.File(base, f"$i%02d.parquet")
-        java.nio.file.Files.move(part.toPath, dst.toPath,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        dst.setLastModified(1700000000000L + i * 60000L)
-        def rec(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rec)); f.delete(); ()
-        }
-        rec(new java.io.File(tmp))
-      }
+      writeSplitFiles(base, Tables.stableCheckpoint(
+        Tables.events(s, d)
+          .repartitionByRange(sourceBatches, col("ts"), col("event_id"))
+          .withColumn("_p", spark_partition_id())
+        )) // one shuffle, then three cheap filters
       base
     })
   }
@@ -172,41 +161,19 @@ object Streams extends OpFamily {
     * any operator. */
   def eventStream(s: SparkSession, d: String): Dataset[Ev] = {
     import s.implicits._
-    if (s.conf.getOption("graft.stream.source").contains("kafka")) {
-      s.conf.unset(sourceMassKey) // broker mass unknown — flat default
+    if (s.conf.getOption("graft.stream.source").contains("kafka"))
       KafkaWire.readStream(s)
-    } else {
+    else {
       // The split files are written post-normalization, so their schema
       // (ts: TimestampType micros) IS the stream schema — no per-arrival
       // conversion here.
-      val src = recordSourceMass(s, splitSource(s, d))
+      val src = splitSource(s, d)
       val stream = s.readStream.schema(s.read.parquet(src).schema)
         .option("maxFilesPerTrigger", "1").parquet(src)
       stream.select("event_id", "ts", "user_id", "event_type", "value").as[Ev]
     }
   }
 
-  /** Run a streaming DF to completion through a `foreachBatch` parquet
-    * sink — the PRODUCTION sink shape (each micro-batch lands
-    * atomically as one directory keyed by batch id; nothing
-    * accumulates in driver memory, so the same harness works at any
-    * result size) — and read the landed result back.
-    *
-    * complete mode: each batch is the full result ⇒ read the last
-    * batch. update/append: batches are deltas ⇒ read their union
-    * (exactly the contents a memory sink would have accumulated). */
-  /** Run `body` with the streaming STATE shard count scoped in: a
-    * stateful operator creates `spark.sql.shuffle.partitions` state
-    * stores, each committing files EVERY micro-batch — at local bench
-    * scale that commit fan-out is ~half the wall-clock of a stream
-    * query (measured: stream_latest 4.1 s → 2.1 s warm when the flat
-    * 32 became a flat 8). Shards now derive from the split source's
-    * MEASURED per-batch row mass (see [[stateShardsFor]] — ~500k
-    * rows/shard, min 2, capped at the session default), so production
-    * widths still grow with throughput while bench-scale batches stop
-    * paying a fixed fan-out; the session value is restored before the
-    * post-stream batch stages plan. Physical planning happens at
-    * start(), so scoping around the stream run is sufficient. */
   /** `graft.stream.stateStore=rocksdb` swaps every stateful stream_*
     * operator onto Spark's in-box RocksDBStateStoreProvider — the
     * 100 TB posture. The default HDFSBackedStateStoreProvider keeps
@@ -234,33 +201,40 @@ object Streams extends OpFamily {
   // measured cut from the session width (stream_latest 4.1 → 2.1 s),
   // but it is a CONSTANT — the exact defect class the R32 bucket
   // count fix (r13 verdict item 1) removed elsewhere. Shards now size
-  // from the split source's measured per-batch row mass (parquet
-  // footer counts — bounded metadata, cached per source dir), under
-  // the repo-wide ~500k rows/partition rule: min 2 (cross-shard state
+  // from the started frame's file-source row mass (parquet footer
+  // counts — bounded metadata, cached per source dir), under the
+  // repo-wide ~500k rows/partition rule: min 2 (cross-shard state
   // merge stays exercised), capped at the session shuffle default so
   // production widths still derive from the session, never a local
   // constant. Measured at sf0.1 (33k rows/batch ⇒ 2 shards):
   // stream_latest addBatch ~650 → ~380 ms/batch, warm medians
   // 3.3 → 2.8 s solo; the win grows under checkpoint-FS pressure
   // (fsync count per trigger drops 4x).
-  private val sourceMassKey = "graft.stream.sourceRowsPerBatch"
   private val massCache =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
 
-  /** Record a split source's per-batch row mass (footer counts / the
-    * batch count) into the session conf [[withStreamShards]] sizes
-    * state shards from. Returns the dir so source builders can wrap
-    * their return value. Unlistable dirs unset the conf (unknown mass
-    * falls back to the historical default). */
-  private def recordSourceMass(s: SparkSession, dir: String): String = {
+  private def footerRows(s: SparkSession, dir: String): Option[Long] = {
     val rows = massCache.computeIfAbsent(dir,
       p => Long.box(Tables.rowCountFromStats(s, p).getOrElse(-1L))).longValue()
-    if (rows >= 0)
-      s.conf.set(sourceMassKey,
-        math.max(1L, (rows + sourceBatches - 1) / sourceBatches).toString)
-    else s.conf.unset(sourceMassKey)
-    dir
+    if (rows >= 0) Some(rows) else None
   }
+
+  /** TOTAL footer row mass of the file sources a streaming frame reads
+    * (each dir counted once — a self-join reads one source twice).
+    * None when the frame has no file source (the broker transport, a
+    * MemoryStream) or a source dir is unlistable: unknown mass. */
+  private[graft] def sourceRows(s: SparkSession, df: Dataset[_]): Option[Long] = {
+    import org.apache.spark.sql.execution.streaming.runtime.StreamingRelation
+    val rows = df.queryExecution.analyzed
+      .collect { case r: StreamingRelation => r.dataSource.options.get("path") }
+      .flatten.distinct.map(footerRows(s, _))
+    if (rows.nonEmpty && rows.forall(_.isDefined)) Some(rows.flatten.sum) else None
+  }
+
+  /** The one streaming width law: ~500k rows per shard/bucket, at
+    * least `min`, capped at the session shuffle default. */
+  private[streaming] def widthFor(rows: Long, min: Int, sessionMax: Int): Int =
+    math.max(min.toLong, math.min(sessionMax.toLong, (rows + 499999L) / 500000L)).toInt
 
   /** The sizing law: ~500k rows/shard of per-batch INPUT mass, at
     * least 2, capped at the session shuffle default; unknown mass
@@ -279,37 +253,14 @@ object Streams extends OpFamily {
       stateKeys: Option[Long] = None): Int = {
     val byInput = rowsPerBatch match {
       case None => return 8
-      case Some(r) =>
-        math.max(2L, math.min(sessionMax.toLong, (r + 499999L) / 500000L))
+      case Some(r) => widthFor(r, 2, sessionMax)
     }
     val byState = stateKeys
       .map(k => math.min(sessionMax.toLong, (k + 9999L) / 10000L))
       .getOrElse(0L)
-    math.max(byInput, byState).toInt
+    math.max(byInput.toLong, byState).toInt
   }
 
-  /** TOTAL footer row mass of the default event split source (None on
-    * the broker transport, whose mass is unknown) — store-layout sizing
-    * reads this at store creation (LiveStore.runStoreTo). */
-  private[streaming] def eventSourceRows(s: SparkSession, d: String): Option[Long] =
-    if (s.conf.getOption("graft.stream.source").contains("kafka")) None
-    else {
-      val dir = splitSource(s, d)
-      val rows = massCache.computeIfAbsent(dir,
-        p => Long.box(Tables.rowCountFromStats(s, p).getOrElse(-1L))).longValue()
-      if (rows >= 0) Some(rows) else None
-    }
-
-  // row-scale-state ops set this to their state-key estimate (the
-  // split source's TOTAL footer row count — bounded metadata) right
-  // before their stream runs; withStreamShards consumes AND clears it
-  // so the hint never leaks into the next op.
-  private val stateKeysKey = "graft.stream.stateKeysHint"
-  private def hintRowScaleState(s: SparkSession, dir: String): Unit = {
-    val rows = massCache.computeIfAbsent(dir,
-      p => Long.box(Tables.rowCountFromStats(s, p).getOrElse(-1L))).longValue()
-    if (rows >= 0) s.conf.set(stateKeysKey, rows.toString)
-  }
   // RocksDB CHANGELOG checkpointing (round 11): by default the RocksDB
   // provider snapshots the full state store to the checkpoint every
   // batch; with changelog checkpointing each batch uploads only the
@@ -323,22 +274,31 @@ object Streams extends OpFamily {
   private val rocksChangelogKey =
     "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
 
-  private[graft] def withStreamShards[T](s: SparkSession)(body: => T): T = {
+  /** Run `body` — which starts `df` — with the streaming STATE shard
+    * count scoped in: a stateful operator creates
+    * `spark.sql.shuffle.partitions` state stores, each committing files
+    * EVERY micro-batch — at local bench scale that commit fan-out is
+    * ~half the wall-clock of a stream query (measured: stream_latest
+    * 4.1 s → 2.1 s warm when the flat 32 became a flat 8). Shards derive
+    * from `df`'s MEASURED per-batch row mass (its file sources' footer
+    * rows over [[sourceBatches]]; see [[stateShardsFor]] — ~500k
+    * rows/shard, min 2, capped at the session default), so production
+    * widths still grow with throughput while bench-scale batches stop
+    * paying a fixed fan-out. `rowScaleState` marks ops that keep a
+    * state key per source row: their total source mass is the
+    * state-key estimate. The session value is restored before the
+    * post-stream batch stages plan. Physical planning happens at
+    * start(), so scoping around the stream run is sufficient. */
+  private[graft] def withStreamShards[T](s: SparkSession, df: Dataset[_],
+      rowScaleState: Boolean = false)(body: => T): T = {
     val key = "spark.sql.shuffle.partitions"
     val prev = s.conf.get(key)
     val prevProvider = s.conf.getOption(stateStoreKey)
     val prevChangelog = s.conf.getOption(rocksChangelogKey)
-    val stateKeysHint = s.conf.getOption(stateKeysKey).map(_.toLong)
-    s.conf.unset(stateKeysKey) // one-shot: never leaks into the next op
-    // consume-and-clear the source mass too (r14 verdict item 6): a
-    // stream built WITHOUT a recording source must fall back to the
-    // flat default, not size itself from whatever the previous op's
-    // source left in the session conf
-    val sourceMass = s.conf.getOption(sourceMassKey).map(_.toLong)
-    s.conf.unset(sourceMassKey)
-    s.conf.set(key,
-      s.conf.getOption("graft.stream.statePartitions").getOrElse(
-        stateShardsFor(sourceMass, prev.toInt, stateKeysHint).toString))
+    val total = sourceRows(s, df)
+    val perBatch = total.map(r => math.max(1L, (r + sourceBatches - 1) / sourceBatches))
+    s.conf.set(key, stateShardsFor(perBatch, prev.toInt,
+      if (rowScaleState) total else None).toString)
     if (s.conf.getOption("graft.stream.stateStore").contains("rocksdb")) {
       s.conf.set(stateStoreKey, rocksProvider)
       if (s.conf.getOption("graft.stream.rocksdbChangelog").contains("true"))
@@ -357,14 +317,21 @@ object Streams extends OpFamily {
     }
   }
 
-  def runToTable(s: SparkSession, df: DataFrame, name: String, mode: String): DataFrame = {
+  /** Run a streaming DF to completion through a `foreachBatch` parquet
+    * sink — the PRODUCTION sink shape (each micro-batch lands
+    * atomically as one directory keyed by batch id; nothing
+    * accumulates in driver memory, so the same harness works at any
+    * result size) — and read the landed result back. State shards size
+    * from `df` itself (see [[withStreamShards]]).
+    *
+    * complete mode: each batch is the full result ⇒ read the last
+    * batch. update/append: batches are deltas ⇒ read their union
+    * (exactly the contents a memory sink would have accumulated). */
+  def runToTable(s: SparkSession, df: DataFrame, name: String, mode: String,
+      rowScaleState: Boolean = false): DataFrame = {
     val dir = new java.io.File(s"${graft.sources.Tables.workDir(s)}/sink_$name")
-    def deleteRec(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(deleteRec))
-      f.delete(); ()
-    }
     deleteRec(dir)
-    withStreamShards(s) {
+    withStreamShards(s, df, rowScaleState) {
       val q = df.writeStream
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
           batch.write.mode("overwrite").parquet(s"$dir/b_$id")
@@ -436,8 +403,7 @@ object Streams extends OpFamily {
     // dropDuplicates keeps a state key PER EVENT (row-scale state —
     // the stream_command_dedup finding): shards size from the state
     // estimate, not just the batch input
-    hintRowScaleState(s, splitSource(s, d))
-    runToTable(s, deduped, "graft_stream_dedup", "append")
+    runToTable(s, deduped, "graft_stream_dedup", "append", rowScaleState = true)
       .groupBy("event_type").agg(count(lit(1)).as("n"))
   }
 
@@ -841,8 +807,7 @@ object Streams extends OpFamily {
     // 5.1 -> 4.0 s warm at sf0.1). The mass-derived sizing in
     // withStreamShards now lands BELOW that at bench scale (2 shards
     // for a 33k-row batch) and still scales with the measured source,
-    // so the override is gone; an explicit graft.stream.statePartitions
-    // conf still wins inside withStreamShards.
+    // so the override is gone.
     runToTable(s, joined, "graft_stream_join", "append").drop("_batch_id")
   }
 
@@ -897,12 +862,7 @@ object Streams extends OpFamily {
   // straight off the split source; oracle = E29's ⇒ batch/stream
   // parity for every verdict field.
   private def streamCommandDedup(s: SparkSession, d: String): DataFrame = {
-    val src = recordSourceMass(s, splitSource(s, d))
-    // state is a key per (user, idem_key) ≈ one per event — row-scale,
-    // so shards size from the state estimate, not just batch input
-    // (measured: addBatch 2.1 s/batch at the input rule's 2 shards vs
-    // 0.65 s at 8 on the 73k-key sf0.1 state)
-    hintRowScaleState(s, src)
+    val src = splitSource(s, d)
     val raw = s.readStream.schema(s.read.parquet(src).schema)
       .option("maxFilesPerTrigger", "1").parquet(src)
     val agg = raw
@@ -916,7 +876,12 @@ object Streams extends OpFamily {
       .select(col("user_id"), col("idem_key"), col("n_attempts"),
         graft.operators.Packed.eventId(col("pk")).as("accepted_event_id"),
         (col("n_attempts") - 1).as("n_duplicates"))
-    runToTable(s, agg, "graft_stream_command_dedup", "complete")
+    // state is a key per (user, idem_key) ≈ one per event — row-scale,
+    // so shards size from the state estimate, not just batch input
+    // (measured: addBatch 2.1 s/batch at the input rule's 2 shards vs
+    // 0.65 s at 8 on the 73k-key sf0.1 state)
+    runToTable(s, agg, "graft_stream_command_dedup", "complete",
+      rowScaleState = true)
   }
 
   // M21's streaming twin `stream_availability`: the uptime roll-up as
@@ -1115,25 +1080,22 @@ object Streams extends OpFamily {
       java.nio.file.Files.move(part.toPath, dst.toPath,
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
       dst.setLastModified(1700000000000L + i * 60000L)
-      def rec(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rec)); f.delete(); ()
-      }
-      rec(new java.io.File(tmp))
+      deleteRec(new java.io.File(tmp))
     }
   }
 
   // cache key = full target path (session-specific workDir), like splitSource
-  private def docSplitSource(s: SparkSession, d: String): String = {
+  private[graft] def docSplitSource(s: SparkSession, d: String): String = {
     val target = s"${Tables.workDir(s)}/docs_split_" +
       Tables.datasetTag(d)
-    recordSourceMass(s, docSplitCache.computeIfAbsent(target, base => {
+    docSplitCache.computeIfAbsent(target, base => {
       val t = graft.functions.Dedup.incThreshold(s, d)
       writeSplitFiles(base, Tables.stableCheckpoint(
         Tables.documents(s, d).filter(col("doc_id") > t)
           .repartitionByRange(sourceBatches, col("doc_id"))
           .withColumn("_p", spark_partition_id())))
       base
-    }))
+    })
   }
 
   // growing stores are per-invocation (append-only across the run's
@@ -1154,10 +1116,7 @@ object Streams extends OpFamily {
     // grace deletion) OR a compaction already folded this id into a base
     if (dst.exists() || liveGrowth(root)._1 >= id) return
     val stg = new java.io.File(root, s"_staging_b$id")
-    def rec(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rec)); f.delete(); ()
-    }
-    rec(stg)
+    deleteRec(stg)
     df.write.mode("overwrite").parquet(stg.getPath)
     java.nio.file.Files.move(stg.toPath, dst.toPath,
       java.nio.file.StandardCopyOption.ATOMIC_MOVE)
@@ -1179,10 +1138,6 @@ object Streams extends OpFamily {
   // inputs are RETIRED (outranked by the new base) and physically
   // deleted one compaction cycle later, so an in-flight scan that
   // planned over the old roots keeps its files.
-  private def deleteRecG(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(deleteRecG))
-    f.delete(); ()
-  }
 
   private def growSubdirs(root: String, prefix: String): Seq[(Long, java.io.File)] =
     Option(new java.io.File(root).listFiles()).getOrElse(Array.empty)
@@ -1220,11 +1175,11 @@ object Streams extends OpFamily {
     if (deltas.size <= LiveStore.compactEvery) return
     // grace drain: what the PREVIOUS compaction retired has had a full
     // cycle for in-flight scans to finish
-    staleGrowth(root).foreach(deleteRecG)
+    staleGrowth(root).foreach(deleteRec)
     val upTo = deltas.map(_._1).max
     val folded = readGrown(s, root).get
     val stg = new java.io.File(root, s"_staging_grown_v$upTo")
-    deleteRecG(stg)
+    deleteRec(stg)
     folded.write.mode("overwrite").parquet(stg.getPath)
     java.nio.file.Files.move(stg.toPath,
       new java.io.File(root, s"grown_v$upTo").toPath,
@@ -1276,7 +1231,7 @@ object Streams extends OpFamily {
     val outDir = new java.io.File(s"${Tables.workDir(s)}/sink_stream_admit_$inv")
     val stream = s.readStream.schema(Tables.documents(s, d).schema)
       .option("maxFilesPerTrigger", "1").parquet(docSplitSource(s, d))
-    withStreamShards(s) {
+    withStreamShards(s, stream) {
       val q = stream.writeStream
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
           val s2 = batch.sparkSession
@@ -1355,15 +1310,15 @@ object Streams extends OpFamily {
   private val idxMaintainInvocations =
     new java.util.concurrent.atomic.AtomicInteger(0)
 
-  private def idxDeltaSplitSource(s: SparkSession, d: String): String = {
+  private[graft] def idxDeltaSplitSource(s: SparkSession, d: String): String = {
     val target = s"${Tables.workDir(s)}/idxdelta_split_" + Tables.datasetTag(d)
-    recordSourceMass(s, docSplitCache.computeIfAbsent(target, base => {
+    docSplitCache.computeIfAbsent(target, base => {
       writeSplitFiles(base, Tables.stableCheckpoint(
         graft.functions.Dedup.indexDeltaActions(s, d)
           .repartitionByRange(sourceBatches, col("doc_id"))
           .withColumn("_p", spark_partition_id())))
       base
-    }))
+    })
   }
 
   /** Canonical view of base ∪ maintained growth store under the
@@ -1406,9 +1361,9 @@ object Streams extends OpFamily {
   private val viewMaintainInvocations =
     new java.util.concurrent.atomic.AtomicInteger(0)
 
-  private def liDeltaSplitSource(s: SparkSession, d: String, t: Long): String = {
-    val target = s"${Tables.workDir(s)}/lidelta_split_" + Tables.datasetTag(d)
-    recordSourceMass(s, docSplitCache.computeIfAbsent(target, base => {
+  private[graft] def liDeltaSplitSource(s: SparkSession, d: String, t: Long): String = {
+    val target = s"${Tables.workDir(s)}/lidelta_split_${Tables.datasetTag(d)}_$t"
+    docSplitCache.computeIfAbsent(target, base => {
       // DIRECT split write — no stableCheckpoint, no coalesce(1): the
       // view partials are commutative monoids, so batch CONTENTS need
       // no cross-run pinning (unlike the order-sensitive admit split),
@@ -1429,12 +1384,9 @@ object Streams extends OpFamily {
           java.nio.file.StandardCopyOption.REPLACE_EXISTING)
         dst.setLastModified(1700000000000L + i * 60000L)
       }
-      def rec(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rec)); f.delete(); ()
-      }
-      rec(new java.io.File(tmp))
+      deleteRec(new java.io.File(tmp))
       base
-    }))
+    })
   }
 
   /** Bucket count for a bucketed external dimension table from its
@@ -1447,8 +1399,7 @@ object Streams extends OpFamily {
   private[graft] def dimBucketsFor(estRows: Option[Long], sessionMax: Int): Int =
     estRows match {
       case None => sessionMax
-      case Some(r) =>
-        math.max(1, math.min(sessionMax.toLong, (r + 499999L) / 500000L).toInt)
+      case Some(r) => widthFor(r, 1, sessionMax)
     }
 
   private def streamViewMaintain(s: SparkSession, d: String): DataFrame = {
@@ -1527,7 +1478,7 @@ object Streams extends OpFamily {
       // start, nothing else in the JVM sees it.
       Tables.withScopedConf(s,
         "spark.sql.legacy.bucketedTableScan.outputOrdering", "true") {
-        withStreamShards(s) {
+        withStreamShards(s, stream) {
           val q = stream.writeStream
             .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
               val s2 = batch.sparkSession
@@ -1546,10 +1497,7 @@ object Streams extends OpFamily {
       // (LOCATION_ALREADY_EXISTS on rerun) — unique name per
       // invocation + drop + delete the location
       s.sql(s"DROP TABLE IF EXISTS $dimTable")
-      def rec(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rec)); f.delete(); ()
-      }
-      rec(new java.io.File(dimLoc))
+      deleteRec(new java.io.File(dimLoc))
     }
     s.read.parquet(path)
       .unionByName(readGrown(s, root).getOrElse(
@@ -1568,7 +1516,7 @@ object Streams extends OpFamily {
     val srcDir = idxDeltaSplitSource(s, d)
     val stream = s.readStream.schema(s.read.parquet(srcDir).schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    withStreamShards(s) {
+    withStreamShards(s, stream) {
       val q = stream.writeStream
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
           val s2 = batch.sparkSession

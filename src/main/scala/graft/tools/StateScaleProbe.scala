@@ -42,8 +42,9 @@ object StateScaleProbe {
     var stateRows = 0L
     var stateMem = 0L
     var custom = "{}"
-    graft.streaming.Streams.withStreamShards(s) {
-      val q = admitStream(s, d).writeStream
+    val stream = admitStream(s, d)
+    graft.streaming.Streams.withStreamShards(s, stream) {
+      val q = stream.writeStream
         .foreachBatch {
           (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
            id: Long) =>

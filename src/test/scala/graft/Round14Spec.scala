@@ -263,11 +263,12 @@ class Round14Spec extends SparkSpec {
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
       rec(tmp); dst
     }
-    def runStore(srcDir: String, ckpt: String, storeDir: String): Unit =
-      Streams.withStreamShards(spark) {
-        val q = spark.readStream
-          .schema(spark.read.parquet(srcDir).schema)
-          .option("maxFilesPerTrigger", "1").parquet(srcDir)
+    def runStore(srcDir: String, ckpt: String, storeDir: String): Unit = {
+      val stream = spark.readStream
+        .schema(spark.read.parquet(srcDir).schema)
+        .option("maxFilesPerTrigger", "1").parquet(srcDir)
+      Streams.withStreamShards(spark, stream) {
+        val q = stream
           .writeStream.option("checkpointLocation", ckpt)
           .foreachBatch {
             (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
@@ -276,6 +277,7 @@ class Round14Spec extends SparkSpec {
           .outputMode("update").start()
         q.processAllAvailable(); q.stop()
       }
+    }
     // uninterrupted reference
     val refStore = s"$root/store_ref"
     runStore(srcAll.getPath, s"$root/ckpt_ref", refStore)

@@ -186,16 +186,18 @@ class Round15Spec extends SparkSpec {
       }
     }
     def runGrowth(srcDir: String, ckpt: String)(
-        body: (DataFrame, Long) => Unit): Unit =
-      Streams.withStreamShards(spark) {
-        val q = spark.readStream
-          .schema(spark.read.parquet(srcDir).schema)
-          .option("maxFilesPerTrigger", "1").parquet(srcDir)
+        body: (DataFrame, Long) => Unit): Unit = {
+      val stream = spark.readStream
+        .schema(spark.read.parquet(srcDir).schema)
+        .option("maxFilesPerTrigger", "1").parquet(srcDir)
+      Streams.withStreamShards(spark, stream) {
+        val q = stream
           .writeStream.option("checkpointLocation", ckpt)
           .foreachBatch { (b: Dataset[Row], id: Long) => body(b.toDF(), id) }
           .start()
         q.processAllAvailable(); q.stop()
       }
+    }
     def killMatrix(name: String, src: DataFrame,
         rangeCols: Seq[org.apache.spark.sql.Column],
         body: (DataFrame, Long, String) => Unit,

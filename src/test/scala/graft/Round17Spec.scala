@@ -55,23 +55,66 @@ class Round17Spec extends SparkSpec {
     assert(LiveStore.storeShards(root.getPath) == 5)
   }
 
-  test("withStreamShards consumes the recorded source mass (one-shot)") {
-    import graft.streaming.Streams
+  test("withStreamShards sizes from the started frame's file-source mass") {
+    import graft.streaming.{Ev, Streams}
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import org.apache.spark.sql.functions.lit
+    import spark.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val key = "spark.sql.shuffle.partitions"
     val prev = spark.conf.get(key)
+    val root = java.nio.file.Files.createTempDirectory("graft_mass").toFile
     try {
       spark.conf.set(key, "32")
-      // a previous op's source left its mass behind: the FIRST scoped
-      // run sizes from it...
-      spark.conf.set("graft.stream.sourceRowsPerBatch", "1000001")
+      // a split dir of 3 files, 3,000,006 footer rows ⇒ 1,000,002
+      // rows/batch ⇒ 3 shards (a constant column keeps the files tiny)
+      val dir = s"$root/split"
+      spark.range(0L, 3000006L, 1L, Streams.sourceBatches)
+        .select(lit(0).as("x")).write.parquet(dir)
+      val big = splitFrame(dir)
       var seen = -1
-      Streams.withStreamShards(spark) { seen = spark.conf.get(key).toInt }
+      Streams.withStreamShards(spark, big) { seen = spark.conf.get(key).toInt }
       assert(seen == 3)
-      // ...and clears it, so an op built WITHOUT a recording source
-      // falls back to the flat default instead of inheriting stale
-      // mass (r14 verdict item 6)
-      Streams.withStreamShards(spark) { seen = spark.conf.get(key).toInt }
+      // row-scale state: the total mass is the state-key estimate
+      Streams.withStreamShards(spark, big, rowScaleState = true) {
+        seen = spark.conf.get(key).toInt
+      }
+      assert(seen == 32)
+      assert(spark.conf.get(key) == "32", "the session width must be restored")
+      // a frame with no file source has unknown mass: the flat default,
+      // never what the previous file-source run measured
+      val mem = MemoryStream[Ev].toDF()
+      assert(Streams.sourceRows(spark, mem).isEmpty)
+      Streams.withStreamShards(spark, mem) { seen = spark.conf.get(key).toInt }
       assert(seen == 8)
-    } finally spark.conf.set(key, prev)
+    } finally {
+      spark.conf.set(key, prev)
+      Streams.deleteRec(root)
+    }
+  }
+
+  private def splitFrame(dir: String) =
+    spark.readStream.schema(spark.read.parquet(dir).schema)
+      .option("maxFilesPerTrigger", "1").parquet(dir)
+
+  test("every split source's started frame carries its footer row mass") {
+    import graft.streaming.Streams
+    import graft.sources.Tables
+    // None here would silently fall back to the flat 8 shards
+    val maxOk = Tables.maxIdFromStats(spark, s"$sf/lineitem.parquet", "l_orderkey",
+      Tables.lineitem(spark, sf))
+    val docs = Streams.docSplitSource(spark, sf)
+    val idx = Streams.idxDeltaSplitSource(spark, sf)
+    val li = Streams.liDeltaSplitSource(spark, sf, maxOk * 4 / 5)
+    for ((name, dir, frame) <- Seq(
+        ("events", Streams.splitSource(spark, sf), Streams.eventStream(spark, sf).toDF()),
+        ("docs", docs, spark.readStream.schema(Tables.documents(spark, sf).schema)
+          .option("maxFilesPerTrigger", "1").parquet(docs)),
+        ("idx-delta", idx, splitFrame(idx)),
+        ("li-delta", li, splitFrame(li)))) {
+      val rows = spark.read.parquet(dir).count()
+      assert(rows > 0, name)
+      assert(Streams.sourceRows(spark, frame) == Some(rows), name)
+    }
   }
 }

@@ -89,9 +89,10 @@ class StreamRestartSpec extends SparkSpec {
     * state operator's custom-metric keys off the last stateful
     * progress event — the provider-engagement witness. */
   private def runOnce(srcDir: String, ckpt: String, sink: java.io.File,
-      transform: Dataset[Ev] => DataFrame): Set[String] =
-    Streams.withStreamShards(spark) {
-      val q = transform(evStream(srcDir)).writeStream
+      transform: Dataset[Ev] => DataFrame): Set[String] = {
+    val stream = transform(evStream(srcDir))
+    Streams.withStreamShards(spark, stream) {
+      val q = stream.writeStream
         .option("checkpointLocation", ckpt)
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
           batch.write.mode("overwrite").parquet(s"$sink/b_$id")
@@ -110,6 +111,7 @@ class StreamRestartSpec extends SparkSpec {
       q.stop()
       keys
     }
+  }
 
   private type Row = org.apache.spark.sql.Row
 
