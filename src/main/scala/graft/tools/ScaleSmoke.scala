@@ -196,16 +196,10 @@ object ScaleSmoke {
     val vol = new VolumeListener
     spark.sparkContext.addSparkListener(vol)
 
-    val golden: Map[String, (Int, Int, Int)] = {
-      val p = java.nio.file.Paths.get("tools/shuffle_golden.tsv")
-      if (java.nio.file.Files.exists(p))
-        scala.io.Source.fromFile(p.toFile).getLines().filter(_.nonEmpty).map {
-          l =>
-            val Array(n, s, r, b) = l.split('\t')
-            n -> ((s.toInt, r.toInt, b.toInt))
-        }.toMap
+    val golden: Map[String, graft.PlanCensus.Counts] =
+      if (java.nio.file.Files.exists(java.nio.file.Paths.get(graft.PlanCensus.goldenPath)))
+        graft.PlanCensus.readGolden()
       else Map.empty
-    }
 
     def mb(b: Long): Double = b / 1e6
 
@@ -273,11 +267,8 @@ object ScaleSmoke {
         if (n.startsWith("stream_")) "\"plan\":\"stream\""
         else "\"plan\":\"skipped_cold_only\""
       if (!n.startsWith("stream_") && !coldOnly) {
-        val plan = fn(spark, scaleDir).queryExecution.executedPlan.toString
-        val sh = Seq("Exchange hashpartitioning", "Exchange rangepartitioning",
-          "Exchange SinglePartition").map(p => p.r.findAllIn(plan).length).sum
-        val re = "ReusedExchange".r.findAllIn(plan).length
-        val bc = "BroadcastExchange".r.findAllIn(plan).length
+        val (sh, re, bc) = graft.PlanCensus.exchanges(
+          fn(spark, scaleDir).queryExecution.executedPlan.toString)
         val drift = golden.get(n) match {
           case Some(g) if g != ((sh, re, bc)) => s""","golden_drift":"${g} -> (${sh},${re},${bc})""""
           case Some(_) => ""","golden_drift":null"""

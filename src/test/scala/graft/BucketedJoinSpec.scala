@@ -20,10 +20,6 @@ class BucketedJoinSpec extends SparkSpec {
   private val liTable = s"graft_li_bucketed_$runTag"
   private val ordTable = s"graft_ord_bucketed_$runTag"
 
-  private def exchanges(plan: String): Int =
-    Seq("Exchange hashpartitioning", "Exchange rangepartitioning",
-      "Exchange SinglePartition").map(p => p.r.findAllIn(plan).length).sum
-
   test("C9: a bucketed-by-key join plans with zero exchanges (and no sort); plain parquet pays two") {
     val li = graft.sources.Tables.lineitem(spark, sf)
       .select(col("l_orderkey"), col("l_quantity"))
@@ -42,7 +38,7 @@ class BucketedJoinSpec extends SparkSpec {
           col("l_orderkey") === col("o_orderkey"))
       val plan = joined.queryExecution.executedPlan.toString
         .split("== Initial Plan ==")(0)
-      assert(exchanges(plan) == 0,
+      assert(PlanCensus.exchanges(plan)._1 == 0,
         s"bucketed join must be exchange-free:\n$plan")
       assert(!plan.contains("Exchange"),
         s"no exchange of any kind expected:\n$plan")
@@ -50,7 +46,7 @@ class BucketedJoinSpec extends SparkSpec {
       val plain = li.join(ord, col("l_orderkey") === col("o_orderkey"))
       val plainPlan = plain.queryExecution.executedPlan.toString
         .split("== Initial Plan ==")(0)
-      assert(exchanges(plainPlan) >= 2,
+      assert(PlanCensus.exchanges(plainPlan)._1 >= 2,
         s"control case should shuffle both sides:\n$plainPlan")
 
       // identical results (order-insensitive)
@@ -70,7 +66,7 @@ class BucketedJoinSpec extends SparkSpec {
         .groupBy("l_orderkey").agg(sum(col("l_quantity")).as("q"))
       val plan = agg.queryExecution.executedPlan.toString
         .split("== Initial Plan ==")(0)
-      assert(exchanges(plan) == 0,
+      assert(PlanCensus.exchanges(plan)._1 == 0,
         s"bucket-key aggregation must reuse the layout:\n$plan")
     }
     // drop the run's tables AND their managed locations so repeated
