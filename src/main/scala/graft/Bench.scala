@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 object Bench {
   /** Parse a committed driver BENCH_r*.json artifact into
     * (control_sec, sf, queries-in-seconds). The driver artifact wraps
@@ -45,17 +43,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    sys.env.get("GRAFT_STATESTORE")
-      .foreach(v => spark.conf.set("graft.stream.stateStore", v))
+    val spark = GraftSession()
     // Warm up the JVM/codegen/FS paths so the first timed query isn't
     // charged for session start (~3 s otherwise), then PRE-BUILD every
     // persisted index (ANN buckets/cells/codes, the dedup band index,
@@ -78,7 +66,7 @@ object Bench {
     // durationMs breakdown so BENCH readers can split a stream op's
     // wall-time into floor (queryPlanning + walCommit/commitOffsets,
     // fixed per batch) vs real work (addBatch = scan+shuffle+state+
-    // sink) without re-running StreamProfile. onQueryStarted is
+    // sink) without re-running tools.Profile. onQueryStarted is
     // documented synchronous with DataStreamWriter.start(), so the
     // runId→op map taken there is exact even though progress events
     // arrive on the async listener bus.

@@ -133,8 +133,6 @@ object GraftExtensions {
   def register(spark: SparkSession): Unit = {
     all.foreach(f =>
       spark.sessionState.functionRegistry.registerFunction(f._1, f._2, f._3))
-    if (!spark.experimental.extraStrategies.contains(TopKStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKStrategy
+    TopKStrategy.install(spark)
   }
 }

@@ -18,6 +18,11 @@ object PlanCensus {
 
   val goldenPath = "tools/shuffle_golden.tsv"
 
+  /** Session width (`local[cores]`, `cores` shuffle partitions) the
+    * golden counts are pinned at: the test session and `tools.PlanDump`
+    * both build their session with it, so their plans are the same. */
+  val cores = 4
+
   /** stream_* entries run whole Structured-Streaming queries inside fn —
     * every other registered op is planned. */
   def planned(name: String): Boolean = !name.startsWith("stream_")

@@ -1,25 +1,16 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // GRAFT_STATESTORE=rocksdb reruns the whole gate with stateful
-    // streams on the RocksDB provider (the scale posture) — results
-    // must be provider-invisible, and this env is how that is proven
-    // against the full DuckDB oracle set rather than spec samples.
-    sys.env.get("GRAFT_STATESTORE")
-      .foreach(v => spark.conf.set("graft.stream.stateStore", v))
+    // GRAFT_STATESTORE=rocksdb (applied by GraftSession) reruns the
+    // whole gate with stateful streams on the RocksDB provider (the
+    // scale posture) — results must be provider-invisible, and this env
+    // is how that is proven against the full DuckDB oracle set rather
+    // than spec samples.
+    val spark = GraftSession()
     new java.io.File(outDir).mkdirs()
     // A query that throws must be LOUD: r6's testdata schema drift broke
     // 14 queries and the only symptom was a missing row in the driver's

@@ -1239,16 +1239,13 @@ object Dedup extends OpFamily {
   }
 
   /** Join-strategy gate for attaching the corpus-scaled gate index to
-    * the bloom-positive sliver: the per-task hash relation must stay
-    * inside the execution-memory slice (the stripAttachHint law — ~48
-    * bytes per (h, dup_of) row, ≤ 32 MB/task ⇒ shuffle_hash, else
-    * sort-merge; rows from parquet footers, zero scan). */
-  private[graft] def bloomGateAttachHint(s: SparkSession, d: String): String = {
-    val rows = Tables.rowCountFromStats(s, bloomGateIndexPath(s, d))
-      .getOrElse(Long.MaxValue)
-    val perTask = rows * 48L / math.max(1, s.sessionState.conf.numShufflePartitions)
-    if (perTask <= (32L << 20)) "shuffle_hash" else "merge"
-  }
+    * the bloom-positive sliver: `Pipeline.hashBuildHint` over ~48 bytes
+    * per (h, dup_of) row, rows from parquet footers (zero scan); an
+    * index without footers counts as unbounded, so it sort-merges. */
+  private[graft] def bloomGateAttachHint(s: SparkSession, d: String): String =
+    Pipeline.hashBuildHint(
+      Tables.rowCountFromStats(s, bloomGateIndexPath(s, d)).fold(Long.MaxValue)(_ * 48L),
+      s.sessionState.conf.numShufflePartitions)
 
   private def dedupBloomGate(s: SparkSession, d: String): DataFrame = {
     val t = incThreshold(s, d)

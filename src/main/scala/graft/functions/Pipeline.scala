@@ -1366,22 +1366,26 @@ object Pipeline extends OpFamily {
     else if (nDupDocs * 24L <= stripBroadcastBudgetBytes) 1
     else 2
 
+  /** The hash-build gate: a `shuffle_hash` hint on a profile-sized
+    * build side is licensed only while its estimated bytes, spread
+    * over the shuffle width, stay ≤ 32 MB per task — an order of
+    * magnitude inside the per-task execution-memory slice at full
+    * occupancy; beyond that the join must sort-merge. */
+  private[graft] def hashBuildHint(buildBytes: Long, shufflePartitions: Int): String =
+    if (buildBytes / math.max(1, shufflePartitions) <= (32L << 20)) "shuffle_hash"
+    else "merge"
+
   /** Join strategy for the drop-list attach in tiers (b)/(c): the
-    * shuffle_hash hint is licensed by the SAME byte estimate the
-    * broadcast gate uses, spread over the shuffle width — a
-    * corpus-scaled drop set blows the per-task hash relation under
-    * full core occupancy (the CLAUDE.md shuffle_hash rule, MEASURED
-    * on the adversarial probe: 4 M drop lists × 112 positions
+    * hash-build gate over the SAME byte estimate the broadcast gate
+    * uses — a corpus-scaled drop set blows the per-task hash relation
+    * under full core occupancy (MEASURED on the adversarial probe,
+    * scale/strip_adversarial_r16.json: 4 M drop lists × 112 positions
     * ≈ 3.7 GB build ⇒ ~116 MB/task ⇒ "Can't acquire 134217728 bytes"
     * hash-relation abort at 5 M docs) and must sort-merge instead.
-    * 32 MB/task keeps the hash build an order of magnitude inside
-    * the per-task execution-memory slice at full occupancy. Pure so
-    * Round16Spec pins the law beside stripTier's. */
+    * Pure so Round16Spec pins the law beside stripTier's. */
   private[graft] def stripAttachHint(
-      nDupDocs: Long, nPos: Long, shufflePartitions: Int): String = {
-    val perTask = (nPos * 8L + nDupDocs * 32L) / math.max(1, shufflePartitions)
-    if (perTask <= (32L << 20)) "shuffle_hash" else "merge"
-  }
+      nDupDocs: Long, nPos: Long, shufflePartitions: Int): String =
+    hashBuildHint(nPos * 8L + nDupDocs * 32L, shufflePartitions)
 
   private def stripBase(s: SparkSession, d: String): DataFrame = {
     val dropPath = s"${Tables.workDir(s)}/strip_drop_" + Tables.datasetTag(d)

@@ -1499,8 +1499,9 @@ object Similarity extends OpFamily {
   /** Projected corpus at an arbitrary INPUT dimension — the registered
     * op always runs at rpInDims (=64, the testdata width; the static
     * oracle SQL bakes the same matrix), while the high-dimension probe
-    * (tools/TwoTierHdProbe, r13 verdict item 2) drives the SAME code
-    * at 256-d, where the exact dot actually dominates per-pair cost.
+    * (scale/sf100_twotier_hd256_r16.json, on the ScaleSmoke.ensureHd
+    * fixture) drives the SAME code at 256-d, where the exact dot
+    * actually dominates per-pair cost.
     * rpSign extends to any (i, j) by construction. */
   private def projectedCorpus(s: SparkSession, d: String,
       inDims: Int = rpInDims): DataFrame = {

@@ -763,9 +763,10 @@ object Relational extends OpFamily {
   // partkey (or suppkey) point predicate in ~√256·skew files vs the
   // row-order layout's "every file matches".
   /** lineitem with its R29 z-file assignment attached — shared by the
-    * planner view below and the PHYSICAL writer (ZorderWriteProbe /
-    * Round14Spec), which materializes the assignment as real files
-    * and measures footer-stats pruning on them. */
+    * planner view below and the PHYSICAL writer
+    * (ScaleSmoke.zorderWriteProbe, scale/sf10_zorder_write_r14.json),
+    * which materializes the assignment as real files and measures
+    * footer-stats pruning on them. */
   private[graft] def withZfile(s: SparkSession, d: String): DataFrame = {
     val li = Tables.lineitem(s, d)
     val maxP = Tables.maxIdFromStats(s, s"$d/lineitem.parquet", "l_partkey", li)

@@ -41,6 +41,11 @@ object TopKStrategy extends SparkStrategy {
       TopKPerKeyExec(k, key, score, tie, distKeys, planLater(child)) :: Nil
     case _ => Nil
   }
+
+  /** Adds the strategy to the session's extra strategies, once. */
+  def install(spark: SparkSession): Unit =
+    if (!spark.experimental.extraStrategies.contains(this))
+      spark.experimental.extraStrategies = spark.experimental.extraStrategies :+ this
 }
 
 final case class TopKPerKeyExec(
@@ -176,8 +181,7 @@ object TopK {
   def topKPerKeyLocal(df: DataFrame, k: Int, key: String,
       scoreDesc: String, tieAsc: String): DataFrame = {
     val spark = df.sparkSession
-    if (!spark.experimental.extraStrategies.contains(TopKStrategy))
-      spark.experimental.extraStrategies = spark.experimental.extraStrategies :+ TopKStrategy
+    TopKStrategy.install(spark)
     val analyzed = df.queryExecution.analyzed
     def resolve(name: String): Expression =
       analyzed.output.find(_.name == name)
@@ -190,8 +194,7 @@ object TopK {
   def topKPerKeyIn(df: DataFrame, k: Int, key: String, scoreDesc: String,
       tieAsc: String, distKeys: String*): DataFrame = {
     val spark = df.sparkSession
-    if (!spark.experimental.extraStrategies.contains(TopKStrategy))
-      spark.experimental.extraStrategies = spark.experimental.extraStrategies :+ TopKStrategy
+    TopKStrategy.install(spark)
     val analyzed = df.queryExecution.analyzed
     def resolve(name: String): Expression =
       analyzed.output.find(_.name == name)

@@ -1196,9 +1196,10 @@ object Streams extends OpFamily {
     * rerun must not see a previous run's appends.
     *
     * `base` is the PRE-READ base DataFrame, constructed once per
-    * invocation outside the foreachBatch loop: AdmitProbe (round 11)
-    * attributed ~0.5 s/batch of driver-side gap between jobs, part of
-    * which was re-listing + footer-schema-inferring the immutable base
+    * invocation outside the foreachBatch loop: the round-11 stream_admit
+    * attribution (SCALE.md "stream_admit per-batch cost, attributed")
+    * found ~0.5 s/batch of driver-side gap between jobs, part of which
+    * was re-listing + footer-schema-inferring the immutable base
     * parquet on EVERY batch — a per-batch re-plan of per-run capital.
     * Only the growth root (which genuinely changes between batches) is
     * re-listed per batch. */

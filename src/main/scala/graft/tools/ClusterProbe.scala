@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Multi-JVM evidence runner: times named operators and prints an
@@ -19,31 +18,17 @@ import org.apache.spark.sql.functions._
   * harmless.
   *
   * Usage: ClusterProbe <sfDir> <outJson> <query>[,query...]
-  * env: GRAFT_MASTER (default local[32]), GRAFT_RELIABLE=true to route
-  * lineage cuts through the filesystem (required for executor-loss
-  * survival), GRAFT_SHUFFLE (default 32).
+  * env (read by [[graft.GraftSession]]): GRAFT_MASTER (default
+  * local[SPARK_GRAFT_CPUS]), SPARK_GRAFT_CPUS (the shuffle width; default
+  * the host's cores), GRAFT_RELIABLE=true to route lineage cuts through
+  * the filesystem (required for executor-loss survival), and
+  * GRAFT_SHARED_TMP=true on a single-host cluster whose workers share
+  * the driver's /tmp.
   */
 object ClusterProbe {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outJson, queryList) = args.take(3)
-    val shuffle = sys.env.getOrElse("GRAFT_SHUFFLE", "32")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("GRAFT_MASTER", "local[32]"))
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    if (sys.env.get("GRAFT_RELIABLE").contains("true")) {
-      spark.conf.set("graft.checkpoint.reliable", "true")
-      // the sandbox standalone cluster is single-HOST (workers share
-      // the driver's filesystem), so its /tmp workDir really is shared
-      // — on a genuine multi-host cluster set graft.workdir to a
-      // shared scheme instead (stableCheckpoint fails fast otherwise)
-      if (sys.env.get("GRAFT_SHARED_TMP").contains("true"))
-        spark.conf.set("graft.workdir.assumeShared", "true")
-    }
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
 
     val rows = queryList.split(',').map(_.trim).filter(_.nonEmpty).map { name =>
       val t0 = System.nanoTime()

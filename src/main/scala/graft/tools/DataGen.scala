@@ -54,16 +54,10 @@ object DataGen {
   def main(args: Array[String]): Unit = {
     val outDir = args.headOption.getOrElse("/tmp/graft_scale/sf10")
     val sf = if (args.length > 1) args(1).toDouble else 10.0
-    val cpus = if (args.length > 2) args(2) else "32"
     val only: Set[String] =
       if (args.length > 3) args(3).split(',').map(_.trim).toSet else Set.empty
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession(
+      if (args.length > 2) args(2).toInt else graft.GraftSession.defaultCores)
     generate(spark, outDir, sf, only)
     spark.stop()
   }

@@ -1,0 +1,63 @@
+package graft.tools
+
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.streaming.StreamingQueryListener
+import org.apache.spark.sql.streaming.StreamingQueryListener._
+
+/** Times ops back to back in ONE [[graft.GraftSession]], the bench's
+  * execution shape: each op runs `reps` times, in the order listed,
+  * with the cache cleared before every call (as Bench clears it
+  * between groups). Each call prints its wall time, row count and
+  * Spark job count; the job count is deterministic where wall time on
+  * a shared host swings 2-4×, so it is the mechanism signal for "fewer
+  * jobs" changes. Stream ops also print each micro-batch's `durationMs`
+  * breakdown (triggerExecution = total; queryPlanning / getBatch /
+  * addBatch / walCommit / commitOffsets split it) and state-shard
+  * counts. An op is any registered name or a `ScaleSmoke.extraQueries`
+  * variant.
+  *
+  * Usage: runMain graft.tools.Profile <sfDir> <reps> <op>...
+  */
+object Profile {
+  def main(args: Array[String]): Unit = {
+    val sfDir = args(0)
+    val reps = args(1).toInt
+    val ops = args.drop(2).toSeq
+    def lookup(op: String) =
+      ScaleSmoke.extraQueries.get(op).orElse(graft.SparkEntry.queries.get(op))
+    val unknown = ops.filter(lookup(_).isEmpty)
+    require(unknown.isEmpty, s"unknown op(s): ${unknown.mkString(", ")}")
+    val spark = graft.GraftSession()
+    spark.streams.addListener(new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit = {
+        val p = e.progress
+        val shards = p.stateOperators.map(_.numShufflePartitions).mkString(",")
+        println(s"[profile]   batch=${p.batchId} rows=${p.numInputRows} " +
+          s"stateShards=[$shards] " +
+          s"durations=${new java.util.TreeMap[String, java.lang.Long](p.durationMs)}")
+      }
+    })
+    val jobs = new AtomicInteger(0)
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    })
+    // session + FS warm-up, so the first call is not charged for them
+    graft.sources.Tables.lineitem(spark, sfDir).count()
+    def drain(): Unit =
+      org.apache.spark.graftbridge.ListenerBridge.waitUntilEmpty(spark.sparkContext, 30000L)
+    drain(); jobs.set(0)
+    for (op <- ops; rep <- 1 to reps) {
+      spark.sharedState.cacheManager.clearCache()
+      val t0 = System.nanoTime()
+      val n = lookup(op).get(spark, sfDir).count()
+      val secs = (System.nanoTime() - t0) / 1e9
+      // the call's job and batch events are on the async listener bus
+      drain()
+      println(f"[profile] $op rep$rep: $secs%.2f s rows=$n jobs=${jobs.getAndSet(0)}")
+    }
+    spark.stop()
+  }
+}

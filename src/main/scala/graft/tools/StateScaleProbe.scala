@@ -93,17 +93,8 @@ object StateScaleProbe {
     val sfDir = args.headOption.getOrElse("/tmp/graft_scale/sf10")
     val outJson =
       if (args.length > 1) args(1) else "/tmp/state_scale.json"
-    val cpus = if (args.length > 2) args(2) else "32"
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("GRAFT_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    sys.env.get("GRAFT_STATESTORE")
-      .foreach(v => spark.conf.set("graft.stream.stateStore", v))
+    val spark = graft.GraftSession(
+      if (args.length > 2) args(2).toInt else graft.GraftSession.defaultCores)
     val provider = spark.conf.getOption("graft.stream.stateStore")
       .getOrElse("heap")
 

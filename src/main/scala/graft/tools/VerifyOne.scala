@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Subset correctness dump for fast iteration:
@@ -12,14 +11,7 @@ object VerifyOne {
     val sfDir = args(0)
     val outDir = args(1)
     val names = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
     new java.io.File(outDir).mkdirs()
     graft.SparkEntry.queries.filter(q => names.contains(q._1)).foreach {
       case (name, fn) =>

@@ -36,6 +36,9 @@ class ExtensionsSpec extends SparkSpec {
   test("register injects the sort-free top-k strategy") {
     GraftExtensions.register(spark)
     assert(spark.experimental.extraStrategies.contains(graft.plans.TopKStrategy))
+    // idempotent: a second register leaves exactly one copy
+    GraftExtensions.register(spark)
+    assert(spark.experimental.extraStrategies.count(_ == graft.plans.TopKStrategy) == 1)
   }
 
   test("graft_lsh_bucket accepts (planes, band) literals from SQL") {

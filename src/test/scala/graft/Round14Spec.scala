@@ -139,8 +139,8 @@ class Round14Spec extends SparkSpec {
   // ---- R29 physical z-order write (r11 verdict item 3) ----
 
   test("written z-order layout prunes BOTH point predicates' real I/O; append order prunes neither") {
-    val cells = graft.tools.ZorderWriteProbe
-      .probe(spark, sf, "/tmp/graft_zorder_spec")
+    val cells = graft.tools.ScaleSmoke
+      .zorderWriteProbe(spark, sf, "/tmp/graft_zorder_spec")
       .map(c => (c.layout, c.pred) -> c).toMap
     for (pred <- Seq("l_partkey", "l_suppkey")) {
       val z = cells(("zorder", pred))

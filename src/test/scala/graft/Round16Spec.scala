@@ -146,7 +146,7 @@ class Round16Spec extends SparkSpec {
 
   test("HD sign-block expansion preserves quantized cosine EXACTLY: brute top-k bit-identical at 4x dims") {
     import graft.functions.Similarity
-    val hdDir = graft.tools.TwoTierHdProbe.ensureHd(spark, sf, 4)
+    val hdDir = graft.tools.ScaleSmoke.ensureHd(spark, sf, 4)
     // the fixture's whole license: sign flips commute with quantize,
     // the x4 dot/norm scaling cancels in IEEE (powers of two), so the
     // 256-d brute truth IS the 64-d brute truth — cos_sim doubles and
