@@ -105,7 +105,7 @@ object Bench {
     def controlOnce(): Double = {
       spark.sharedState.cacheManager.clearCache()
       val t0 = System.nanoTime()
-      spark.read.parquet(s"$sfDir/lineitem.parquet")
+      graft.sources.Tables.read(spark, s"$sfDir/lineitem.parquet")
         .select("l_orderkey", "l_partkey", "l_extendedprice")
         .groupBy((col("l_orderkey") % 1024).as("g"))
         // decimal(38,0) sum — raw int64 hash sums overflow under ANSI

@@ -11,17 +11,36 @@ object Verify {
     // is how that is proven against the full DuckDB oracle set rather
     // than spec samples.
     val spark = GraftSession()
+    val errors = dump(spark, sfDir, outDir, _ => true)
+    spark.stop()
+    if (errors.nonEmpty) {
+      System.err.println(
+        s"[verify] ${errors.size} of ${SparkEntry.queries.size} queries FAILED: " +
+          errors.keys.mkString(", "))
+      sys.exit(1)
+    }
+  }
+
+  /** Dumps every query `only` admits to `outDir/<name>` (one parquet
+    * file each), then the full oracle_sql.json and errors.json; returns
+    * the failures by name. [[graft.tools.VerifyOne]] calls this with a
+    * name subset.
+    *
+    * A query that throws must be LOUD: r6's testdata schema drift broke
+    * 14 queries and the only symptom was a missing row in the driver's
+    * correctness JSON. Failures land by name in the errors manifest
+    * next to the dumps (and on stderr) so a broken query is
+    * indistinguishable from nothing — never from a pass. */
+  def dump(spark: org.apache.spark.sql.SparkSession, sfDir: String, outDir: String,
+      only: String => Boolean): collection.Map[String, String] = {
     new java.io.File(outDir).mkdirs()
-    // A query that throws must be LOUD: r6's testdata schema drift broke
-    // 14 queries and the only symptom was a missing row in the driver's
-    // correctness JSON. Failures now land by name in an errors manifest
-    // next to the dumps (and on stderr) so a broken query is
-    // indistinguishable from nothing — never from a pass.
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    SparkEntry.queries.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+    SparkEntry.queries.filter(q => only(q._1)).foreach { case (name, fn) =>
+      val t0 = System.nanoTime()
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+        println(f"[verify] $name ${(System.nanoTime() - t0) / 1e9}%.2f s")
+      } catch { case e: Throwable =>
         errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
         System.err.println(s"[verify] FAILED $name: ${errors(name)}")
       }
@@ -38,18 +57,11 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    val errJson = errors
-      .map { case (k, v) => s"${q(k)}: ${q(v.take(500))}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/errors.json"), errJson)
-    spark.stop()
-    if (errors.nonEmpty) {
-      System.err.println(
-        s"[verify] ${errors.size} of ${SparkEntry.queries.size} queries FAILED: " +
-          errors.keys.mkString(", "))
-      sys.exit(1)
-    }
+    def obj(kv: Iterable[(String, String)]) =
+      kv.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), obj(SparkEntry.oracleSql))
+    Files.writeString(Paths.get(s"$outDir/errors.json"),
+      obj(errors.map { case (k, v) => k -> v.take(500) }))
+    errors
   }
 }

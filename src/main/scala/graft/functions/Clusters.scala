@@ -149,7 +149,7 @@ object Clusters extends OpFamily {
           SimHash.simhashPairsRaw(s, d).select("doc_a", "doc_b"), "doc_a", "doc_b"))
       components(edges).withColumnRenamed("node", "doc_id")
     }
-    s.read.parquet(path)
+    Tables.read(s, path)
   }
 
   // dedup_clusters: components over the D2 (MinHash-LSH) ∪ D4 (SimHash)
@@ -255,7 +255,7 @@ object Clusters extends OpFamily {
         .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b"))
       components(edges).withColumnRenamed("node", "vec_id")
     }
-    s.read.parquet(path)
+    Tables.read(s, path)
   }
 
   private def dedupSemantic(s: SparkSession, d: String): DataFrame = {

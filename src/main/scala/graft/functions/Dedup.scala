@@ -253,7 +253,7 @@ object Dedup extends OpFamily {
     val path = s"${Tables.workDir(s)}/pair_overlap_" +
       Tables.datasetTag(d)
     Tables.buildOnce(path)(pairOverlapBuild(s, d))
-    s.read.parquet(path)
+    Tables.read(s, path)
   }
 
   private def pairOverlapBuild(s: SparkSession, d: String): DataFrame = {
@@ -367,7 +367,7 @@ object Dedup extends OpFamily {
       Tables.datasetTag(d)
     Tables.buildOnce(path)(
       bandsOfDocs(docs.filter(col("doc_id") <= t), nBands, nHashes / nBands))
-    val oldIdx = s.read.parquet(path)
+    val oldIdx = Tables.read(s, path)
     val newBands = bandsOfDocs(docs.filter(col("doc_id") > t),
       nBands, nHashes / nBands).cache()
     // new side is the (small) build side of a shuffle-hash join — the
@@ -530,7 +530,7 @@ object Dedup extends OpFamily {
           .agg(max(col("ma")).as("m"))
           .select(lit(-1).as("band"), col("m")))
     }
-    s.read.parquet(path).collect()
+    Tables.read(s, path).collect()
       .filter(!_.isNullAt(1))
       .map(r => r.getInt(0) -> r.getLong(1)).toMap
   }
@@ -857,7 +857,7 @@ object Dedup extends OpFamily {
     val path = s"${Tables.workDir(s)}/exact_truth_$suffix" +
       Tables.datasetTag(d)
     Tables.buildOnce(path)(exactJoinTruthBuild(s, d, rateE6))
-    s.read.parquet(path)
+    Tables.read(s, path)
   }
 
   // SCALE finding 13: the exact J ≥ 0.5 truth TABLE is output-quadratic
@@ -1235,7 +1235,7 @@ object Dedup extends OpFamily {
     val path = bloomGateIndexPath(s, d)
     Tables.buildOnce(path)(
       bloomGateBase(s, d).groupBy("h").agg(min(col("doc_id")).as("dup_of")))
-    s.read.parquet(path)
+    Tables.read(s, path)
   }
 
   /** Join-strategy gate for attaching the corpus-scaled gate index to
@@ -1303,7 +1303,7 @@ object Dedup extends OpFamily {
     Tables.buildOnce(path)(
       Tables.documents(s, d).filter(col("doc_id") % 10 =!= 7)
         .select(md5(col("text")).as("h"), col("doc_id")))
-    s.read.parquet(path)
+    Tables.read(s, path)
   }
 
   /** The P22 recrawl delta as INDEX-MAINTENANCE actions: one `retire`

@@ -39,7 +39,7 @@ object Pipeline extends OpFamily {
   private def contamination(s: SparkSession, d: String): DataFrame = {
     val path = s"${Tables.workDir(s)}/contam_${Tables.datasetTag(d)}"
     Tables.buildOnce(path)(contaminationBuild(s, d))
-    s.read.parquet(path)
+    Tables.read(s, path)
   }
 
   private def contaminationBuild(s: SparkSession, d: String): DataFrame = {
@@ -1101,7 +1101,7 @@ object Pipeline extends OpFamily {
       .toSeq
     import s.implicits._
     val files = broadcast(perSource.toDF("source", "n_files"))
-    s.read.parquet(outDir)
+    Tables.read(s, outDir)
       .withColumn("env", concat_ws("|", col("doc_id"), col("lang"),
         col("source"), col("n_chars"), col("text")))
       .groupBy("source")
@@ -1402,7 +1402,7 @@ object Pipeline extends OpFamily {
           sequence(col("start_tok"), col("start_tok") + col("n_tok") - 1)))))
           .as("drop_pos"))
     }
-    val droppedP = s.read.parquet(dropPath)
+    val droppedP = Tables.read(s, dropPath)
     val prof = droppedP.agg(count(lit(1)).as("n_docs"),
       coalesce(sum(size(col("drop_pos")).cast("long")), lit(0L)).as("n_pos"))
       .head()

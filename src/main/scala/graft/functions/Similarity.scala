@@ -74,7 +74,7 @@ object Similarity extends OpFamily {
     Tables.buildOnce(path)(
       df.select(array_max(transform(col("v"), x => abs(x))).as("ma"))
         .agg(max(col("ma")).as("m")))
-    val r = s.read.parquet(path).head()
+    val r = Tables.read(s, path).head()
     !r.isNullAt(0) && r.getLong(0) <= 32767L
   }
 
@@ -200,7 +200,7 @@ object Similarity extends OpFamily {
     val path = s"${Tables.workDir(s)}/${name}_" +
       Tables.datasetTag(d)
     Tables.buildOnce(path, parts)(build)
-    s.read.parquet(path)
+    Tables.read(s, path)
   }
 
   /** S1's brute-force ranking, persisted once per (session, dataset) —

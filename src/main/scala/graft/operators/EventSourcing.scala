@@ -302,7 +302,7 @@ object EventSourcing extends OpFamily {
       .filter(col("topic").isNotNull)
     val dir = s"${Tables.workDir(s)}/outbox_routed"
     env.write.mode("overwrite").partitionBy("topic").parquet(dir)
-    s.read.parquet(dir)
+    Tables.read(s, dir)
       .groupBy("topic")
       .agg(count(lit(1)).as("n_events"),
         min(col("event_id")).as("first_id"),
@@ -375,7 +375,7 @@ object EventSourcing extends OpFamily {
     latestState(s, d)
       .withColumn("shard", pmod(col("user_id"), lit(nShards)))
       .write.mode("overwrite").partitionBy("shard").parquet(snapDir)
-    s.read.parquet(snapDir)
+    Tables.read(s, snapDir)
       .filter(col("shard") === lit(lookupKey % nShards) &&
         col("user_id") === lit(lookupKey))
       .select("user_id", "last_ts_s", "last_type", "last_value", "n_events")
@@ -408,7 +408,7 @@ object EventSourcing extends OpFamily {
       .write.mode("overwrite").parquet(snapDir)
     // …recovery folds ONLY the delta and merges (monoid append)
     val delta = partialFold(Tables.events(s, d).filter(col("ts") >= cut))
-    s.read.parquet(snapDir).union(delta)
+    Tables.read(s, snapDir).union(delta)
       .groupBy("user_id")
       .agg(
         sum(col("balance_c")).as("balance_c"),
@@ -631,7 +631,7 @@ object EventSourcing extends OpFamily {
         .filter(pmod(col("user_id"), lit(37L)) === 3) // the flagged keys
         .coalesce(1)
     }
-    s.read.parquet(path)
+    Tables.read(s, path)
   }
 
   private val erasureSql =

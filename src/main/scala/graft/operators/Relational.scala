@@ -376,7 +376,7 @@ object Relational extends OpFamily {
       ord.filter(col("o_orderkey") <= t)))
     val delta = viewAgg(li.filter(col("l_orderkey") > t),
       ord.filter(col("o_orderkey") > t))
-    s.read.parquet(path).unionByName(delta)
+    Tables.read(s, path).unionByName(delta)
       .groupBy("month", "l_returnflag")
       .agg(sum(col("sum_price_c")).as("sum_price_c"), sum(col("n")).as("n"))
   }
@@ -945,7 +945,7 @@ object Relational extends OpFamily {
     Tables.buildOnce(gridPath)(
       statsStrGrid(df.filter(col(splitCol) <= t), strCols))
     val delta = df.filter(col(splitCol) > t)
-    val numeric = s.read.parquet(numPath)
+    val numeric = Tables.read(s, numPath)
       .unionByName(statsNumPartials(delta, numCols))
       .groupBy("column_name")
       .agg(sum(col("n_rows")).as("n_rows"), sum(col("n_null")).as("n_null"),
@@ -956,7 +956,7 @@ object Relational extends OpFamily {
         col("min_l").cast("string").as("min_s"),
         col("max_l").cast("string").as("max_s"),
         col("est").as("ndv_est"))
-    val string = s.read.parquet(gridPath)
+    val string = Tables.read(s, gridPath)
       .unionByName(statsStrGrid(delta, strCols))
       .groupBy("column_name", "value").agg(sum(col("cnt")).as("cnt"))
       .groupBy("column_name")

@@ -4,11 +4,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.Column
 
-/** Schema-checked loaders for the driver-generated test tables.
+/** Schema-checked loaders for the driver-generated test tables, and
+  * graft's one parquet reader, [[read]].
   *
-  * Every operator in graft reads through here so column pruning and
-  * filter pushdown land on the parquet scan (verify with
-  * `.explain("formatted")` → `ReadSchema` / `PushedFilters`).
+  * Every parquet read in graft goes through [[read]]: it takes the
+  * schema from ONE footer read on the driver, so building the frame
+  * launches no Spark job (Spark's own inference runs one per read).
+  * Column pruning and filter pushdown still land on the parquet scan
+  * (verify with `.explain("formatted")` → `ReadSchema` /
+  * `PushedFilters`).
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -16,7 +20,52 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    read(spark, s"$sfDir/$name.parquet")
+
+  /** The one parquet reader: Spark's plain parquet read of `paths`
+    * without its schema-inference job. Spark's
+    * `ParquetUtils.inferSchema` reads footers in a distributed job,
+    * even for one file with `mergeSchema` off. This reads the footer
+    * Spark would pick on the driver instead: `_common_metadata`, else
+    * `_metadata`, else the first data file of ALL `paths` sorted by
+    * full path (Spark's `splitFiles` order), so a table whose files
+    * disagree keeps the schema it reads with today. The footer is
+    * converted with the converter flags of Spark's
+    * `mergeSchemasInParallel`, taken from the session conf at call
+    * time (`nanosAsLong`, NTZ inference). Partition columns
+    * (LiveStore's `shard=`) are still discovered and appended by
+    * Spark. With no data file at all, or with schema merging on, the
+    * plain read runs, so its errors and merged schemas are Spark's
+    * own. No cache: a footer is bounded metadata, and a rewritten
+    * directory is read afresh. */
+  def read(s: SparkSession, paths: String*): DataFrame = {
+    import org.apache.hadoop.fs.Path
+    import org.apache.spark.sql.execution.datasources.parquet._
+    val c = s.sessionState.conf
+    val leaves =
+      if (c.isParquetSchemaMergingEnabled) Nil
+      else paths.flatMap(leafFiles(s, _, sparkListed)).map(_._1).sorted
+    def named(n: String) = leaves.find(new Path(_).getName == n)
+    named(commonMetadata).orElse(named(metadata))
+      .orElse(leaves.find(f => !summaryNames(new Path(f).getName))) match {
+      case None => s.read.parquet(paths: _*)
+      case Some(f) =>
+        val p = new Path(f)
+        val footer = ParquetFooterReader.readFooter(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            p, s.sessionState.newHadoopConf()),
+          org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS)
+        val converter = new ParquetToSparkSchemaConverter(
+          assumeBinaryIsString = c.isParquetBinaryAsString,
+          assumeInt96IsTimestamp = c.isParquetINT96AsTimestamp,
+          inferTimestampNTZ = c.parquetInferTimestampNTZEnabled,
+          nanosAsLong = c.legacyParquetNanosAsLong,
+          respectUnknownTypeAnnotation = c.parquetReaderRespectUnknownTypeAnnotation)
+        s.read.schema(ParquetFileFormat.readSchemaFromFooter(
+          new org.apache.parquet.hadoop.Footer(p, footer), converter))
+          .parquet(paths: _*)
+    }
+  }
 
   def region(s: SparkSession, d: String): DataFrame = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = load(s, d, "nation")
@@ -148,7 +197,7 @@ object Tables {
             "set graft.workdir.assumeShared=true if the file: path IS a shared mount.")
       val path = s"$wd/ckpt_${ckptSeq.incrementAndGet()}"
       df.write.mode("overwrite").parquet(path)
-      s.read.parquet(path)
+      read(s, path)
     } else df.localCheckpoint(eager)
   }
 
@@ -210,6 +259,66 @@ object Tables {
     md.take(8).map(b => f"$b%02x").mkString
   }
 
+  /** Recursive data-file listing: (path, bytes) of every file under
+    * `dir`, hidden (`_`/`.`-prefixed) names excluded. Directories are
+    * walked as Spark's file index walks them ([[leafFiles]]). */
+  def listDataFiles(s: SparkSession, dir: String): Seq[(String, Long)] =
+    leafFiles(s, dir, n => !n.startsWith("_") && !n.startsWith("."))
+
+  private val commonMetadata = "_common_metadata"
+  private val metadata = "_metadata"
+  private val summaryNames = Set(commonMetadata, metadata)
+
+  /** The names Spark's file index lists and descends into
+    * (`HadoopFSUtils.shouldFilterOutPathName`): hidden names are
+    * dropped, except `k=v` partition dirs and the parquet summary
+    * files, which schema inference prefers. */
+  private def sparkListed(n: String): Boolean =
+    !((n.startsWith("_") && !n.contains("=")) || n.startsWith(".") ||
+      n.endsWith("._COPYING_")) ||
+      n.startsWith(commonMetadata) || n.startsWith(metadata)
+
+  /** (path, bytes) of the files under `dir` whose names pass `keep`,
+    * descending only into the directories Spark's file index descends
+    * into ([[sparkListed]]), so an in-flight `_temporary` or
+    * `_staging_` dir is never table data. A single-FILE path lists
+    * itself. LOCAL paths walk java.io directly: Hadoop's
+    * LocalFileSystem is a ChecksumFileSystem whose recursive
+    * `listFiles` pays a per-located-status penalty that this host's
+    * FS turns into 10-20 ms PER FILE — measured 4.4-6.8 s to list the
+    * 320-file compaction store vs 6 ms for the plain walk, which made
+    * the FS census the DOMINANT term of corpus_compaction_exec's warm
+    * rep. Non-local schemes keep the Hadoop listing (with the
+    * session's conf). Unlistable/missing paths return Nil. */
+  private def leafFiles(s: SparkSession, dir: String,
+      keep: String => Boolean): Seq[(String, Long)] = {
+    val scheme = new org.apache.hadoop.fs.Path(dir).toUri.getScheme
+    val buf = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
+    if (scheme == null || scheme == "file") {
+      def rec(f: java.io.File): Unit =
+        if (f.isFile) { // a single-FILE table path lists itself
+          if (keep(f.getName)) buf += ((f.getPath, f.length()))
+        } else
+          Option(f.listFiles()).foreach(_.foreach { c =>
+            if (c.isDirectory) { if (sparkListed(c.getName)) rec(c) }
+            else if (keep(c.getName)) buf += ((c.getPath, c.length()))
+          })
+      rec(new java.io.File(dir.stripPrefix("file:")))
+      buf.toSeq
+    } else
+      try {
+        val root = new org.apache.hadoop.fs.Path(dir)
+        val fs = root.getFileSystem(s.sessionState.newHadoopConf())
+        def rec(st: org.apache.hadoop.fs.FileStatus): Unit =
+          if (st.isDirectory) fs.listStatus(st.getPath).foreach { c =>
+            if (!c.isDirectory || sparkListed(c.getPath.getName)) rec(c)
+          }
+          else if (keep(st.getPath.getName)) buf += ((st.getPath.toString, st.getLen))
+        rec(fs.getFileStatus(root))
+        buf.toSeq
+      } catch { case _: java.io.IOException => Nil }
+  }
+
   /** MAX of an int64 column from parquet FOOTER STATISTICS — a
     * metadata-only read that touches no row group. The snapshot/delta
     * split points (D9's incremental threshold, S8's drift halves) need
@@ -221,46 +330,6 @@ object Tables {
     * aggregate if any footer lacks statistics for the column
     * (testdata and every Spark/pyarrow writer in play records them;
     * the fallback keeps third-party parquet correct, not just fast). */
-  /** Recursive data-file listing: (path, bytes) of every file under
-    * `dir`, hidden (`_`/`.`-prefixed) names excluded. LOCAL paths walk
-    * java.io directly: Hadoop's LocalFileSystem is a
-    * ChecksumFileSystem whose recursive `listFiles` pays a
-    * per-located-status penalty that this host's FS turns into
-    * 10-20 ms PER FILE — measured 4.4-6.8 s to list the 320-file
-    * compaction store vs 6 ms for the plain walk, which made the FS
-    * census the DOMINANT term of corpus_compaction_exec's warm rep.
-    * Non-local schemes keep the Hadoop listing (with the session's
-    * conf). Unlistable/missing paths return Nil. */
-  def listDataFiles(s: SparkSession, dir: String): Seq[(String, Long)] = {
-    val scheme = new org.apache.hadoop.fs.Path(dir).toUri.getScheme
-    def hidden(n: String) = n.startsWith("_") || n.startsWith(".")
-    if (scheme == null || scheme == "file") {
-      val buf = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-      def rec(f: java.io.File): Unit =
-        if (f.isFile) { // a single-FILE table path lists itself
-          if (!hidden(f.getName)) buf += ((f.getPath, f.length()))
-        } else
-          Option(f.listFiles()).foreach(_.foreach { c =>
-            if (c.isDirectory) rec(c)
-            else if (!hidden(c.getName)) buf += ((c.getPath, c.length()))
-          })
-      rec(new java.io.File(dir.stripPrefix("file:")))
-      buf.toSeq
-    } else
-      try {
-        val root = new org.apache.hadoop.fs.Path(dir)
-        val fs = root.getFileSystem(s.sessionState.newHadoopConf())
-        val it = fs.listFiles(root, true)
-        val buf = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-        while (it.hasNext) {
-          val st = it.next()
-          if (st.isFile && !hidden(st.getPath.getName))
-            buf += ((st.getPath.toString, st.getLen))
-        }
-        buf.toSeq
-      } catch { case _: java.io.IOException => Nil }
-  }
-
   def maxIdFromStats(s: SparkSession, dir: String, column: String,
       fallback: => DataFrame): Long = {
     import scala.jdk.CollectionConverters._

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.EventSourcing
+import graft.sources.Tables
 import Streams.deleteRec
 
 /** The continuously-maintained queryable state store.
@@ -147,7 +148,7 @@ object LiveStore {
   private def readPacked(s: SparkSession, dir: String): Option[DataFrame] = {
     val paths = livePaths(dir)
     if (paths.isEmpty) None
-    else Some(paths.map(p => s.read.parquet(p)).reduce(_.unionByName(_)))
+    else Some(paths.map(p => Tables.read(s, p)).reduce(_.unionByName(_)))
   }
 
   /** The commutative-monoid fold — base rows and any number of delta
@@ -289,7 +290,7 @@ object LiveStore {
     * the log-cleaner pass ([[compact]] with purge) physically drops
     * dead keys. Final store contents = the batch es_compaction oracle. */
   private[graft] def liveCompaction(s: SparkSession, d: String): DataFrame = {
-    val dir = s"${graft.sources.Tables.workDir(s)}/livecompact"
+    val dir = s"${Tables.workDir(s)}/livecompact"
     runStoreTo(s, d, dir)
     compact(s, dir, purgeTombstones = true)
     EventSourcing.decodeCompacted(
@@ -300,7 +301,7 @@ object LiveStore {
     * return the final snapshot — which must equal the batch KTable
     * (E1's oracle), proving the upsert path bit-exact. */
   private[graft] def liveStore(s: SparkSession, d: String): DataFrame = {
-    val dir = s"${graft.sources.Tables.workDir(s)}/livestore"
+    val dir = s"${Tables.workDir(s)}/livestore"
     runStoreTo(s, d, dir)
     snapshot(s, dir)
   }

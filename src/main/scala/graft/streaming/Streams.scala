@@ -168,7 +168,7 @@ object Streams extends OpFamily {
       // (ts: TimestampType micros) IS the stream schema — no per-arrival
       // conversion here.
       val src = splitSource(s, d)
-      val stream = s.readStream.schema(s.read.parquet(src).schema)
+      val stream = s.readStream.schema(Tables.read(s, src).schema)
         .option("maxFilesPerTrigger", "1").parquet(src)
       stream.select("event_id", "ts", "user_id", "event_type", "value").as[Ev]
     }
@@ -345,12 +345,12 @@ object Streams extends OpFamily {
     val batches = Option(dir.listFiles()).getOrElse(Array.empty)
       .filter(_.getName.startsWith("b_")).sortBy(_.getName.stripPrefix("b_").toLong)
     require(batches.nonEmpty, s"streaming query $name produced no batches")
-    if (mode == "complete") s.read.parquet(batches.last.getPath)
+    if (mode == "complete") Tables.read(s, batches.last.getPath)
     else
       // union of delta batches, each row tagged with its batch id so
       // multi-batch runs can keep each key's LAST emission (n-based
       // max_by ties across batches once a key's state stops changing)
-      s.read.parquet(batches.map(_.getPath): _*)
+      Tables.read(s, batches.map(_.getPath): _*)
         .withColumn("_batch_id",
           regexp_extract(input_file_name(), "/b_(\\d+)/", 1).cast("long"))
   }
@@ -863,7 +863,7 @@ object Streams extends OpFamily {
   // parity for every verdict field.
   private def streamCommandDedup(s: SparkSession, d: String): DataFrame = {
     val src = splitSource(s, d)
-    val raw = s.readStream.schema(s.read.parquet(src).schema)
+    val raw = s.readStream.schema(Tables.read(s, src).schema)
       .option("maxFilesPerTrigger", "1").parquet(src)
     val agg = raw
       .select(col("user_id"),
@@ -1164,7 +1164,7 @@ object Streams extends OpFamily {
   private[graft] def readGrown(s: SparkSession, root: String): Option[DataFrame] = {
     val (_, live) = liveGrowth(root)
     if (live.isEmpty) None
-    else Some(live.map(f => s.read.parquet(f.getPath)).reduce(_.unionByName(_)))
+    else Some(live.map(f => Tables.read(s, f.getPath)).reduce(_.unionByName(_)))
   }
 
   /** Fold live deltas into a new `grown_v<upTo>` once they exceed the
@@ -1222,8 +1222,8 @@ object Streams extends OpFamily {
       old.select(col("doc_id"), md5(col("text")).as("h")))
     // read the immutable base index ONCE per invocation (see
     // baseAndGrowth) — the foreachBatch closure reuses these frames
-    val baseBandsDf = s.read.parquet(baseBands)
-    val baseDigestsDf = s.read.parquet(baseDigests)
+    val baseBandsDf = Tables.read(s, baseBands)
+    val baseDigestsDf = Tables.read(s, baseDigests)
     val tag = dtag + s"_$inv"
     val bandsPath = s"${Tables.workDir(s)}/admit_bands_$tag"
     val digestPath = s"${Tables.workDir(s)}/admit_digests_$tag"
@@ -1287,7 +1287,7 @@ object Streams extends OpFamily {
     val batches = Option(outDir.listFiles()).getOrElse(Array.empty)
       .filter(_.getName.startsWith("b_")).map(_.getPath)
     require(batches.nonEmpty, "stream_admit produced no batches")
-    s.read.parquet(batches.toIndexedSeq: _*)
+    Tables.read(s, batches.toIndexedSeq: _*)
   }
 
   // D21 `stream_index_maintain`: D20's maintained digest index kept
@@ -1468,7 +1468,7 @@ object Streams extends OpFamily {
       Tables.datasetTag(d) + s"_$inv"
     new java.io.File(root).mkdirs()
     val srcDir = liDeltaSplitSource(s, d, t)
-    val stream = s.readStream.schema(s.read.parquet(srcDir).schema)
+    val stream = s.readStream.schema(Tables.read(s, srcDir).schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
     try {
       // Spark stopped REPORTING sorted-bucket scan ordering by default
@@ -1500,7 +1500,7 @@ object Streams extends OpFamily {
       s.sql(s"DROP TABLE IF EXISTS $dimTable")
       deleteRec(new java.io.File(dimLoc))
     }
-    s.read.parquet(path)
+    Tables.read(s, path)
       .unionByName(readGrown(s, root).getOrElse(
         sys.error(s"view growth at $root is empty")))
       .groupBy("month", "l_returnflag")
@@ -1515,7 +1515,7 @@ object Streams extends OpFamily {
       Tables.datasetTag(d) + s"_$inv"
     new java.io.File(root).mkdirs()
     val srcDir = idxDeltaSplitSource(s, d)
-    val stream = s.readStream.schema(s.read.parquet(srcDir).schema)
+    val stream = s.readStream.schema(Tables.read(s, srcDir).schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
     withStreamShards(s, stream) {
       val q = stream.writeStream

@@ -211,7 +211,7 @@ object ScaleSmoke {
         // a real aggregate collect — never a bare count, which a
         // footer row-count or OptimizeOneRowPlan can satisfy without
         // touching the data (the round-13 vacuous-probe lesson)
-        val rows = f(s.read.parquet(dir))
+        val rows = f(graft.sources.Tables.read(s, dir))
           .agg(count(lit(1)), sum(col("l_quantity"))).head().getLong(0)
         val wall = (System.nanoTime() - t0) / 1e9
         // deterministic drain of the async listener bus — a fixed
@@ -253,7 +253,7 @@ object ScaleSmoke {
     import graft.sources.Tables
     val hdDir = s"${Tables.workDir(s)}/hd${factor * 64}_" + Tables.datasetTag(srcDir)
     Tables.buildOnce(s"$hdDir/embeddings.parquet")(
-      expandHd(s.read.parquet(s"$srcDir/embeddings.parquet"), factor))
+      expandHd(graft.sources.Tables.read(s, s"$srcDir/embeddings.parquet"), factor))
     hdDir
   }
 
