@@ -1,7 +1,14 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.execution.datasources.PartitionedFile
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.types._
 import graft.operators.EventSourcing
 import graft.sources.Tables
 import Streams.deleteRec
@@ -25,11 +32,13 @@ import Streams.deleteRec
   *    scales with the BATCH's key count, not the store's (the RocksDB
   *    point-write analog — a 10⁹-key store ingests a 10³-key batch in
   *    10³-key time);
-  *  - reads MERGE-ON-READ: base ∪ live deltas through ONE hash
-  *    aggregate (the monoid makes merge order irrelevant). A point
-  *    lookup prunes every root to one shard directory and pushes the
-  *    key filter into those scans — `getAggregateBytes` while
-  *    ingestion runs;
+  *  - reads MERGE-ON-READ (the monoid makes merge order irrelevant).
+  *    A snapshot or compaction folds base ∪ live deltas through ONE
+  *    hash aggregate. A point lookup is `getAggregateBytes` while
+  *    ingestion runs, answered from the files as surge answers it from
+  *    its local store: the driver reads only the key's shard file of
+  *    each live root and folds those ≤ 1 + [[compactEvery]] rows with
+  *    the same monoid in Scala — no Spark job;
   *  - when live deltas exceed [[compactEvery]], upsert folds them into
   *    a new `base_v<upToBatch>` — the RocksDB background-compaction
   *    analog that bounds read fan-in. E21's log-cleaner is the same
@@ -143,8 +152,7 @@ object LiveStore {
 
   /** base ∪ live deltas, one scan per root (a multi-path read would
     * try to infer ONE partition scheme across the roots and reject the
-    * delta_b / base_v dir names); filters still push through the union
-    * into every scan's PartitionFilters. Fan-in ≤ 1 + compactEvery. */
+    * delta_b / base_v dir names). Fan-in ≤ 1 + compactEvery. */
   private def readPacked(s: SparkSession, dir: String): Option[DataFrame] = {
     val paths = livePaths(dir)
     if (paths.isEmpty) None
@@ -152,16 +160,38 @@ object LiveStore {
   }
 
   /** The commutative-monoid fold — base rows and any number of delta
-    * rows merge through ONE hash aggregate, in any order. */
+    * rows merge through ONE hash aggregate, in any order. [[mergedKey]]
+    * is the same monoid over one key's rows, for [[lookup]]. */
   private def merged(df: DataFrame): DataFrame =
     df.groupBy("user_id", "shard") // shard is functionally dependent
       .agg(max(col("pk")).as("pk"), max(col("mts")).as("mts"),
         sum(col("n_events")).as("n_events"))
 
+  /** [[merged]] over one key's rows in Scala: max pk, max mts, sum
+    * n_events, each skipping nulls as Spark's max and sum do. No rows
+    * give no row. */
+  private def mergedKey(key: Long, rows: Seq[InternalRow]): Option[InternalRow] = {
+    def present(i: Int) = rows.filterNot(_.isNullAt(i))
+    val pk = present(1).map(_.getDecimal(1, 38, 0)).maxOption
+    val mts = present(2).map(_.getLong(2)).maxOption
+    val n = present(3).map(_.getLong(3)).reduceOption(_ + _)
+    Option.when(rows.nonEmpty)(
+      InternalRow(key, pk.orNull, mts.map(Long.box).orNull, n.map(Long.box).orNull))
+  }
+
+  /** A store file's columns as `publish` writes them (without the
+    * `shard` partition column) and as every reader sees them: a file
+    * read makes each column nullable. */
+  private val packedSchema = StructType(Seq(
+    StructField("user_id", LongType), StructField("pk", DecimalType(38, 0)),
+    StructField("mts", TimestampType), StructField("n_events", LongType)))
+
+  private val packedCols = (packedSchema.fieldNames.toSeq :+ "shard").map(col)
+
   private def publish(s: SparkSession, df: DataFrame, dir: String, name: String): Unit = {
     val staging = new java.io.File(dir, s"_staging_$name")
     deleteRec(staging)
-    df.select("user_id", "pk", "mts", "n_events", "shard")
+    df.select(packedCols: _*)
       .write.mode("overwrite").partitionBy("shard").parquet(staging.getPath)
     java.nio.file.Files.move(staging.toPath, new java.io.File(dir, name).toPath,
       java.nio.file.StandardCopyOption.ATOMIC_MOVE)
@@ -224,7 +254,7 @@ object LiveStore {
       // no concurrent reader exists in the aside window.
       val staging = new java.io.File(dir, s"_staging_base_v$upTo")
       deleteRec(staging)
-      kept.select("user_id", "pk", "mts", "n_events", "shard")
+      kept.select(packedCols: _*)
         .write.mode("overwrite").partitionBy("shard").parquet(staging.getPath)
       val retired = new java.io.File(dir, s"_retired_base_v$upTo")
       deleteRec(retired)
@@ -247,13 +277,34 @@ object LiveStore {
 
   private val tombstoneCode = 1L // evTypes.indexOf("error")
 
-  /** Point lookup BY KEY — prunes every live root to one shard
-    * directory (spec asserts PartitionFilters), pushes the user_id
-    * filter into those scans, then merges the ≤(1+deltas) rows. */
-  def lookup(s: SparkSession, dir: String, key: Long): DataFrame =
-    EventSourcing.decodeState(merged(
-      readPacked(s, dir).getOrElse(sys.error(s"live store at $dir has no committed data"))
-        .filter(col("shard") === lit(key % storeShards(dir)) && col("user_id") === lit(key))))
+  /** Point lookup BY KEY, read on the driver with no Spark job. Each
+    * live root contributes only its `shard=<floorMod(key, n)>` data
+    * files (the modulus `upsert`'s pmod writes with, negative keys
+    * included); no other shard's file is opened. Spark's own parquet
+    * reader reads them with the key filter pushed down, so row groups
+    * skip by their stats and decimal and timestamp conversion stay
+    * Spark's. The ≤ 1 + [[compactEvery]] rows of the key fold through
+    * [[mergedKey]], and the 0 or 1 row decodes over a local relation,
+    * which the optimizer folds: `collect()` runs no job either. */
+  def lookup(s: SparkSession, dir: String, key: Long): DataFrame = {
+    val roots = livePaths(dir)
+    if (roots.isEmpty) sys.error(s"live store at $dir has no committed data")
+    val shard = s"shard=${Math.floorMod(key, storeShards(dir).toLong)}"
+    val files = roots.flatMap(r =>
+      Option(new java.io.File(r, shard).listFiles()).getOrElse(Array.empty))
+      .filter(f => f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
+    val read = new ParquetFileFormat().buildReaderWithPartitionValues(s, packedSchema,
+      new StructType(), packedSchema, Seq(org.apache.spark.sql.sources.EqualTo("user_id", key)),
+      Map("returning_batch" -> "false"), s.sessionState.newHadoopConf())
+    val rows = files.flatMap { f =>
+      read(PartitionedFile(InternalRow.empty,
+        org.apache.spark.paths.SparkPath.fromPath(new org.apache.hadoop.fs.Path(f.toURI)),
+        0L, f.length(), Array.empty, f.lastModified(), f.length()))
+        .filter(r => !r.isNullAt(0) && r.getLong(0) == key).map(_.copy())
+    }
+    EventSourcing.decodeState(ColumnBridge.dataFrame(s,
+      LocalRelation(DataTypeUtils.toAttributes(packedSchema), mergedKey(key, rows).toSeq)))
+  }
 
   /** Full decoded snapshot (the read-side view of the whole store):
     * merge-on-read in one hash aggregate, then decode. */

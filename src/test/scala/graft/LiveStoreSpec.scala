@@ -22,6 +22,16 @@ class LiveStoreSpec extends SparkSpec {
       .map(f => f.getPath -> f.length()).toMap
   }
 
+  private def copyTree(from: java.io.File, to: java.io.File): Unit =
+    if (from.isDirectory) {
+      to.mkdirs()
+      Option(from.listFiles()).getOrElse(Array.empty)
+        .foreach(f => copyTree(f, new java.io.File(to, f.getName)))
+    } else java.nio.file.Files.copy(from.toPath, to.toPath)
+
+  private def storeDir(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toFile.getPath + "/store"
+
   test("point lookup mid-stream reflects each ingested prefix; final snapshot = batch KTable") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -46,13 +56,6 @@ class LiveStoreSpec extends SparkSpec {
     assert(mid(0).getAs[String]("last_type") == "purchase")
     assert(mid(0).getAs[Double]("last_value") == 12.34)
     assert(mid(0).getAs[Long]("n_events") == 2L)
-    // the point read is partition-pruned to user 7's shard: the scan
-    // must carry a NON-EMPTY PartitionFilters on the shard column
-    // (every partitioned scan prints "PartitionFilters: [...]", so a
-    // bare contains() check would pass with zero pruning)
-    val plan = LiveStore.lookup(spark, dir, 7L).queryExecution.executedPlan.toString
-    assert("PartitionFilters: \\[[^\\]]*shard".r.findFirstIn(plan).isDefined,
-      s"lookup should prune on the shard partition column:\n$plan")
     // at-least-once redelivery: replaying an already-committed batch id
     // must be a no-op (n_events would otherwise double-count)
     LiveStore.upsert(b1.toDF(), 0L, dir)
@@ -86,6 +89,19 @@ class LiveStoreSpec extends SparkSpec {
     // untouched key absent from the batch survives (merge-on-read)
     val k23 = LiveStore.lookup(spark, dir, 23L).collect()
     assert(k23.length == 1 && k23(0).getAs[Long]("n_events") == 1L)
+
+    // the point read is pruned to user 7's shard: in a copy of the store
+    // whose every other shard file is garbage, the lookup still answers,
+    // while a snapshot, which opens every file, fails
+    val copy = root.getPath + "/pruned"
+    copyTree(new java.io.File(dir), new java.io.File(copy))
+    val others = dataFiles(new java.io.File(copy)).keys.filterNot(_.contains("/shard=7/"))
+    assert(others.nonEmpty, "the pruning check needs a second shard")
+    others.foreach(p => java.nio.file.Files.write(java.nio.file.Paths.get(p), Array[Byte](1, 2, 3)))
+    val pruned = LiveStore.lookup(spark, copy, 7L).collect()
+    assert(pruned.toSeq == LiveStore.lookup(spark, dir, 7L).collect().toSeq)
+    assert(pruned(0).getAs[String]("last_type") == "error")
+    intercept[Exception](LiveStore.snapshot(spark, copy).collect())
 
     q.stop()
 
@@ -151,5 +167,54 @@ class LiveStoreSpec extends SparkSpec {
     assert(after.filter(col("user_id") === 7L).collect()(0).getAs[Long]("n_events") == 2L)
     assert(!staging.exists, "a committed batch must leave no staging dir behind")
     ()
+  }
+
+  test("keys -3 and 13 share shard 13 of a 16-shard store and both look up") {
+    import spark.implicits._
+    val dir = storeDir("graft_livestore_neg")
+    LiveStore.upsert(Seq(
+      Ev(1, ts(0), -3, "signup", 0.0), Ev(2, ts(1), -3, "purchase", 4.5),
+      Ev(3, ts(0), 13, "click", 1.0)).toDF(), 0L, dir)
+    assert(LiveStore.storeShards(dir) == 16)
+    assert(new java.io.File(dir, "delta_b0").list().toSet.filter(_.startsWith("shard=")) ==
+      Set("shard=13"), "upsert shards with pmod: -3 lands in shard 13")
+    val neg = LiveStore.lookup(spark, dir, -3L).collect()
+    assert(neg.length == 1)
+    assert(neg(0).getAs[Long]("user_id") == -3L && neg(0).getAs[Long]("n_events") == 2L)
+    assert(neg(0).getAs[String]("last_type") == "purchase" && neg(0).getAs[Double]("last_value") == 4.5)
+    val pos = LiveStore.lookup(spark, dir, 13L).collect()
+    assert(pos.length == 1 && pos(0).getAs[String]("last_type") == "click")
+  }
+
+  test("lookup equals the snapshot filtered to its key, over a base and live deltas") {
+    import spark.implicits._
+    val dir = storeDir("graft_livestore_eq")
+    val batches = Seq(
+      Seq(Ev(1, ts(0), 7, "signup", 0.0), Ev(2, ts(1), 23, "click", 1.25),
+        Ev(3, ts(2), -3, "view", 2.0), Ev(4, ts(3), 40, "purchase", 19.99)),
+      Seq(Ev(5, ts(4), 7, "purchase", 12.34), Ev(6, ts(4), 13, "click", 0.5)),
+      Seq(Ev(7, ts(5), 23, "view", 3.0), Ev(8, ts(6), -3, "purchase", 7.77),
+        Ev(9, ts(2), 40, "click", 1.0)), // out of order: older than 40's purchase
+      Seq(Ev(10, ts(9), 7, "error", 3.5), Ev(11, ts(9), 8, "signup", 0.0)))
+    batches.take(2).zipWithIndex.foreach { case (b, i) => LiveStore.upsert(b.toDF(), i, dir) }
+    LiveStore.compact(spark, dir, purgeTombstones = false)
+    batches.zipWithIndex.drop(2).foreach { case (b, i) => LiveStore.upsert(b.toDF(), i, dir) }
+    val names = new java.io.File(dir).list().toSet
+    assert(names.contains("base_v1") && names.contains("delta_b2") && names.contains("delta_b3"),
+      s"want a base and two live deltas: $names")
+
+    val snap = LiveStore.snapshot(spark, dir)
+    val keys = snap.select("user_id").as[Long].collect().toSeq.sorted
+    assert(keys == Seq(-3L, 7L, 8L, 13L, 23L, 40L))
+    keys.foreach { k =>
+      val got = LiveStore.lookup(spark, dir, k)
+      val want = snap.filter(col("user_id") === k)
+      assert(got.schema == want.schema, s"key $k")
+      assert(got.collect().toSeq == want.collect().toSeq, s"key $k")
+    }
+    // key 7's latest event is tombstone-typed; the live store keeps it
+    assert(LiveStore.lookup(spark, dir, 7L).collect()(0).getAs[String]("last_type") == "error")
+    val absent = LiveStore.lookup(spark, dir, 999L)
+    assert(absent.schema == snap.schema && absent.collect().isEmpty)
   }
 }
