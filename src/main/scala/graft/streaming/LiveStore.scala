@@ -69,7 +69,10 @@ object LiveStore {
 
   // ---- store shard layout from MEASURED source mass (opt r15) ----
   // Every upsert writes one parquet file per (task, touched shard dir)
-  // and every commit fsyncs each of them (plus crc sidecars): at the
+  // plus its crc sidecar, and each file costs forked processes, not
+  // fsyncs: these writes take Hadoop's cached local `FileSystem`, which
+  // without `libhadoop.so` forks `chmod` per created file (unlike the
+  // stream's checkpoint, which [[LocalCheckpointFs]] serves). At the
   // flat 16 shards a 2-task bench batch commits ~32 tiny files per
   // trigger to carry ~500 keys — the same constant-fan-out defect
   // class the r14 state-shard sizing removed. The layout now derives

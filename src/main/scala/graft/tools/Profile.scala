@@ -1,6 +1,8 @@
 package graft.tools
 
 import java.util.concurrent.atomic.AtomicInteger
+import jdk.jfr.Recording
+import jdk.jfr.consumer.{RecordedEvent, RecordingFile}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.apache.spark.sql.streaming.StreamingQueryListener._
@@ -11,8 +13,11 @@ import org.apache.spark.sql.streaming.StreamingQueryListener._
   * between groups). Each call prints its wall time, row count and
   * Spark job count; the job count is deterministic where wall time on
   * a shared host swings 2-4×, so it is the mechanism signal for "fewer
-  * jobs" changes. Stream ops also print each micro-batch's `durationMs`
-  * breakdown (triggerExecution = total; queryPlanning / getBatch /
+  * jobs" changes. Next to it, each call prints the child processes it
+  * launched (a JFR `jdk.ProcessStart` recording per call), by command:
+  * Hadoop's local file system forks `chmod`/`readlink` where no
+  * `libhadoop.so` is loaded. Stream ops also print each micro-batch's
+  * `durationMs` breakdown (triggerExecution = total; queryPlanning / getBatch /
   * addBatch / walCommit / commitOffsets split it) and state-shard
   * counts. An op is any registered name or a `ScaleSmoke.extraQueries`
   * variant.
@@ -52,12 +57,33 @@ object Profile {
     for (op <- ops; rep <- 1 to reps) {
       spark.sharedState.cacheManager.clearCache()
       val t0 = System.nanoTime()
-      val n = lookup(op).get(spark, sfDir).count()
+      val (n, starts) = processStarts(lookup(op).get(spark, sfDir).count())
       val secs = (System.nanoTime() - t0) / 1e9
       // the call's job and batch events are on the async listener bus
       drain()
-      println(f"[profile] $op rep$rep: $secs%.2f s rows=$n jobs=${jobs.getAndSet(0)}")
+      val byCommand = starts.groupBy(_.getString("command").takeWhile(_ != ' '))
+        .map { case (c, es) => s"$c ${es.size}" }.toSeq.sorted.mkString(", ")
+      println(f"[profile] $op rep$rep: $secs%.2f s rows=$n jobs=${jobs.getAndSet(0)} " +
+        s"forks=${starts.size} [$byCommand]")
     }
     spark.stop()
+  }
+
+  /** `body`'s value and the `jdk.ProcessStart` events (with stack
+    * traces) of every process the JVM launched while it ran. */
+  def processStarts[T](body: => T): (T, Seq[RecordedEvent]) = {
+    val rec = new Recording()
+    try {
+      rec.enable("jdk.ProcessStart").withStackTrace()
+      rec.start()
+      val out = body
+      rec.stop()
+      val f = java.nio.file.Files.createTempFile("graft_forks", ".jfr")
+      try {
+        rec.dump(f)
+        import scala.jdk.CollectionConverters._
+        (out, RecordingFile.readAllEvents(f).asScala.toSeq)
+      } finally java.nio.file.Files.delete(f)
+    } finally rec.close()
   }
 }

@@ -30,12 +30,12 @@ class LiveStoreSpec extends SparkSpec {
     } else java.nio.file.Files.copy(from.toPath, to.toPath)
 
   private def storeDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toFile.getPath + "/store"
+    tempDir(prefix).getPath + "/store"
 
   test("point lookup mid-stream reflects each ingested prefix; final snapshot = batch KTable") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("graft_livestore").toFile
+    val root = tempDir("graft_livestore")
     val dir = root.getPath + "/store"
     val input = MemoryStream[Ev]
     val q = input.toDS().toDF().writeStream
@@ -140,7 +140,7 @@ class LiveStoreSpec extends SparkSpec {
 
   test("a crash between staging write and rename is invisible to readers and heals on replay") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_livestore_kill").toFile
+    val root = tempDir("graft_livestore_kill")
     val dir = root.getPath + "/store"
     val b0 = Seq(Ev(1, ts(0), 7, "signup", 0.0), Ev(2, ts(1), 9, "click", 1.0))
     LiveStore.upsert(b0.toDF(), 0L, dir)

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
 import graft.functions.Similarity
@@ -10,7 +9,7 @@ import graft.functions.Similarity
 class PartitionedWriteSpec extends SparkSpec {
 
   test("partitionBy(event_type) write prunes partitions on filtered read") {
-    val dir = Files.createTempDirectory("graft_part").toString
+    val dir = tempDir("graft_part").toString
     Tables.events(spark, sf)
       .write.mode("overwrite").partitionBy("event_type").parquet(dir)
     val all = spark.read.parquet(dir)

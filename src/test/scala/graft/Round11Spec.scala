@@ -175,10 +175,7 @@ class Round11Spec extends SparkSpec {
     import spark.implicits._
     import graft.streaming.Streams
     val root = new java.io.File("/tmp/graft_growth_spec")
-    def deleteRec(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(deleteRec)); f.delete(); ()
-    }
-    deleteRec(root); root.mkdirs()
+    Streams.deleteRec(root); root.mkdirs()
     val n = 12 // past the LiveStore cadence (8) -> at least one compaction
     for (id <- 0 until n) {
       Streams.appendBatchOnce(
@@ -200,7 +197,7 @@ class Round11Spec extends SparkSpec {
       Seq((0L, "duplicate")).toDF("doc_id", "h"), root.getPath, 0L)
     val again = Streams.readGrown(spark, root.getPath).get.count()
     assert(again == n.toLong, s"replayed folded batch re-appended (rows=$again)")
-    deleteRec(root)
+    Streams.deleteRec(root)
   }
 
   test("components runs under a scoped conf and leaves the session width untouched") {

@@ -291,7 +291,7 @@ class Round13Spec extends SparkSpec {
     // (DROPMALFORMED) — PERMISSIVE + columnNameOfCorruptRecord gives
     // per-row quarantine, and the quarantined line survives VERBATIM
     // for the dead-letter store (the C8/outbox posture for bad input)
-    val dir = java.nio.file.Files.createTempDirectory("graft_jsonl").toFile
+    val dir = tempDir("graft_jsonl")
     val good = (0 until 20).map(i => s"""{"doc_id":$i,"text":"doc $i","lang":"en"}""")
     val bad = Seq(
       """{"doc_id":20,"text":"unterminated""",
@@ -300,33 +300,26 @@ class Round13Spec extends SparkSpec {
     val lines = scala.util.Random.shuffle(good ++ bad)
     java.nio.file.Files.write(new java.io.File(dir, "part0.jsonl").toPath,
       lines.mkString("\n").getBytes("UTF-8"))
-    try {
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id", org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("text", org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("lang", org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("_corrupt", org.apache.spark.sql.types.StringType)))
-      val df = spark.read.schema(schema)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt")
-        .json(dir.getPath).cache()
-      val quarantined = df.filter(col("_corrupt").isNotNull)
-      val clean = df.filter(col("_corrupt").isNull)
-      assert(df.count() == 23)
-      assert(clean.count() == 20)
-      assert(quarantined.count() == 3)
-      // quarantine preserves the raw line verbatim for the dead-letter
-      // store; clean rows parsed with full fidelity
-      val rawBack = quarantined.select("_corrupt").collect().map(_.getString(0)).toSet
-      assert(bad.toSet.subsetOf(rawBack) || rawBack == bad.toSet)
-      assert(clean.agg(sum(col("doc_id"))).head().getLong(0) == (0 until 20).sum)
-      df.unpersist()
-    } finally {
-      def rec(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rec)); f.delete(); ()
-      }
-      rec(dir)
-    }
+    val schema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("doc_id", org.apache.spark.sql.types.LongType),
+      org.apache.spark.sql.types.StructField("text", org.apache.spark.sql.types.StringType),
+      org.apache.spark.sql.types.StructField("lang", org.apache.spark.sql.types.StringType),
+      org.apache.spark.sql.types.StructField("_corrupt", org.apache.spark.sql.types.StringType)))
+    val df = spark.read.schema(schema)
+      .option("mode", "PERMISSIVE")
+      .option("columnNameOfCorruptRecord", "_corrupt")
+      .json(dir.getPath).cache()
+    val quarantined = df.filter(col("_corrupt").isNotNull)
+    val clean = df.filter(col("_corrupt").isNull)
+    assert(df.count() == 23)
+    assert(clean.count() == 20)
+    assert(quarantined.count() == 3)
+    // quarantine preserves the raw line verbatim for the dead-letter
+    // store; clean rows parsed with full fidelity
+    val rawBack = quarantined.select("_corrupt").collect().map(_.getString(0)).toSet
+    assert(bad.toSet.subsetOf(rawBack) || rawBack == bad.toSet)
+    assert(clean.agg(sum(col("doc_id"))).head().getLong(0) == (0 until 20).sum)
+    df.unpersist()
   }
 
   // ---- R30 table_stats ----

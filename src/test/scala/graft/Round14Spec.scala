@@ -106,10 +106,7 @@ class Round14Spec extends SparkSpec {
     import graft.functions.Dedup
     val base = Dedup.digestIndexBase(spark, sf)
     val root = s"${graft.sources.Tables.workDir(spark)}/idx_redeliver_spec"
-    def deleteRec(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(deleteRec)); f.delete(); ()
-    }
-    deleteRec(new java.io.File(root))
+    Streams.deleteRec(new java.io.File(root))
     new java.io.File(root).mkdirs()
     // three ascending-doc_id action batches, the split-source shape
     val actions = Dedup.indexDeltaActions(spark, sf)
@@ -133,7 +130,7 @@ class Round14Spec extends SparkSpec {
     val batch = run("dedup_index_maintain")
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
     assert(once == batch)
-    deleteRec(new java.io.File(root))
+    Streams.deleteRec(new java.io.File(root))
   }
 
   // ---- R29 physical z-order write (r11 verdict item 3) ----

@@ -48,7 +48,7 @@ class Round17Spec extends SparkSpec {
     assert(LiveStore.storeShardsFor(Some(100000000L), 32) == 32)
     // the modulus is STORE metadata: a recorded layout is read back by
     // any later session; an unmarked store keeps the default
-    val root = java.nio.file.Files.createTempDirectory("graft_shards").toFile
+    val root = tempDir("graft_shards")
     assert(LiveStore.storeShards(root.getPath + "/unmarked") == 16)
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(root.getPath, "_nshards"), "5")
@@ -63,7 +63,7 @@ class Round17Spec extends SparkSpec {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val key = "spark.sql.shuffle.partitions"
     val prev = spark.conf.get(key)
-    val root = java.nio.file.Files.createTempDirectory("graft_mass").toFile
+    val root = tempDir("graft_mass")
     try {
       spark.conf.set(key, "32")
       // a split dir of 3 files, 3,000,006 footer rows ⇒ 1,000,002
@@ -87,10 +87,7 @@ class Round17Spec extends SparkSpec {
       assert(Streams.sourceRows(spark, mem).isEmpty)
       Streams.withStreamShards(spark, mem) { seen = spark.conf.get(key).toInt }
       assert(seen == 8)
-    } finally {
-      spark.conf.set(key, prev)
-      Streams.deleteRec(root)
-    }
+    } finally spark.conf.set(key, prev)
   }
 
   private def splitFrame(dir: String) =

@@ -267,9 +267,9 @@ class Round3Spec extends SparkSpec {
     val s1 = spark.newSession()
     val s2 = spark.newSession()
     s1.conf.set("graft.workdir",
-      java.nio.file.Files.createTempDirectory("graft_w1").toString)
+      tempDir("graft_w1").toString)
     s2.conf.set("graft.workdir",
-      java.nio.file.Files.createTempDirectory("graft_w2").toString)
+      tempDir("graft_w2").toString)
     assert(graft.sources.Tables.workDir(s1) != graft.sources.Tables.workDir(s2))
     val fn = SparkEntry.queries("es_state_lookup")
     val pool = java.util.concurrent.Executors.newFixedThreadPool(2)

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
 
@@ -28,7 +27,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("csv round-trip preserves the projection") {
-    val dir = Files.createTempDirectory("graft_csv").toString
+    val dir = tempDir("graft_csv").toString
     val src = Tables.customer(spark, sf).select("c_custkey", "c_name", "c_acctbal")
     src.write.mode("overwrite").option("header", "true").csv(dir)
     val back = spark.read.option("header", "true")
@@ -37,7 +36,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("json round-trip preserves the event envelope") {
-    val dir = Files.createTempDirectory("graft_json").toString
+    val dir = tempDir("graft_json").toString
     val src = Tables.events(spark, sf).select("event_id", "user_id", "event_type", "value")
     src.write.mode("overwrite").json(dir)
     val back = spark.read

@@ -46,11 +46,6 @@ import graft.streaming.{Ev, Streams}
 @org.scalatest.tags.Slow
 class StreamRestartSpec extends SparkSpec {
 
-  private def deleteRec(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(deleteRec))
-    f.delete(); ()
-  }
-
   /** The events table as [[Streams.sourceBatches]] chronological
     * parquet files (the split-source layout), written under `root`. */
   private def writeSplits(root: java.io.File): Seq[java.io.File] = {
@@ -68,7 +63,7 @@ class StreamRestartSpec extends SparkSpec {
       val dst = new java.io.File(root, f"$i%02d.parquet")
       java.nio.file.Files.move(part.toPath, dst.toPath,
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      deleteRec(tmp)
+      Streams.deleteRec(tmp)
       dst
     }
   }
@@ -143,7 +138,7 @@ class StreamRestartSpec extends SparkSpec {
     scoped {
       val tag = s"${name}_$provider" + (if (changelog) "_cl" else "")
       val root = new java.io.File(s"/tmp/graft_restart_$tag")
-      deleteRec(root)
+      Streams.deleteRec(root)
       val allSrc = new java.io.File(root, "src_all"); allSrc.mkdirs()
       val splits = writeSplits(allSrc)
       assert(splits.size == 3, "the boundary test below assumes 3 source files")
@@ -188,7 +183,7 @@ class StreamRestartSpec extends SparkSpec {
       val got = lastPerKey(sink, valueCols)
       assert(got == expected,
         s"$tag: state restored from checkpoint must equal the uninterrupted run")
-      deleteRec(root)
+      Streams.deleteRec(root)
     }
   }
 

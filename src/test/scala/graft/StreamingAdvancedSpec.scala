@@ -1,7 +1,6 @@
 package graft
 
 import java.sql.Timestamp
-import java.nio.file.Files
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import graft.streaming.{Ev, Streams}
@@ -57,7 +56,7 @@ class StreamingAdvancedSpec extends SparkSpec {
   test("foreachBatch sink lands each micro-batch atomically") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = Files.createTempDirectory("graft_febatch").toString
+    val dir = tempDir("graft_febatch").toString
     val input = MemoryStream[Ev]
     val q = Streams.foreachBatchSink(input.toDS().toDF(), dir)
     input.addData(Ev(1, ts(0), 1, "click", 1.0), Ev(2, ts(1), 2, "view", 2.0))

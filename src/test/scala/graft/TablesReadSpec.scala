@@ -23,7 +23,7 @@ class TablesReadSpec extends SparkSpec {
     assert(Tables.read(spark, paths: _*).schema == plain(paths: _*).schema, paths)
 
   private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toFile.getPath
+    tempDir(prefix).getPath
 
   /** Spark jobs started while `body` runs, drained on both sides. */
   private def jobsDuring[T](body: => T): Int = {
