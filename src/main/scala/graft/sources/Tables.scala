@@ -196,7 +196,7 @@ object Tables {
             "graft.workdir at a shared filesystem (hdfs://, s3a://, nfs mount), or " +
             "set graft.workdir.assumeShared=true if the file: path IS a shared mount.")
       val path = s"$wd/ckpt_${ckptSeq.incrementAndGet()}"
-      df.write.mode("overwrite").parquet(path)
+      LocalFiles.scoped(s)(df.write.mode("overwrite").parquet(path))
       read(s, path)
     } else df.localCheckpoint(eager)
   }
@@ -445,13 +445,13 @@ object Tables {
     lock.synchronized {
       if (!dst.exists()) {
         val stg = new java.io.File(dst.getParentFile, "_staging_" + dst.getName)
-        def rec(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rec)); f.delete(); ()
+        LocalFiles.deleteRec(stg)
+        val df = build
+        LocalFiles.scoped(df.sparkSession) {
+          val w = df.write.mode("overwrite")
+          (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
+            .parquet(stg.getPath)
         }
-        rec(stg)
-        val w = build.write.mode("overwrite")
-        (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-          .parquet(stg.getPath)
         java.nio.file.Files.move(stg.toPath, dst.toPath,
           java.nio.file.StandardCopyOption.ATOMIC_MOVE)
         ()
@@ -464,12 +464,8 @@ object Tables {
 
   private def registerCleanup(dir: String): Unit =
     if (cleanupRegistered.add(dir)) {
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        def rec(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rec)); f.delete(); ()
-        }
-        rec(new java.io.File(dir))
-      }))
+      Runtime.getRuntime.addShutdownHook(new Thread(() =>
+        LocalFiles.deleteRec(new java.io.File(dir))))
       ()
     }
 }

@@ -10,8 +10,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 import graft.operators.EventSourcing
-import graft.sources.Tables
-import Streams.deleteRec
+import graft.sources.{LocalFiles, Tables}
+import graft.sources.LocalFiles.deleteRec
 
 /** The continuously-maintained queryable state store.
   *
@@ -69,10 +69,10 @@ object LiveStore {
 
   // ---- store shard layout from MEASURED source mass (opt r15) ----
   // Every upsert writes one parquet file per (task, touched shard dir)
-  // plus its crc sidecar, and each file costs forked processes, not
-  // fsyncs: these writes take Hadoop's cached local `FileSystem`, which
-  // without `libhadoop.so` forks `chmod` per created file (unlike the
-  // stream's checkpoint, which [[LocalCheckpointFs]] serves). At the
+  // plus its crc sidecar, `_temporary` dirs and `_SUCCESS` marker.
+  // [[LocalFiles.scoped]] keeps each of those from forking a `chmod`
+  // (no `libhadoop.so`), but every file still costs a create, a commit
+  // rename and a listing entry for every later read. At the
   // flat 16 shards a 2-task bench batch commits ~32 tiny files per
   // trigger to carry ~500 keys — the same constant-fan-out defect
   // class the r14 state-shard sizing removed. The layout now derives
@@ -191,11 +191,17 @@ object LiveStore {
 
   private val packedCols = (packedSchema.fieldNames.toSeq :+ "shard").map(col)
 
+  /** Write `df` as a store root at `to`, forking no process per file. */
+  private def writePacked(s: SparkSession, df: DataFrame, to: java.io.File): Unit =
+    LocalFiles.scoped(s) {
+      df.select(packedCols: _*)
+        .write.mode("overwrite").partitionBy("shard").parquet(to.getPath)
+    }
+
   private def publish(s: SparkSession, df: DataFrame, dir: String, name: String): Unit = {
     val staging = new java.io.File(dir, s"_staging_$name")
     deleteRec(staging)
-    df.select(packedCols: _*)
-      .write.mode("overwrite").partitionBy("shard").parquet(staging.getPath)
+    writePacked(s, df, staging)
     java.nio.file.Files.move(staging.toPath, new java.io.File(dir, name).toPath,
       java.nio.file.StandardCopyOption.ATOMIC_MOVE)
     ()
@@ -257,8 +263,7 @@ object LiveStore {
       // no concurrent reader exists in the aside window.
       val staging = new java.io.File(dir, s"_staging_base_v$upTo")
       deleteRec(staging)
-      kept.select(packedCols: _*)
-        .write.mode("overwrite").partitionBy("shard").parquet(staging.getPath)
+      writePacked(s, kept, staging)
       val retired = new java.io.File(dir, s"_retired_base_v$upTo")
       deleteRec(retired)
       java.nio.file.Files.move(target.toPath, retired.toPath,

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.{Op, OpFamily}
-import graft.sources.Tables
+import graft.sources.{LocalFiles, Tables}
+import graft.sources.LocalFiles.deleteRec
 import graft.sources.Tables.cents
 
 /** An event-log record (the Kafka-record analog). */
@@ -120,11 +121,6 @@ object Streams extends OpFamily {
 
   private val splitCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
-  /** Delete a file or directory tree (missing paths are a no-op). */
-  private[graft] def deleteRec(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(deleteRec)); f.delete(); ()
-  }
-
   /** Split the events table into [[sourceBatches]] CHRONOLOGICAL files
     * (built once per session+dataset). Chronology between files is the
     * one ordering constraint the operators have: every stateful op here
@@ -200,8 +196,8 @@ object Streams extends OpFamily {
   // tens of thousands of rows. The measured cost per file was process
   // launches, not I/O: without `libhadoop.so` Hadoop's local FS forked
   // `chmod` per created file and `readlink` twice per rename. The
-  // checkpoint files no longer fork ([[LocalCheckpointFs]]); the
-  // sink's parquet parts still do, on the cached `FileSystem` path.
+  // checkpoint files and the sink's parquet parts now run in
+  // [[LocalFiles.scoped]] and fork nothing, so a shard costs its I/O.
   // The old flat default (8) was itself a measured cut from the
   // session width (stream_latest 4.1 → 2.1 s),
   // but it is a CONSTANT — the exact defect class the R32 bucket
@@ -279,11 +275,6 @@ object Streams extends OpFamily {
   private val rocksChangelogKey =
     "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
 
-  /** The `FileContext` implementation of `file:`, which every
-    * checkpoint file manager opens. Naming one scheme leaves HDFS and
-    * object-store checkpoints on their own file systems. */
-  private val localFsKey = "fs.AbstractFileSystem.file.impl"
-
   /** Run `body` — which starts `df` — with the streaming STATE shard
     * count scoped in: a stateful operator creates
     * `spark.sql.shuffle.partitions` state stores, each committing files
@@ -296,17 +287,17 @@ object Streams extends OpFamily {
     * widths still grow with throughput while bench-scale batches stop
     * paying a fixed fan-out. `rowScaleState` marks ops that keep a
     * state key per source row: their total source mass is the
-    * state-key estimate. Checkpoints on `file:` (offsets and commits
-    * logs, state-store deltas, stream metadata) run on
-    * [[LocalCheckpointFs]], which forks no process per file. The
-    * session values are restored before the post-stream batch stages
-    * plan. Physical planning happens at start(), and the query keeps
+    * state-key estimate. The start runs in [[LocalFiles.scoped]], so
+    * the query's files on `file:` (offsets and commits logs,
+    * state-store deltas, stream metadata, `foreachBatch` sink parts)
+    * fork no process per file. The session values are restored before
+    * the post-stream batch stages plan. Physical planning happens at start(), and the query keeps
     * the session conf it cloned there, so scoping around the start is
     * sufficient. */
   private[graft] def withStreamShards[T](s: SparkSession, df: Dataset[_],
       rowScaleState: Boolean = false)(body: => T): T = {
     val key = "spark.sql.shuffle.partitions"
-    val prev = Seq(key, stateStoreKey, rocksChangelogKey, localFsKey)
+    val prev = Seq(key, stateStoreKey, rocksChangelogKey)
       .map(k => k -> s.conf.getOption(k))
     val total = sourceRows(s, df)
     val perBatch = total.map(r => math.max(1L, (r + sourceBatches - 1) / sourceBatches))
@@ -317,8 +308,7 @@ object Streams extends OpFamily {
       if (s.conf.getOption("graft.stream.rocksdbChangelog").contains("true"))
         s.conf.set(rocksChangelogKey, "true")
     }
-    s.conf.set(localFsKey, classOf[LocalCheckpointFs].getName)
-    try body finally prev.foreach {
+    try LocalFiles.scoped(s)(body) finally prev.foreach {
       case (k, Some(v)) => s.conf.set(k, v)
       case (k, None) => s.conf.unset(k)
     }
@@ -1082,8 +1072,10 @@ object Streams extends OpFamily {
     new java.io.File(base).mkdirs()
     for (i <- 0 until sourceBatches) {
       val tmp = s"$base/_build_$i"
-      tagged.filter(col("_p") === i).drop("_p")
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
+      LocalFiles.scoped(tagged.sparkSession) {
+        tagged.filter(col("_p") === i).drop("_p")
+          .coalesce(1).write.mode("overwrite").parquet(tmp)
+      }
       val part = Option(new java.io.File(tmp).listFiles()).get
         .find(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("_")).get
       val dst = new java.io.File(base, f"$i%02d.parquet")

@@ -14,10 +14,11 @@ import org.apache.spark.sql.streaming.StreamingQueryListener._
   * Spark job count; the job count is deterministic where wall time on
   * a shared host swings 2-4×, so it is the mechanism signal for "fewer
   * jobs" changes. Next to it, each call prints the child processes it
-  * launched (a JFR `jdk.ProcessStart` recording per call), by command:
-  * Hadoop's local file system forks `chmod`/`readlink` where no
-  * `libhadoop.so` is loaded. Stream ops also print each micro-batch's
-  * `durationMs` breakdown (triggerExecution = total; queryPlanning / getBatch /
+  * launched (a JFR `jdk.ProcessStart` recording per call), by command
+  * and by the code that started it ([[starter]]): Hadoop's local file
+  * system forks `chmod`/`readlink` where no `libhadoop.so` is loaded
+  * and a write runs outside `LocalFiles.scoped`. Stream ops also print
+  * each micro-batch's `durationMs` breakdown (triggerExecution = total; queryPlanning / getBatch /
   * addBatch / walCommit / commitOffsets split it) and state-shard
   * counts. An op is any registered name or a `ScaleSmoke.extraQueries`
   * variant.
@@ -61,12 +62,26 @@ object Profile {
       val secs = (System.nanoTime() - t0) / 1e9
       // the call's job and batch events are on the async listener bus
       drain()
-      val byCommand = starts.groupBy(_.getString("command").takeWhile(_ != ' '))
-        .map { case (c, es) => s"$c ${es.size}" }.toSeq.sorted.mkString(", ")
+      val byCommand = starts
+        .groupBy(e => (e.getString("command").takeWhile(_ != ' '), starter(e)))
+        .map { case ((c, by), es) => s"$c ${es.size} from $by" }.toSeq.sorted.mkString(", ")
       println(f"[profile] $op rep$rep: $secs%.2f s rows=$n jobs=${jobs.getAndSet(0)} " +
         s"forks=${starts.size} [$byCommand]")
     }
     spark.stop()
+  }
+
+  /** Who launched a process: the first frame of its stack outside the
+    * JDK and Hadoop's `Shell`, as `Class.method` (`?` without a stack). */
+  def starter(e: RecordedEvent): String = {
+    import scala.jdk.CollectionConverters._
+    Option(e.getStackTrace).toSeq.flatMap(_.getFrames.asScala).map(_.getMethod)
+      .find { m =>
+        val t = m.getType.getName
+        !t.startsWith("java.") && !t.startsWith("jdk.") &&
+          !t.startsWith("org.apache.hadoop.util.Shell")
+      }
+      .fold("?")(m => s"${m.getType.getName}.${m.getName}")
   }
 
   /** `body`'s value and the `jdk.ProcessStart` events (with stack

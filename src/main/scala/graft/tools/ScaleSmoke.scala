@@ -179,7 +179,7 @@ object ScaleSmoke {
     * parquet footer-stats row-group pruning. Round14Spec runs it at
     * sf0.001 and pins the pruning ratio. */
   def zorderWriteProbe(s: SparkSession, d: String, outRoot: String): Seq[ZorderCell] = {
-    graft.streaming.Streams.deleteRec(new java.io.File(outRoot))
+    graft.sources.LocalFiles.deleteRec(new java.io.File(outRoot))
     val zdir = s"$outRoot/zorder"
     val adir = s"$outRoot/append"
     // the z layout: one directory per planned z-file, rows grouped by

@@ -21,8 +21,9 @@ class GraftSessionSpec extends AnyFunSuite {
   }
 
   test("every writeStream in src/main starts inside withStreamShards") {
-    // the scope sizes state shards and puts checkpoints on file: onto
-    // the no-fork file system; a stream started outside it gets neither
+    // the scope sizes state shards and puts the query's checkpoint and
+    // sink files on file: onto the no-fork file system; a stream
+    // started outside it gets neither
     def closing(src: String, open: Int): Int = {
       var depth = 0
       var i = open

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.functions.Dedup
-import graft.sources.Tables
+import graft.sources.{LocalFiles, Tables}
 
 /** Round 11 fixes.
   *
@@ -175,7 +175,7 @@ class Round11Spec extends SparkSpec {
     import spark.implicits._
     import graft.streaming.Streams
     val root = new java.io.File("/tmp/graft_growth_spec")
-    Streams.deleteRec(root); root.mkdirs()
+    LocalFiles.deleteRec(root); root.mkdirs()
     val n = 12 // past the LiveStore cadence (8) -> at least one compaction
     for (id <- 0 until n) {
       Streams.appendBatchOnce(
@@ -197,7 +197,7 @@ class Round11Spec extends SparkSpec {
       Seq((0L, "duplicate")).toDF("doc_id", "h"), root.getPath, 0L)
     val again = Streams.readGrown(spark, root.getPath).get.count()
     assert(again == n.toLong, s"replayed folded batch re-appended (rows=$again)")
-    Streams.deleteRec(root)
+    LocalFiles.deleteRec(root)
   }
 
   test("components runs under a scoped conf and leaves the session width untouched") {

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
+import graft.sources.LocalFiles
 
 /** Round-14 additions: the M5/M7 bounded-value-grid percentile rewrite
   * (the r11 verdict's one `weak` item — the last O(ndv-per-group)
@@ -106,7 +107,7 @@ class Round14Spec extends SparkSpec {
     import graft.functions.Dedup
     val base = Dedup.digestIndexBase(spark, sf)
     val root = s"${graft.sources.Tables.workDir(spark)}/idx_redeliver_spec"
-    Streams.deleteRec(new java.io.File(root))
+    LocalFiles.deleteRec(new java.io.File(root))
     new java.io.File(root).mkdirs()
     // three ascending-doc_id action batches, the split-source shape
     val actions = Dedup.indexDeltaActions(spark, sf)
@@ -130,7 +131,7 @@ class Round14Spec extends SparkSpec {
     val batch = run("dedup_index_maintain")
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
     assert(once == batch)
-    Streams.deleteRec(new java.io.File(root))
+    LocalFiles.deleteRec(new java.io.File(root))
   }
 
   // ---- R29 physical z-order write (r11 verdict item 3) ----

@@ -26,6 +26,6 @@ abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   override def afterAll(): Unit =
-    try tempDirs.synchronized(tempDirs.foreach(graft.streaming.Streams.deleteRec))
+    try tempDirs.synchronized(tempDirs.foreach(graft.sources.LocalFiles.deleteRec))
     finally super.afterAll()
 }

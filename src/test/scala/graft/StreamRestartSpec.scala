@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
+import graft.sources.LocalFiles
 import graft.streaming.{Ev, Streams}
 
 /** Restart-from-checkpoint kill tests (VERDICT r8 #2; provider-
@@ -63,7 +64,7 @@ class StreamRestartSpec extends SparkSpec {
       val dst = new java.io.File(root, f"$i%02d.parquet")
       java.nio.file.Files.move(part.toPath, dst.toPath,
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      Streams.deleteRec(tmp)
+      LocalFiles.deleteRec(tmp)
       dst
     }
   }
@@ -138,7 +139,7 @@ class StreamRestartSpec extends SparkSpec {
     scoped {
       val tag = s"${name}_$provider" + (if (changelog) "_cl" else "")
       val root = new java.io.File(s"/tmp/graft_restart_$tag")
-      Streams.deleteRec(root)
+      LocalFiles.deleteRec(root)
       val allSrc = new java.io.File(root, "src_all"); allSrc.mkdirs()
       val splits = writeSplits(allSrc)
       assert(splits.size == 3, "the boundary test below assumes 3 source files")
@@ -183,7 +184,7 @@ class StreamRestartSpec extends SparkSpec {
       val got = lastPerKey(sink, valueCols)
       assert(got == expected,
         s"$tag: state restored from checkpoint must equal the uninterrupted run")
-      Streams.deleteRec(root)
+      LocalFiles.deleteRec(root)
     }
   }
 
