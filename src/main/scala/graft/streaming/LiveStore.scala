@@ -198,13 +198,22 @@ object LiveStore {
         .write.mode("overwrite").partitionBy("shard").parquet(to.getPath)
     }
 
-  private def publish(s: SparkSession, df: DataFrame, dir: String, name: String): Unit = {
+  /** Stage `df` and publish it as `dir/name`. With `skipEmpty`, a
+    * write that landed no `shard=` dir (no rows) is deleted instead
+    * and nothing is published; returns whether `name` was published. */
+  private def publish(s: SparkSession, df: DataFrame, dir: String, name: String,
+      skipEmpty: Boolean = false): Boolean = {
     val staging = new java.io.File(dir, s"_staging_$name")
     deleteRec(staging)
     writePacked(s, df, staging)
-    java.nio.file.Files.move(staging.toPath, new java.io.File(dir, name).toPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    ()
+    if (skipEmpty && subdirs(staging.getPath, "shard=").isEmpty) {
+      deleteRec(staging)
+      false
+    } else {
+      java.nio.file.Files.move(staging.toPath, new java.io.File(dir, name).toPath,
+        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      true
+    }
   }
 
   /** Merge one micro-batch of raw events into the store, exactly once
@@ -214,16 +223,18 @@ object LiveStore {
     * summed n_events would double-count — so the committed `delta_b<id>`
     * directory IS the idempotence marker: a replayed id finds its dir
     * and returns. Cost per call: one packedState agg over the batch +
-    * one write of the batch's keys. The store is never read. */
+    * one write of the batch's keys, a single job. The store is never
+    * read. An empty batch learns it is empty from that write: it
+    * publishes no delta and triggers no compaction. */
   def upsert(batch: DataFrame, batchId: Long, dir: String): Unit = {
     val s = batch.sparkSession
     new java.io.File(dir).mkdirs()
     val alreadyCommitted = new java.io.File(dir, s"delta_b$batchId").exists ||
       baseDirOf(dir).exists(_._1 >= batchId) // folded into a base already
-    if (alreadyCommitted || batch.isEmpty) return
-    publish(s,
+    if (alreadyCommitted) return
+    if (!publish(s,
       EventSourcing.packedState(batch).withColumn("shard", shardOf(dir, col("user_id"))),
-      dir, s"delta_b$batchId")
+      dir, s"delta_b$batchId", skipEmpty = true)) return // an empty batch
     // trigger on LIVE deltas only — retired ones awaiting their grace
     // deletion don't add read fan-in
     val v = baseDirOf(dir).map(_._1).getOrElse(-1L)

@@ -275,6 +275,18 @@ object Streams extends OpFamily {
   private val rocksChangelogKey =
     "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
 
+  // Every query runs in a clone of the caller's session with a new
+  // session UUID. With artifact isolation on (Spark's default) the
+  // clone's job artifact state carries that UUID, so the executor
+  // builds a fresh class loader per query, and the code generator,
+  // whose cache is keyed by (context class loader, source), compiles
+  // every task-side class of every stream again. graft's stream
+  // sessions add no artifacts, so isolation protects nothing there.
+  // Spark reads the key once, when the clone's artifact manager is
+  // first used, so scoping it around start() covers the query and
+  // leaves the caller's session as it was.
+  private val artifactIsolationKey = "spark.sql.artifact.isolation.enabled"
+
   /** Run `body` — which starts `df` — with the streaming STATE shard
     * count scoped in: a stateful operator creates
     * `spark.sql.shuffle.partitions` state stores, each committing files
@@ -290,19 +302,23 @@ object Streams extends OpFamily {
     * state-key estimate. The start runs in [[LocalFiles.scoped]], so
     * the query's files on `file:` (offsets and commits logs,
     * state-store deltas, stream metadata, `foreachBatch` sink parts)
-    * fork no process per file. The session values are restored before
+    * fork no process per file. The query's session shares the
+    * executor's default artifact state ([[artifactIsolationKey]]), so
+    * its tasks reuse the generated classes every earlier stream
+    * compiled. The session values are restored before
     * the post-stream batch stages plan. Physical planning happens at start(), and the query keeps
     * the session conf it cloned there, so scoping around the start is
     * sufficient. */
   private[graft] def withStreamShards[T](s: SparkSession, df: Dataset[_],
       rowScaleState: Boolean = false)(body: => T): T = {
     val key = "spark.sql.shuffle.partitions"
-    val prev = Seq(key, stateStoreKey, rocksChangelogKey)
+    val prev = Seq(key, stateStoreKey, rocksChangelogKey, artifactIsolationKey)
       .map(k => k -> s.conf.getOption(k))
     val total = sourceRows(s, df)
     val perBatch = total.map(r => math.max(1L, (r + sourceBatches - 1) / sourceBatches))
     s.conf.set(key, stateShardsFor(perBatch, s.conf.get(key).toInt,
       if (rowScaleState) total else None).toString)
+    s.conf.set(artifactIsolationKey, "false")
     if (s.conf.getOption("graft.stream.stateStore").contains("rocksdb")) {
       s.conf.set(stateStoreKey, rocksProvider)
       if (s.conf.getOption("graft.stream.rocksdbChangelog").contains("true"))
@@ -1460,12 +1476,14 @@ object Streams extends OpFamily {
     // land in spark.sql.warehouse.dir, which defaults to ./spark-
     // warehouse in the driver's cwd for Verify/Bench sessions
     val dimLoc = s"${Tables.workDir(s)}/$dimTable"
-    Tables.orders(s, d).filter(col("o_orderkey") > t)
-      .select("o_orderkey", "o_orderdate")
-      .repartition(dimBuckets, col("o_orderkey"))
-      .write.bucketBy(dimBuckets, "o_orderkey").sortBy("o_orderkey")
-      .option("path", dimLoc)
-      .mode("overwrite").saveAsTable(dimTable)
+    LocalFiles.scoped(s) {
+      Tables.orders(s, d).filter(col("o_orderkey") > t)
+        .select("o_orderkey", "o_orderdate")
+        .repartition(dimBuckets, col("o_orderkey"))
+        .write.bucketBy(dimBuckets, "o_orderkey").sortBy("o_orderkey")
+        .option("path", dimLoc)
+        .mode("overwrite").saveAsTable(dimTable)
+    }
     val root = s"${Tables.workDir(s)}/view_growth_" +
       Tables.datasetTag(d) + s"_$inv"
     new java.io.File(root).mkdirs()

@@ -13,9 +13,13 @@ import org.apache.spark.sql.streaming.StreamingQueryListener._
   * between groups). Each call prints its wall time, row count and
   * Spark job count; the job count is deterministic where wall time on
   * a shared host swings 2-4×, so it is the mechanism signal for "fewer
-  * jobs" changes. Next to it, each call prints the child processes it
-  * launched (a JFR `jdk.ProcessStart` recording per call), by command
-  * and by the code that started it ([[starter]]): Hadoop's local file
+  * jobs" changes. `compiles=` counts the classes Spark's code
+  * generator compiled during the call, on the driver and in local
+  * executors (`CodegenMetrics`; a cache hit compiles nothing), the
+  * deterministic signal for "generated code reused" changes. Next to
+  * it, each call prints the child processes it launched (a JFR
+  * `jdk.ProcessStart` recording per call), by command and by the code
+  * that started it ([[starter]]): Hadoop's local file
   * system forks `chmod`/`readlink` where no `libhadoop.so` is loaded
   * and a write runs outside `LocalFiles.scoped`. Stream ops also print
   * each micro-batch's `durationMs` breakdown (triggerExecution = total; queryPlanning / getBatch /
@@ -57,19 +61,25 @@ object Profile {
     drain(); jobs.set(0)
     for (op <- ops; rep <- 1 to reps) {
       spark.sharedState.cacheManager.clearCache()
+      val c0 = compiles()
       val t0 = System.nanoTime()
       val (n, starts) = processStarts(lookup(op).get(spark, sfDir).count())
       val secs = (System.nanoTime() - t0) / 1e9
+      val compiled = compiles() - c0
       // the call's job and batch events are on the async listener bus
       drain()
       val byCommand = starts
         .groupBy(e => (e.getString("command").takeWhile(_ != ' '), starter(e)))
         .map { case ((c, by), es) => s"$c ${es.size} from $by" }.toSeq.sorted.mkString(", ")
       println(f"[profile] $op rep$rep: $secs%.2f s rows=$n jobs=${jobs.getAndSet(0)} " +
-        s"forks=${starts.size} [$byCommand]")
+        s"compiles=$compiled forks=${starts.size} [$byCommand]")
     }
     spark.stop()
   }
+
+  /** Classes Spark's code generator has compiled in this JVM so far. */
+  def compiles(): Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   /** Who launched a process: the first frame of its stack outside the
     * JDK and Hadoop's `Shell`, as `Class.method` (`?` without a stack). */

@@ -169,6 +169,26 @@ class LiveStoreSpec extends SparkSpec {
     ()
   }
 
+  test("an empty batch publishes nothing, does not count toward compactEvery, and leaves its id free") {
+    import spark.implicits._
+    val dir = storeDir("graft_livestore_empty")
+    val n = LiveStore.compactEvery
+    for (id <- 0 until n)
+      LiveStore.upsert(Seq(Ev(id.toLong, ts(id), id % 3L, "click", 1.0)).toDF(), id.toLong, dir)
+    LiveStore.upsert(Seq.empty[Ev].toDF(), n.toLong, dir)
+    val names = new java.io.File(dir).list().toSet
+    assert(!names.contains(s"delta_b$n"), names)
+    assert(!names.exists(_.startsWith("_staging_")), names)
+    assert(!names.exists(_.startsWith("base_v")), s"the empty batch ran a compaction: $names")
+    // the id is still free: its redelivery with rows publishes, and
+    // that delta is the one past compactEvery
+    LiveStore.upsert(Seq(Ev(100L, ts(20), 1L, "purchase", 2.0)).toDF(), n.toLong, dir)
+    val after = new java.io.File(dir).list().toSet
+    assert(after.contains(s"delta_b$n") && after.contains(s"base_v$n"), after)
+    assert(LiveStore.lookup(spark, dir, 1L).collect().map(_.getAs[Long]("n_events")).toSeq ==
+      Seq((0 until n).count(_ % 3 == 1).toLong + 1L))
+  }
+
   test("keys -3 and 13 share shard 13 of a 16-shard store and both look up") {
     import spark.implicits._
     val dir = storeDir("graft_livestore_neg")

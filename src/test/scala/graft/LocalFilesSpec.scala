@@ -42,6 +42,11 @@ class LocalFilesSpec extends SparkSpec {
     }
   }
 
+  test("a second stream_view_maintain call, with its bucketed dimension table, forks no chmod or readlink") {
+    assert(run("stream_view_maintain").count() > 0)
+    assertNoFileForks("stream_view_maintain")(assert(run("stream_view_maintain").count() > 0))
+  }
+
   test("LiveStore upserts past compactEvery, and their compaction, fork no chmod or readlink") {
     import spark.implicits._
     val dir = tempDir("graft_files_store").getPath + "/store"
