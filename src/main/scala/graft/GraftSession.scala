@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** The one session policy every graft main and the test session share,
   * so timings, plans and conf dumps compare across tools:
@@ -19,6 +20,9 @@ import org.apache.spark.sql.SparkSession
   *
   * Any other `spark.*` conf reaches the session as a `-D` system
   * property.
+  *
+  * [[child]] is the one way graft runs a frame under settings of its
+  * own; no graft code sets a key on its caller's session.
   */
 object GraftSession {
 
@@ -45,5 +49,22 @@ object GraftSession {
         spark.conf.set("graft.workdir.assumeShared", "true")
     }
     spark
+  }
+
+  /** A clone of `s` with `conf` set on it, for frames that need
+    * settings their caller's session must not see. The clone keeps
+    * `s`'s conf, temp views and functions; nothing is restored, locked
+    * or counted, so any number of children may run beside `s`. Its
+    * frames share the executor's default artifact state: with
+    * isolation on (Spark's default) the clone's new session UUID gets
+    * a class loader of its own on the executor, and Spark's code
+    * generator, cached by (class loader, source), would compile every
+    * class those frames generate again. graft adds no artifacts, so
+    * isolation protects nothing there. */
+  def child(s: SparkSession, conf: (String, String)*): SparkSession = {
+    val c = ColumnBridge.cloneSession(s)
+    (("spark.sql.artifact.isolation.enabled" -> "false") +: conf)
+      .foreach { case (k, v) => c.conf.set(k, v) }
+    c
   }
 }

@@ -2,7 +2,8 @@ package graft.functions
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Op, OpFamily}
+import org.apache.spark.sql.graftbridge.ColumnBridge
+import graft.{GraftSession, Op, OpFamily}
 import graft.sources.Tables
 
 /** Dup-cluster resolution — the step that turns candidate PAIRS into a
@@ -73,18 +74,19 @@ object Clusters extends OpFamily {
     val shuffleKey = "spark.sql.shuffle.partitions"
     val loopParts = math.max(1L, math.min(
       s.conf.get(shuffleKey).toLong, sym.count() / 500000L + 1L))
+    // the loop's frames run on a child session at that width; the
+    // caller's session keeps its own
+    val loop = GraftSession.child(s, shuffleKey -> loopParts.toString)
+    val loopEdges = ColumnBridge.rebind(loop, sym)
+    labels = ColumnBridge.rebind(loop, labels)
     var converged = false
     var rounds = 0
-    // scoped + serialized (Tables.withScopedConf): the session conf is
-    // shared state, so the loop-width override must never interleave
-    // with another operator planning in the same session (VERDICT r10 #3)
-    Tables.withScopedConf(s, shuffleKey, loopParts.toString) {
-      while (!converged && rounds < 32) {
+    while (!converged && rounds < 32) {
       // neighbor-min: lab(n) := min(lab(n), min over edges (n,m) of
       // lab(m)). The previous label rides along as max(old_tag) (each
       // node appears exactly once in `labels`), so convergence is read
       // off the checkpointed result without an extra join+job.
-      val viaEdges = sym
+      val viaEdges = loopEdges
         .join(labels.select(col("node").as("dst"), col("lab")), "dst")
         .select(col("src").as("node"), col("lab"),
           lit(null).cast("long").as("old_tag"))
@@ -107,16 +109,15 @@ object Clusters extends OpFamily {
       val changed = jumped.filter(col("lab") < col("old")).count()
       labels = jumped.select(col("node"), col("lab"))
       converged = changed == 0L
-        rounds += 1
-        if (sys.env.contains("GRAFT_CC_DEBUG"))
-          println(s"[cc-round] $rounds changed=$changed")
-      }
+      rounds += 1
+      if (sys.env.contains("GRAFT_CC_DEBUG"))
+        println(s"[cc-round] $rounds changed=$changed")
     }
     // with pointer jumping 32 rounds covers any realistic diameter
     // (2^32 chain depth) — failing hard beats silently returning
     // non-minimal labels that would diverge from the oracle closure
     require(converged, s"connected components did not converge in $rounds rounds")
-    labels
+    ColumnBridge.rebind(s, labels)
   }
 
   // The label table is an INDEX: built once per (session, dataset) and

@@ -3,7 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.{Op, OpFamily}
+import org.apache.spark.sql.graftbridge.ColumnBridge
+import graft.{GraftSession, Op, OpFamily}
 import graft.sources.Tables
 import graft.sources.Tables.{cents, e4, e6, epochS}
 
@@ -190,22 +191,29 @@ object Relational extends OpFamily {
     """SELECT c_custkey, c_name FROM customer
       |WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)""".stripMargin
 
+  /** A child of `s` for building a grouping-set frame over a join.
+    * Spark 4.1's DetectAmbiguousSelfJoin false-positives on
+    * rollup/cube-after-join (the grouping set duplicates grouping
+    * attributes and trips the dataset-id metadata check even with zero
+    * shared lineage). The plan is unambiguous, and the check runs only
+    * while the frame is analyzed, so the frame is built on a child with
+    * the check off and handed back, analyzed, on the caller's session. */
+  private def selfJoinUnchecked(s: SparkSession): SparkSession =
+    GraftSession.child(s, "spark.sql.analyzer.failAmbiguousSelfJoin" -> "false")
+
   // R7: hierarchical totals via ROLLUP (region → nation → grand total).
-  private def rollupAgg(s: SparkSession, d: String): DataFrame = {
-    // Spark 4.1's DetectAmbiguousSelfJoin false-positives on
-    // rollup-after-join (the rollup duplicates grouping attributes and
-    // trips the dataset-id metadata check even with zero shared
-    // lineage). The plan is unambiguous — disable the heuristic check.
-    s.conf.set("spark.sql.analyzer.failAmbiguousSelfJoin", "false")
+  private def rollupAgg(caller: SparkSession, d: String): DataFrame = {
+    val s = selfJoinUnchecked(caller)
     val sup = Tables.supplier(s, d).as("sp")
     val nat = broadcast(Tables.nation(s, d)).as("nt")
     val reg = broadcast(Tables.region(s, d)).as("rg")
-    sup.join(nat, col("sp.s_nationkey") === col("nt.n_nationkey"))
+    val agg = sup.join(nat, col("sp.s_nationkey") === col("nt.n_nationkey"))
       .join(reg, col("nt.n_regionkey") === col("rg.r_regionkey"))
       .select(col("rg.r_name").as("r_name"), col("nt.n_name").as("n_name"),
         cents(col("sp.s_acctbal")).as("bal_c"))
       .rollup("r_name", "n_name")
       .agg(sum(col("bal_c")).as("sum_bal_c"), count(lit(1)).as("n_sup"))
+    ColumnBridge.rebind(caller, agg)
   }
 
   private val rollupSql =
@@ -281,16 +289,17 @@ object Relational extends OpFamily {
       |FROM p ASOF LEFT JOIN g ON p.user_id = g.user_id AND p.ts >= g.ts""".stripMargin
 
   // R13: CUBE over two dimensions (all four grouping levels).
-  private def cubeAgg(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.analyzer.failAmbiguousSelfJoin", "false")
+  private def cubeAgg(caller: SparkSession, d: String): DataFrame = {
+    val s = selfJoinUnchecked(caller)
     val cust = broadcast(Tables.customer(s, d).select("c_custkey", "c_mktsegment")).as("c")
-    Tables.orders(s, d).as("o")
+    val agg = Tables.orders(s, d).as("o")
       .join(cust, col("o.o_custkey") === col("c.c_custkey"))
       .select(col("c.c_mktsegment").as("c_mktsegment"),
         col("o.o_orderstatus").as("o_orderstatus"),
         cents(col("o.o_totalprice")).as("price_c"))
       .cube("c_mktsegment", "o_orderstatus")
       .agg(sum(col("price_c")).as("sum_price_c"), count(lit(1)).as("n"))
+    ColumnBridge.rebind(caller, agg)
   }
 
   private val cubeSql =
@@ -670,7 +679,6 @@ object Relational extends OpFamily {
   // Expression, not a UDF; args parsed with CatalystSqlParser per
   // the ColumnBridge rule.
   private def semiJoinBloom(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge
     import org.apache.spark.sql.catalyst.parser.CatalystSqlParser
     import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
     import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate

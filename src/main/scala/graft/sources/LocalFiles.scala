@@ -8,7 +8,6 @@ import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FsCon
   FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
-import org.apache.spark.sql.SparkSession
 
 /** Local files written without process launches. Without
   * `libhadoop.so`, Hadoop's `RawLocalFileSystem` forks `chmod` for
@@ -21,7 +20,7 @@ import org.apache.spark.sql.SparkSession
   * (`LocalFs`, which checkpoint file managers open through
   * `FileContext`). `.crc` sidecars, rename semantics and permissions
   * are Hadoop's (LocalFilesSpec compares both faces against Hadoop's).
-  * [[scoped]] puts both on a session's `file:` scheme around a write. */
+  * [[writeOptions]] puts both on a write's `file:` scheme. */
 object LocalFiles {
 
   /** `RawLocalFileSystem` with `setPermission` and `getFileLinkStatus`
@@ -70,50 +69,19 @@ object LocalFiles {
     override def isValidName(src: String): Boolean = true
   }
 
-  /** The session keys [[scoped]] sets. They name the `file:` scheme
-    * only, so HDFS and object stores keep their own file systems. The
-    * session's `file:` `FileSystem` is cached JVM-wide before any graft
-    * code runs, and the cache key ignores the class, so the face is
-    * reached with the cache off for the scope: the cached instance
+  /** The Hadoop keys that put `file:` on the no-fork faces: writer
+    * options for a batch write (`df.write.options(writeOptions)`;
+    * Spark merges them into the write job's Hadoop conf) or settings
+    * of the child session a stream runs on. They name the `file:`
+    * scheme only, so HDFS and object stores keep their own file
+    * systems. The session's `file:` `FileSystem` is cached JVM-wide
+    * before any graft code runs, and the cache key ignores the class,
+    * so the faces are reached with the cache off: the cached instance
     * stays Hadoop's and is never replaced. */
-  private val keys = Seq(
+  val writeOptions: Map[String, String] = Map(
     "fs.AbstractFileSystem.file.impl" -> classOf[NoForkFs].getName,
     "fs.file.impl" -> classOf[NoForkFileSystem].getName,
     "fs.file.impl.disable.cache" -> "true")
-
-  /** Open scopes per session, and the values its keys had before the
-    * first of them. */
-  private val open =
-    collection.mutable.Map.empty[SparkSession, (Int, Seq[(String, Option[String])])]
-
-  /** Run `body` with `s`'s `file:` scheme on the no-fork faces; the
-    * keys' previous values come back when the last open scope on `s`
-    * ends, also when `body` throws. Scopes nest and may overlap across
-    * threads. A streaming query keeps the keys it cloned at start(),
-    * so scoping the start covers its checkpoint and its sink. */
-  def scoped[T](s: SparkSession)(body: => T): T = {
-    open.synchronized {
-      open(s) = open.get(s) match {
-        case Some((n, prev)) => (n + 1, prev)
-        case None =>
-          val prev = keys.map { case (k, _) => k -> s.conf.getOption(k) }
-          keys.foreach { case (k, v) => s.conf.set(k, v) }
-          (1, prev)
-      }
-    }
-    try body
-    finally open.synchronized {
-      val (n, prev) = open(s)
-      if (n > 1) open(s) = (n - 1, prev)
-      else {
-        open -= s
-        prev.foreach {
-          case (k, Some(v)) => s.conf.set(k, v)
-          case (k, None) => s.conf.unset(k)
-        }
-      }
-    }
-  }
 
   /** Delete a file or directory tree (missing paths are a no-op). */
   private[graft] def deleteRec(f: File): Unit = {

@@ -8,9 +8,9 @@ import org.apache.spark.sql.types.StructType
   * typed event stream read from a real broker instead of the
   * split-file stand-in. Selected per session by config:
   *
-  *   spark.conf.set("graft.stream.source", "kafka")
-  *   spark.conf.set("graft.kafka.servers", "host1:9092,host2:9092")
-  *   spark.conf.set("graft.kafka.topic",   "events")   // default
+  *   graft.stream.source=kafka
+  *   graft.kafka.servers=host1:9092,host2:9092
+  *   graft.kafka.topic=events                    (the default)
   *
   * One flag switches every stream_* operator's source; nothing above
   * the envelope changes (reference:

@@ -70,7 +70,7 @@ object LiveStore {
   // ---- store shard layout from MEASURED source mass (opt r15) ----
   // Every upsert writes one parquet file per (task, touched shard dir)
   // plus its crc sidecar, `_temporary` dirs and `_SUCCESS` marker.
-  // [[LocalFiles.scoped]] keeps each of those from forking a `chmod`
+  // [[LocalFiles.writeOptions]] keep each of those from forking a `chmod`
   // (no `libhadoop.so`), but every file still costs a create, a commit
   // rename and a listing entry for every later read. At the
   // flat 16 shards a 2-task bench batch commits ~32 tiny files per
@@ -192,20 +192,18 @@ object LiveStore {
   private val packedCols = (packedSchema.fieldNames.toSeq :+ "shard").map(col)
 
   /** Write `df` as a store root at `to`, forking no process per file. */
-  private def writePacked(s: SparkSession, df: DataFrame, to: java.io.File): Unit =
-    LocalFiles.scoped(s) {
-      df.select(packedCols: _*)
-        .write.mode("overwrite").partitionBy("shard").parquet(to.getPath)
-    }
+  private def writePacked(df: DataFrame, to: java.io.File): Unit =
+    df.select(packedCols: _*).write.options(LocalFiles.writeOptions)
+      .mode("overwrite").partitionBy("shard").parquet(to.getPath)
 
   /** Stage `df` and publish it as `dir/name`. With `skipEmpty`, a
     * write that landed no `shard=` dir (no rows) is deleted instead
     * and nothing is published; returns whether `name` was published. */
-  private def publish(s: SparkSession, df: DataFrame, dir: String, name: String,
+  private def publish(df: DataFrame, dir: String, name: String,
       skipEmpty: Boolean = false): Boolean = {
     val staging = new java.io.File(dir, s"_staging_$name")
     deleteRec(staging)
-    writePacked(s, df, staging)
+    writePacked(df, staging)
     if (skipEmpty && subdirs(staging.getPath, "shard=").isEmpty) {
       deleteRec(staging)
       false
@@ -232,7 +230,7 @@ object LiveStore {
     val alreadyCommitted = new java.io.File(dir, s"delta_b$batchId").exists ||
       baseDirOf(dir).exists(_._1 >= batchId) // folded into a base already
     if (alreadyCommitted) return
-    if (!publish(s,
+    if (!publish(
       EventSourcing.packedState(batch).withColumn("shard", shardOf(dir, col("user_id"))),
       dir, s"delta_b$batchId", skipEmpty = true)) return // an empty batch
     // trigger on LIVE deltas only — retired ones awaiting their grace
@@ -274,7 +272,7 @@ object LiveStore {
       // no concurrent reader exists in the aside window.
       val staging = new java.io.File(dir, s"_staging_base_v$upTo")
       deleteRec(staging)
-      writePacked(s, kept, staging)
+      writePacked(kept, staging)
       val retired = new java.io.File(dir, s"_retired_base_v$upTo")
       deleteRec(retired)
       java.nio.file.Files.move(target.toPath, retired.toPath,
@@ -282,7 +280,7 @@ object LiveStore {
       java.nio.file.Files.move(staging.toPath, target.toPath,
         java.nio.file.StandardCopyOption.ATOMIC_MOVE)
       deleteRec(retired)
-    } else publish(s, kept, dir, s"base_v$upTo")
+    } else publish(kept, dir, s"base_v$upTo")
     // inputs are now RETIRED, not deleted: the new base outranks them so
     // no new reader lists them, while a scan that planned over the old
     // roots keeps its files until the NEXT compaction's grace drain. (A
@@ -340,16 +338,8 @@ object LiveStore {
     // total mass (the _nshards marker — see storeShardsFor)
     recordShards(dir, storeShardsFor(Streams.sourceRows(s, src),
       s.sessionState.conf.numShufflePartitions))
-    Streams.withStreamShards(s, src) {
-      val q = src.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-          upsert(batch, id, dir)
-        }
-        .outputMode("update")
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    }
+    Streams.drainFresh(src, s"${dir}_checkpoint", "update", rowScaleState = false)(
+      upsert(_, _, dir))
   }
 
   /** E21 `es_live_compaction`: tombstone DELETE semantics on the live

@@ -2,8 +2,11 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import graft.{Op, OpFamily}
+import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.graftbridge.ListenerBridge
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery,
+  StreamingQueryListener}
+import graft.{GraftSession, Op, OpFamily}
 import graft.sources.{LocalFiles, Tables}
 import graft.sources.LocalFiles.deleteRec
 import graft.sources.Tables.cents
@@ -179,8 +182,9 @@ object Streams extends OpFamily {
     * surge/kafka/streams/CustomRocksDBConfigSetter.scala:32) the
     * per-executor state working set must live off-heap with heap only
     * as cache, which is precisely RocksDB's contract. Provider class
-    * is read at query start, so scoping it here covers every operator
-    * without touching any of them; results are provider-invisible
+    * is read at query start, so setting it on the stream's child
+    * session ([[start]]) covers every operator without touching any of
+    * them; results are provider-invisible
     * (StreamStateStoreSpec re-proves op-level parity, and a full
     * Verify+parity run under the flag is the round-10 evidence). */
   private val stateStoreKey = "spark.sql.streaming.stateStore.providerClass"
@@ -196,8 +200,8 @@ object Streams extends OpFamily {
   // tens of thousands of rows. The measured cost per file was process
   // launches, not I/O: without `libhadoop.so` Hadoop's local FS forked
   // `chmod` per created file and `readlink` twice per rename. The
-  // checkpoint files and the sink's parquet parts now run in
-  // [[LocalFiles.scoped]] and fork nothing, so a shard costs its I/O.
+  // checkpoint files and the sink's parquet parts now go through
+  // [[LocalFiles.writeOptions]] and fork nothing, so a shard costs its I/O.
   // The old flat default (8) was itself a measured cut from the
   // session width (stream_latest 4.1 → 2.1 s),
   // but it is a CONSTANT — the exact defect class the R32 bucket
@@ -269,65 +273,94 @@ object Streams extends OpFamily {
   // the Spark analog of the reference rebuilding a died instance's
   // KTable from the Kafka changelog topic rather than re-reading the
   // log (surge/kafka/streams/AggregateStateStoreKafkaStreams.scala:35).
-  // Scoped per stream run under `graft.stream.rocksdbChangelog=true`
+  // Set per stream run under `graft.stream.rocksdbChangelog=true`
   // (rocksdb provider only); StreamRestartSpec proves restore +
   // no-replay + equal output under it.
   private val rocksChangelogKey =
     "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
 
-  // Every query runs in a clone of the caller's session with a new
-  // session UUID. With artifact isolation on (Spark's default) the
-  // clone's job artifact state carries that UUID, so the executor
-  // builds a fresh class loader per query, and the code generator,
-  // whose cache is keyed by (context class loader, source), compiles
-  // every task-side class of every stream again. graft's stream
-  // sessions add no artifacts, so isolation protects nothing there.
-  // Spark reads the key once, when the clone's artifact manager is
-  // first used, so scoping it around start() covers the query and
-  // leaves the caller's session as it was.
-  private val artifactIsolationKey = "spark.sql.artifact.isolation.enabled"
-
-  /** Run `body` — which starts `df` — with the streaming STATE shard
-    * count scoped in: a stateful operator creates
-    * `spark.sql.shuffle.partitions` state stores, each committing files
-    * EVERY micro-batch — at local bench scale that commit fan-out is
-    * ~half the wall-clock of a stream query (measured: stream_latest
-    * 4.1 s → 2.1 s warm when the flat 32 became a flat 8). Shards derive
-    * from `df`'s MEASURED per-batch row mass (its file sources' footer
-    * rows over [[sourceBatches]]; see [[stateShardsFor]] — ~500k
-    * rows/shard, min 2, capped at the session default), so production
-    * widths still grow with throughput while bench-scale batches stop
-    * paying a fixed fan-out. `rowScaleState` marks ops that keep a
-    * state key per source row: their total source mass is the
-    * state-key estimate. The start runs in [[LocalFiles.scoped]], so
-    * the query's files on `file:` (offsets and commits logs,
-    * state-store deltas, stream metadata, `foreachBatch` sink parts)
-    * fork no process per file. The query's session shares the
-    * executor's default artifact state ([[artifactIsolationKey]]), so
-    * its tasks reuse the generated classes every earlier stream
-    * compiled. The session values are restored before
-    * the post-stream batch stages plan. Physical planning happens at start(), and the query keeps
-    * the session conf it cloned there, so scoping around the start is
-    * sufficient. */
-  private[graft] def withStreamShards[T](s: SparkSession, df: Dataset[_],
-      rowScaleState: Boolean = false)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = Seq(key, stateStoreKey, rocksChangelogKey, artifactIsolationKey)
-      .map(k => k -> s.conf.getOption(k))
+  /** The state shard count [[start]] runs `df` at: [[stateShardsFor]]
+    * over its MEASURED per-batch row mass (its file sources' footer
+    * rows over [[sourceBatches]]), capped at its session's shuffle
+    * width, so production widths still grow with throughput. */
+  private[graft] def stateShards(df: Dataset[_], rowScaleState: Boolean): Int = {
+    val s = df.sparkSession
     val total = sourceRows(s, df)
     val perBatch = total.map(r => math.max(1L, (r + sourceBatches - 1) / sourceBatches))
-    s.conf.set(key, stateShardsFor(perBatch, s.conf.get(key).toInt,
-      if (rowScaleState) total else None).toString)
-    s.conf.set(artifactIsolationKey, "false")
-    if (s.conf.getOption("graft.stream.stateStore").contains("rocksdb")) {
-      s.conf.set(stateStoreKey, rocksProvider)
-      if (s.conf.getOption("graft.stream.rocksdbChangelog").contains("true"))
-        s.conf.set(rocksChangelogKey, "true")
-    }
-    try LocalFiles.scoped(s)(body) finally prev.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
-    }
+    stateShardsFor(perBatch, s.conf.get("spark.sql.shuffle.partitions").toInt,
+      if (rowScaleState) total else None)
+  }
+
+  /** Start `df` through the `foreachBatch` `sink`, in output `mode`,
+    * checkpointed at `checkpoint` — the one place graft starts a stream.
+    * The query runs on a [[GraftSession.child]] of `df`'s session, so
+    * the caller's session never sees the settings it runs under:
+    *
+    *  - the state shard count ([[stateShards]]): a stateful operator
+    *    creates that many state stores, each committing files EVERY
+    *    micro-batch (at bench scale that fan-out was ~half a stream's
+    *    wall-clock: stream_latest 4.1 → 2.1 s warm when a flat 32
+    *    became a flat 8); `rowScaleState` marks ops that keep a state
+    *    key per source row, whose total source mass is the state-key
+    *    estimate;
+    *  - the RocksDB provider and its changelog checkpointing, when the
+    *    caller asks for them;
+    *  - [[LocalFiles.writeOptions]], so the query's files on `file:`
+    *    (source, offsets and commits logs, state-store deltas, stream
+    *    metadata, sink parts) fork no process per file;
+    *  - `conf`, the op's own settings.
+    *
+    * Spark keeps stream listeners per session, so the child gets the
+    * caller's and they see the query as before. It also puts the
+    * child's stream listener bus on the context's listener bus for
+    * good; that comes off once the query has ended and its last event
+    * is delivered, from a thread of its own (see
+    * [[ListenerBridge.removeBusOf]]). */
+  def start(df: Dataset[_], checkpoint: String, mode: String, rowScaleState: Boolean,
+      conf: (String, String)*)(sink: (DataFrame, Long) => Unit): StreamingQuery = {
+    val s = df.sparkSession
+    val rocks =
+      if (!s.conf.getOption("graft.stream.stateStore").contains("rocksdb")) Nil
+      else (stateStoreKey -> rocksProvider) +:
+        (if (s.conf.getOption("graft.stream.rocksdbChangelog").contains("true"))
+          Seq(rocksChangelogKey -> "true") else Nil)
+    val shards = "spark.sql.shuffle.partitions" -> stateShards(df, rowScaleState).toString
+    val c = GraftSession.child(s, (shards +: rocks) ++ LocalFiles.writeOptions ++ conf: _*)
+    s.streams.listListeners().foreach(c.streams.addListener)
+    c.streams.addListener(new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = {
+        scala.concurrent.Future(ListenerBridge.removeBusOf(s.sparkContext, this))(
+          scala.concurrent.ExecutionContext.global)
+        ()
+      }
+    })
+    ColumnBridge.rebind(c, df).writeStream
+      .option("checkpointLocation", checkpoint)
+      .outputMode(mode)
+      .foreachBatch(sink)
+      .start()
+  }
+
+  /** [[start]], process everything available, stop. Returns the
+    * stopped query; its `recentProgress` stays readable. */
+  def drain(df: Dataset[_], checkpoint: String, mode: String, rowScaleState: Boolean,
+      conf: (String, String)*)(sink: (DataFrame, Long) => Unit): StreamingQuery = {
+    val q = start(df, checkpoint, mode, rowScaleState, conf: _*)(sink)
+    try q.processAllAvailable() finally q.stop()
+    q
+  }
+
+  /** [[drain]] from a fresh checkpoint at `checkpoint`, deleted after
+    * the stop: for ops that run their source from the start on every
+    * call. */
+  private[graft] def drainFresh(df: Dataset[_], checkpoint: String, mode: String,
+      rowScaleState: Boolean, conf: (String, String)*)(
+      sink: (DataFrame, Long) => Unit): StreamingQuery = {
+    val dir = new java.io.File(checkpoint)
+    deleteRec(dir)
+    try drain(df, checkpoint, mode, rowScaleState, conf: _*)(sink) finally deleteRec(dir)
   }
 
   /** Run a streaming DF to completion through a `foreachBatch` parquet
@@ -335,25 +368,17 @@ object Streams extends OpFamily {
     * atomically as one directory keyed by batch id; nothing
     * accumulates in driver memory, so the same harness works at any
     * result size) — and read the landed result back. State shards size
-    * from `df` itself (see [[withStreamShards]]).
+    * from `df` itself (see [[start]]).
     *
     * complete mode: each batch is the full result ⇒ read the last
     * batch. update/append: batches are deltas ⇒ read their union
     * (exactly the contents a memory sink would have accumulated). */
   def runToTable(s: SparkSession, df: DataFrame, name: String, mode: String,
       rowScaleState: Boolean = false): DataFrame = {
-    val dir = new java.io.File(s"${graft.sources.Tables.workDir(s)}/sink_$name")
+    val dir = new java.io.File(s"${Tables.workDir(s)}/sink_$name")
     deleteRec(dir)
-    withStreamShards(s, df, rowScaleState) {
-      val q = df.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-          batch.write.mode("overwrite").parquet(s"$dir/b_$id")
-          ()
-        }
-        .outputMode(mode)
-        .start()
-      q.processAllAvailable()
-      q.stop()
+    drainFresh(df, s"${Tables.workDir(s)}/checkpoint_$name", mode, rowScaleState) {
+      (batch, id) => batch.write.mode("overwrite").parquet(s"$dir/b_$id")
     }
     val batches = Option(dir.listFiles()).getOrElse(Array.empty)
       .filter(_.getName.startsWith("b_")).sortBy(_.getName.stripPrefix("b_").toLong)
@@ -699,16 +724,10 @@ object Streams extends OpFamily {
   /** Micro-batch transactional sink: each batch lands atomically as
     * one parquet directory keyed by batch id (the foreachBatch
     * exactly-once-per-batch pattern used for non-idempotent stores).
-    * Started inside [[withStreamShards]], like every stream here. */
-  def foreachBatchSink(df: DataFrame, outDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    withStreamShards(df.sparkSession, df) {
-      df.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-          batch.write.mode("overwrite").parquet(s"$outDir/batch_$id")
-          ()
-        }
-        .outputMode("update")
-        .start()
+    * Started through [[start]], like every stream here. */
+  def foreachBatchSink(df: DataFrame, outDir: String, checkpoint: String): StreamingQuery =
+    start(df, checkpoint, "update", rowScaleState = false) {
+      (batch, id) => batch.write.mode("overwrite").parquet(s"$outDir/batch_$id")
     }
 
   private val streamFoldSql =
@@ -821,7 +840,7 @@ object Streams extends OpFamily {
     // commit fan-out is 4x a stateful aggregation's at any shard
     // count — the old flat-8 era halved it to an explicit 4 (measured
     // 5.1 -> 4.0 s warm at sf0.1). The mass-derived sizing in
-    // withStreamShards now lands BELOW that at bench scale (2 shards
+    // Streams.start now lands BELOW that at bench scale (2 shards
     // for a 33k-row batch) and still scales with the measured source,
     // so the override is gone.
     runToTable(s, joined, "graft_stream_join", "append").drop("_batch_id")
@@ -1088,10 +1107,8 @@ object Streams extends OpFamily {
     new java.io.File(base).mkdirs()
     for (i <- 0 until sourceBatches) {
       val tmp = s"$base/_build_$i"
-      LocalFiles.scoped(tagged.sparkSession) {
-        tagged.filter(col("_p") === i).drop("_p")
-          .coalesce(1).write.mode("overwrite").parquet(tmp)
-      }
+      tagged.filter(col("_p") === i).drop("_p").coalesce(1)
+        .write.options(LocalFiles.writeOptions).mode("overwrite").parquet(tmp)
       val part = Option(new java.io.File(tmp).listFiles()).get
         .find(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("_")).get
       val dst = new java.io.File(base, f"$i%02d.parquet")
@@ -1250,57 +1267,51 @@ object Streams extends OpFamily {
     val outDir = new java.io.File(s"${Tables.workDir(s)}/sink_stream_admit_$inv")
     val stream = s.readStream.schema(Tables.documents(s, d).schema)
       .option("maxFilesPerTrigger", "1").parquet(docSplitSource(s, d))
-    withStreamShards(s, stream) {
-      val q = stream.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-          val s2 = batch.sparkSession
-          // NOTE (r15, measured-rejected restructure): committing the
-          // signature deltas FIRST and reading the committed parquet
-          // back for the grading joins (dropping both per-batch
-          // stableCheckpoints) looked like strictly fewer jobs — it
-          // measured MORE (56 vs 50 jobs/rep at sf0.1: the per-batch
-          // read-side listing/footer jobs outweigh the two saved
-          // checkpoint materializations) and no better on wall. The
-          // pins stay.
-          val bands = Tables.stableCheckpoint(Dedup.bandRows(batch.toDF()))
-          val digests = Tables.stableCheckpoint(batch.toDF()
-            .select(col("doc_id"), md5(col("text")).as("h")))
-          val exact = digests.alias("n")
-            .join(baseAndGrowth(s2, baseDigestsDf, digestPath).unionByName(digests).alias("o"),
-              col("o.h") === col("n.h") && col("o.doc_id") < col("n.doc_id"))
-            .groupBy(col("n.doc_id").as("doc_id"))
-            .agg(min(col("o.doc_id")).as("exact_of"))
-          val near = baseAndGrowth(s2, baseBandsDf, bandsPath).unionByName(bands).alias("a")
-            .join(bands.hint("shuffle_hash").alias("b"),
-              col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
-                col("a.doc_id") < col("b.doc_id"))
-            .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-            .distinct()
-            .groupBy(col("doc_b").as("doc_id"))
-            .agg(min(col("doc_a")).as("near_of"))
-          batch.toDF().select(col("doc_id"), col("lang"))
-            .join(exact.hint("shuffle_hash"), Seq("doc_id"), "left")
-            .join(near.hint("shuffle_hash"), Seq("doc_id"), "left")
-            .select(col("doc_id"), col("lang"),
-              when(col("exact_of").isNotNull, "exact_dup")
-                .when(col("near_of").isNotNull, "near_dup")
-                .otherwise("keep").as("verdict"),
-              coalesce(col("exact_of"), col("near_of")).as("dup_of"))
-            .write.mode("overwrite").parquet(s"$outDir/b_$id")
-          // the graded batch is now part of the corpus: grow the index —
-          // as a committed per-batch delta dir, so a redelivered batch
-          // cannot append its rows twice
-          appendBatchOnce(bands, bandsPath, id)
-          appendBatchOnce(digests, digestPath, id)
-          // bound the merge-on-read fan-in over an unbounded run (the
-          // LiveStore cadence; a no-op until deltas exceed it)
-          maybeCompactGrowth(s2, bandsPath)
-          maybeCompactGrowth(s2, digestPath)
-          ()
-        }
-        .start()
-      q.processAllAvailable()
-      q.stop()
+    val checkpoint = s"${Tables.workDir(s)}/checkpoint_stream_admit_$inv"
+    drainFresh(stream, checkpoint, "append", rowScaleState = false) { (batch, id) =>
+      val s2 = batch.sparkSession
+      // NOTE (r15, measured-rejected restructure): committing the
+      // signature deltas FIRST and reading the committed parquet
+      // back for the grading joins (dropping both per-batch
+      // stableCheckpoints) looked like strictly fewer jobs — it
+      // measured MORE (56 vs 50 jobs/rep at sf0.1: the per-batch
+      // read-side listing/footer jobs outweigh the two saved
+      // checkpoint materializations) and no better on wall. The
+      // pins stay.
+      val bands = Tables.stableCheckpoint(Dedup.bandRows(batch.toDF()))
+      val digests = Tables.stableCheckpoint(batch.toDF()
+        .select(col("doc_id"), md5(col("text")).as("h")))
+      val exact = digests.alias("n")
+        .join(baseAndGrowth(s2, baseDigestsDf, digestPath).unionByName(digests).alias("o"),
+          col("o.h") === col("n.h") && col("o.doc_id") < col("n.doc_id"))
+        .groupBy(col("n.doc_id").as("doc_id"))
+        .agg(min(col("o.doc_id")).as("exact_of"))
+      val near = baseAndGrowth(s2, baseBandsDf, bandsPath).unionByName(bands).alias("a")
+        .join(bands.hint("shuffle_hash").alias("b"),
+          col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
+            col("a.doc_id") < col("b.doc_id"))
+        .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+        .distinct()
+        .groupBy(col("doc_b").as("doc_id"))
+        .agg(min(col("doc_a")).as("near_of"))
+      batch.toDF().select(col("doc_id"), col("lang"))
+        .join(exact.hint("shuffle_hash"), Seq("doc_id"), "left")
+        .join(near.hint("shuffle_hash"), Seq("doc_id"), "left")
+        .select(col("doc_id"), col("lang"),
+          when(col("exact_of").isNotNull, "exact_dup")
+            .when(col("near_of").isNotNull, "near_dup")
+            .otherwise("keep").as("verdict"),
+          coalesce(col("exact_of"), col("near_of")).as("dup_of"))
+        .write.mode("overwrite").parquet(s"$outDir/b_$id")
+      // the graded batch is now part of the corpus: grow the index —
+      // as a committed per-batch delta dir, so a redelivered batch
+      // cannot append its rows twice
+      appendBatchOnce(bands, bandsPath, id)
+      appendBatchOnce(digests, digestPath, id)
+      // bound the merge-on-read fan-in over an unbounded run (the
+      // LiveStore cadence; a no-op until deltas exceed it)
+      maybeCompactGrowth(s2, bandsPath)
+      maybeCompactGrowth(s2, digestPath)
     }
     val batches = Option(outDir.listFiles()).getOrElse(Array.empty)
       .filter(_.getName.startsWith("b_")).map(_.getPath)
@@ -1393,7 +1404,7 @@ object Streams extends OpFamily {
       Tables.lineitem(s, d).filter(col("l_orderkey") > t)
         .select("l_orderkey", "l_returnflag", "l_extendedprice")
         .repartitionByRange(sourceBatches, col("l_orderkey"))
-        .write.mode("overwrite").parquet(tmp)
+        .write.options(LocalFiles.writeOptions).mode("overwrite").parquet(tmp)
       val parts = Option(new java.io.File(tmp).listFiles()).get
         .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("_"))
         .sortBy(_.getName)
@@ -1476,43 +1487,30 @@ object Streams extends OpFamily {
     // land in spark.sql.warehouse.dir, which defaults to ./spark-
     // warehouse in the driver's cwd for Verify/Bench sessions
     val dimLoc = s"${Tables.workDir(s)}/$dimTable"
-    LocalFiles.scoped(s) {
-      Tables.orders(s, d).filter(col("o_orderkey") > t)
-        .select("o_orderkey", "o_orderdate")
-        .repartition(dimBuckets, col("o_orderkey"))
-        .write.bucketBy(dimBuckets, "o_orderkey").sortBy("o_orderkey")
-        .option("path", dimLoc)
-        .mode("overwrite").saveAsTable(dimTable)
-    }
+    Tables.orders(s, d).filter(col("o_orderkey") > t)
+      .select("o_orderkey", "o_orderdate")
+      .repartition(dimBuckets, col("o_orderkey"))
+      .write.bucketBy(dimBuckets, "o_orderkey").sortBy("o_orderkey")
+      .options(LocalFiles.writeOptions).option("path", dimLoc)
+      .mode("overwrite").saveAsTable(dimTable)
     val root = s"${Tables.workDir(s)}/view_growth_" +
       Tables.datasetTag(d) + s"_$inv"
     new java.io.File(root).mkdirs()
     val srcDir = liDeltaSplitSource(s, d, t)
     val stream = s.readStream.schema(Tables.read(s, srcDir).schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    try {
-      // Spark stopped REPORTING sorted-bucket scan ordering by default
-      // (SPARK-28632: wrong when a bucket spans files); the legacy
-      // flag restores it and still verifies ONE file per bucket before
-      // claiming order — which the count-pinned repartition above
-      // guarantees. Scoped: the stream's cloned session inherits it at
-      // start, nothing else in the JVM sees it.
-      Tables.withScopedConf(s,
-        "spark.sql.legacy.bucketedTableScan.outputOrdering", "true") {
-        withStreamShards(s, stream) {
-          val q = stream.writeStream
-            .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-              val s2 = batch.sparkSession
-              appendBatchOnce(
-                Relational.viewAgg(batch.toDF(), s2.table(dimTable)), root, id)
-              maybeCompactGrowth(s2, root)
-              ()
-            }
-            .start()
-          q.processAllAvailable()
-          q.stop()
-        }
-      }
+    // Spark stopped REPORTING sorted-bucket scan ordering by default
+    // (SPARK-28632: wrong when a bucket spans files); the legacy flag
+    // restores it and still verifies ONE file per bucket before
+    // claiming order — which the count-pinned repartition above
+    // guarantees. Set on the stream's child session: the query's
+    // cloned session inherits it, nothing else in the JVM sees it.
+    val checkpoint = s"${Tables.workDir(s)}/checkpoint_view_maintain_$inv"
+    try drainFresh(stream, checkpoint, "append", rowScaleState = false,
+        "spark.sql.legacy.bucketedTableScan.outputOrdering" -> "true") { (batch, id) =>
+      val s2 = batch.sparkSession
+      appendBatchOnce(Relational.viewAgg(batch, s2.table(dimTable)), root, id)
+      maybeCompactGrowth(s2, root)
     } finally {
       // table LOCATIONS outlive the per-JVM in-memory catalog
       // (LOCATION_ALREADY_EXISTS on rerun) — unique name per
@@ -1537,17 +1535,10 @@ object Streams extends OpFamily {
     val srcDir = idxDeltaSplitSource(s, d)
     val stream = s.readStream.schema(Tables.read(s, srcDir).schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    withStreamShards(s, stream) {
-      val q = stream.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-          val s2 = batch.sparkSession
-          appendBatchOnce(batch.toDF().withColumn("seq", lit(id)), root, id)
-          maybeCompactGrowth(s2, root)
-          ()
-        }
-        .start()
-      q.processAllAvailable()
-      q.stop()
+    val checkpoint = s"${Tables.workDir(s)}/checkpoint_index_maintain_$inv"
+    drainFresh(stream, checkpoint, "append", rowScaleState = false) { (batch, id) =>
+      appendBatchOnce(batch.withColumn("seq", lit(id)), root, id)
+      maybeCompactGrowth(batch.sparkSession, root)
     }
     maintainedIndexView(s, base, root)
   }

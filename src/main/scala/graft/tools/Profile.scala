@@ -21,7 +21,7 @@ import org.apache.spark.sql.streaming.StreamingQueryListener._
   * `jdk.ProcessStart` recording per call), by command and by the code
   * that started it ([[starter]]): Hadoop's local file
   * system forks `chmod`/`readlink` where no `libhadoop.so` is loaded
-  * and a write runs outside `LocalFiles.scoped`. Stream ops also print
+  * and a write misses `LocalFiles.writeOptions`. Stream ops also print
   * each micro-batch's `durationMs` breakdown (triggerExecution = total; queryPlanning / getBatch /
   * addBatch / walCommit / commitOffsets split it) and state-shard
   * counts. An op is any registered name or a `ScaleSmoke.extraQueries`
@@ -107,7 +107,10 @@ object Profile {
       try {
         rec.dump(f)
         import scala.jdk.CollectionConverters._
-        (out, RecordingFile.readAllEvents(f).asScala.toSeq)
+        // a dump holds the events of every recording running beside
+        // this one (a JVM-wide -XX:StartFlightRecording), not just ours
+        (out, RecordingFile.readAllEvents(f).asScala.toSeq
+          .filter(_.getEventType.getName == "jdk.ProcessStart"))
       } finally java.nio.file.Files.delete(f)
     } finally rec.close()
   }

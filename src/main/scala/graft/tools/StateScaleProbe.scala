@@ -42,38 +42,29 @@ object StateScaleProbe {
     var stateRows = 0L
     var stateMem = 0L
     var custom = "{}"
-    val stream = admitStream(s, d)
-    graft.streaming.Streams.withStreamShards(s, stream) {
-      val q = stream.writeStream
-        .foreachBatch {
-          (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-           id: Long) =>
-            // count batches HERE: recentProgress is a bounded ring
-            // buffer (default 100 entries), so long runs undercount if
-            // read off the progress log (ADVICE r10)
-            val n = b.count()
-            rows += n
-            if (n > 0) batches += 1
-            ()
-        }
-        .outputMode("append")
-        .start()
-      q.processAllAvailable()
-      // recentProgress is a bounded ring buffer; the LAST entry with a
-      // state operator carries the final cumulative state metrics
-      q.recentProgress.reverseIterator
-        .find(_.stateOperators.nonEmpty)
-        .foreach { p =>
-          val so = p.stateOperators.head
-          stateRows = so.numRowsTotal
-          stateMem = so.memoryUsedBytes
-          custom = scala.jdk.CollectionConverters
-            .MapHasAsScala(so.customMetrics).asScala.toSeq.sortBy(_._1)
-            .map { case (k, v) => s""""$k":${v.longValue}""" }
-            .mkString("{", ",", "}")
-        }
-      q.stop()
+    val q = graft.streaming.Streams.drainFresh(admitStream(s, d),
+        s"${graft.sources.Tables.workDir(s)}/checkpoint_state_scale", "append",
+        rowScaleState = false) { (b, _) =>
+      // count batches HERE: recentProgress is a bounded ring buffer
+      // (default 100 entries), so long runs undercount if read off the
+      // progress log (ADVICE r10)
+      val n = b.count()
+      rows += n
+      if (n > 0) batches += 1
     }
+    // recentProgress is a bounded ring buffer; the LAST entry with a
+    // state operator carries the final cumulative state metrics
+    q.recentProgress.reverseIterator
+      .find(_.stateOperators.nonEmpty)
+      .foreach { p =>
+        val so = p.stateOperators.head
+        stateRows = so.numRowsTotal
+        stateMem = so.memoryUsedBytes
+        custom = scala.jdk.CollectionConverters
+          .MapHasAsScala(so.customMetrics).asScala.toSeq.sortBy(_._1)
+          .map { case (k, v) => s""""$k":${v.longValue}""" }
+          .mkString("{", ",", "}")
+      }
     (rows, stateRows, stateMem, custom, batches)
   }
 

@@ -1,6 +1,8 @@
 package org.apache.spark.graftbridge
 
+import scala.jdk.CollectionConverters._
 import org.apache.spark.SparkContext
+import org.apache.spark.util.ListenerBus
 
 /** `SparkContext.listenerBus` is `private[spark]`; metrics probes that
   * read SparkListener-accumulated counters (the z-order write probe's
@@ -15,4 +17,20 @@ import org.apache.spark.SparkContext
 object ListenerBridge {
   def waitUntilEmpty(sc: SparkContext, timeoutMs: Long): Unit =
     sc.listenerBus.waitUntilEmpty(timeoutMs)
+
+  /** The listeners on `sc`'s bus, over all its queues. */
+  def listeners(sc: SparkContext): Seq[AnyRef] = sc.listenerBus.listeners.asScala.toSeq
+
+  /** Take the listener bus that delivers to `listener` off `sc`'s bus.
+    * Spark puts a session's stream listener bus on the context's bus
+    * when the session starts its first stream, and never takes it off.
+    * Not for a listener thread: the context's bus locks itself while it
+    * stops, and stopping joins every listener thread. */
+  def removeBusOf(sc: SparkContext, listener: AnyRef): Unit =
+    sc.listenerBus.listeners.asScala
+      .filter {
+        case b: ListenerBus[_, _] => b.listeners.contains(listener)
+        case _ => false
+      }
+      .foreach(sc.listenerBus.removeListener)
 }

@@ -1,8 +1,10 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.streaming.runtime.StreamingRelation
 
 /** Column ⇄ Expression bridge.
   *
@@ -20,8 +22,25 @@ object ColumnBridge {
   /** DataFrame from a (resolved) logical plan — `Dataset.ofRows` is
     * likewise `private[sql]`; needed to hand custom logical nodes to
     * the planner. */
-  def dataFrame(spark: org.apache.spark.sql.SparkSession,
-      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): org.apache.spark.sql.DataFrame =
+  def dataFrame(spark: SparkSession, plan: LogicalPlan): DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** A copy of `spark`'s conf, temp views and functions on a new
+    * session UUID, what Spark gives every streaming query
+    * (`cloneSession` is `private[sql]`). */
+  def cloneSession(spark: SparkSession): SparkSession =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].cloneSession()
+
+  /** `df`'s analyzed plan as a frame on `spark`, not analyzed again.
+    * A file-source stream's `DataSource` keeps the session it was read
+    * on and writes its source log through that session's Hadoop conf,
+    * so each one is re-pointed at `spark` too. */
+  def rebind(spark: SparkSession, df: Dataset[_]): DataFrame = {
+    val plan = df.queryExecution.analyzed.transform {
+      case r: StreamingRelation => r.copy(dataSource = r.dataSource.copy(sparkSession = spark))
+    }
+    plan.setAnalyzed()
+    dataFrame(spark, plan)
+  }
 }

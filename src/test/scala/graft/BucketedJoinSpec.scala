@@ -31,8 +31,7 @@ class BucketedJoinSpec extends SparkSpec {
       .mode("overwrite").saveAsTable(ordTable)
     // disable auto-broadcast so the join genuinely exercises the
     // co-located path (a broadcast would hide the bucketing)
-    graft.sources.Tables.withScopedConf(spark,
-      "spark.sql.autoBroadcastJoinThreshold", "-1") {
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val joined = spark.table(liTable)
         .join(spark.table(ordTable),
           col("l_orderkey") === col("o_orderkey"))
@@ -59,8 +58,7 @@ class BucketedJoinSpec extends SparkSpec {
   }
 
   test("C9: the bucketed layout also carries a second, different consumer exchange-free") {
-    graft.sources.Tables.withScopedConf(spark,
-      "spark.sql.autoBroadcastJoinThreshold", "-1") {
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       // a groupBy on the bucket key reuses the same layout: no exchange
       val agg = spark.table(liTable)
         .groupBy("l_orderkey").agg(sum(col("l_quantity")).as("q"))

@@ -46,6 +46,7 @@ class GraftEngineSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[Ev]
     val q = engine.streamingState(input.toDS()).writeStream
+      .option("checkpointLocation", tempDir("graft_checkpoint").getPath)
       .format("memory").queryName("engine_stream").outputMode("update").start()
     input.addData(Ev(1, ts(0), 9, "signup", 0.0))
     q.processAllAvailable()

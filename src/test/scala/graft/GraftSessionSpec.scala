@@ -20,32 +20,36 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(hits == Seq("GraftSession.scala"))
   }
 
-  test("every writeStream in src/main starts inside withStreamShards") {
-    // the scope sizes state shards and puts the query's checkpoint and
-    // sink files on file: onto the no-fork file system; a stream
-    // started outside it gets neither
-    def closing(src: String, open: Int): Int = {
-      var depth = 0
-      var i = open
-      while ({ depth += (src(i) match { case '{' => 1 case '}' => -1 case _ => 0 }); depth > 0 })
-        i += 1
-      i
-    }
-    val sources = scalaFiles("src/main")
-    val unscoped = sources.flatMap { f =>
-      val src = java.nio.file.Files.readString(f)
-      def all(s: String) = Iterator.iterate(src.indexOf(s))(i => src.indexOf(s, i + 1))
-        .takeWhile(_ >= 0).toList
-      val scopes = all("withStreamShards(").map { at =>
-        val open = src.indexOf('{', at)
-        (open, closing(src, open))
+  /** `file:line: text` of each line of a `src/main` source that
+    * contains one of `needles`. */
+  private def linesWith(needles: String*): Seq[String] =
+    scalaFiles("src/main").flatMap { f =>
+      java.nio.file.Files.readAllLines(f).asScala.zipWithIndex.collect {
+        case (l, i) if needles.exists(l.contains) => s"${f.getFileName}:${i + 1}: ${l.trim}"
       }
-      all(".writeStream").filterNot { w =>
-        val start = src.indexOf(".start()", w)
-        scopes.exists { case (a, b) => a < w && start >= 0 && start < b }
-      }.map(w => s"${f.getFileName}:${src.take(w).count(_ == '\n') + 1}")
     }
-    assert(sources.nonEmpty && unscoped.isEmpty, unscoped)
+
+  test("the one writeStream in src/main is in Streams.start") {
+    // start runs the query on a child session that sizes its state
+    // shards and puts its checkpoint and sink files on file: onto the
+    // no-fork file system; a stream started elsewhere gets neither
+    val starts = linesWith(".writeStream")
+    assert(starts.size == 1 && starts.head.startsWith("Streams.scala:"), starts)
+    val src = java.nio.file.Files.readString(
+      java.nio.file.Paths.get("src/main/scala/graft/streaming/Streams.scala"))
+    val at = src.indexOf(".writeStream")
+    assert(src.lastIndexOf("  def ", at) == src.indexOf("  def start("), "not in Streams.start")
+  }
+
+  test("conf.set and conf.unset in src/main appear only in GraftSession and Tables.events") {
+    // graft runs frames that need settings of their own on a
+    // GraftSession.child and never changes its caller's conf
+    val sets = linesWith("conf.set", "conf.unset")
+    val elsewhere = sets.filterNot(_.startsWith("GraftSession.scala:"))
+    // Tables.events sets nanosAsLong on the caller's session, the one
+    // that plans its parquet scan
+    assert(sets.nonEmpty && elsewhere.size == 1 && elsewhere.head.startsWith("Tables.scala:") &&
+      elsewhere.head.contains("spark.sql.legacy.parquet.nanosAsLong"), elsewhere)
   }
 
   test("the test session is the factory's, at the census width") {

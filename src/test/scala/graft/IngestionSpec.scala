@@ -30,7 +30,9 @@ class IngestionSpec extends SparkSpec {
     // format("kafka") wiring uses, not a spec-local copy
     val parsed = graft.streaming.KafkaWire.decode(input.toDS().toDF())
     val folded = graft.streaming.Streams.foldEvents(parsed)
-    val q = folded.writeStream.format("memory").queryName("kafka_shape_test")
+    val q = folded.writeStream
+      .option("checkpointLocation", tempDir("graft_checkpoint").getPath)
+      .format("memory").queryName("kafka_shape_test")
       .outputMode("update").start()
     input.addData(rec(Ev(1, ts(0), 3, "signup", 0.0)), rec(Ev(2, ts(1), 3, "purchase", 2.50)))
     q.processAllAvailable()

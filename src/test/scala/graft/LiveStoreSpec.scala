@@ -39,6 +39,7 @@ class LiveStoreSpec extends SparkSpec {
     val dir = root.getPath + "/store"
     val input = MemoryStream[Ev]
     val q = input.toDS().toDF().writeStream
+      .option("checkpointLocation", tempDir("graft_checkpoint").getPath)
       .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
         LiveStore.upsert(b, id, dir)
       }

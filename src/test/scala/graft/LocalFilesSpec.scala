@@ -20,8 +20,7 @@ import graft.streaming.{Ev, LiveStore, Streams}
   * status. */
 class LocalFilesSpec extends SparkSpec {
 
-  private val scopeKeys =
-    Seq("fs.AbstractFileSystem.file.impl", "fs.file.impl", "fs.file.impl.disable.cache")
+  private val scopeKeys = LocalFiles.writeOptions.keys.toSeq
 
   /** The `chmod` and `readlink` processes among `starts`, with who
     * started each. */
@@ -72,32 +71,30 @@ class LocalFilesSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[Ev]
     val before = scopeKeys.map(spark.conf.getOption)
-    val q = Streams.foreachBatchSink(input.toDS().toDF(), tempDir("graft_febatch_fs").getPath)
-    assert(scopeKeys.map(spark.conf.getOption) == before, "the session values must be restored")
+    val out = tempDir("graft_febatch_fs").getPath
+    val q = Streams.foreachBatchSink(input.toDS().toDF(), out, s"$out/_checkpoint")
+    assert(scopeKeys.map(spark.conf.getOption) == before, "the session values must be untouched")
     try assertNoFileForks("foreachBatchSink") {
       input.addData(Ev(1, new java.sql.Timestamp(0L), 1, "click", 1.0))
       q.processAllAvailable()
     } finally q.stop()
   }
 
-  test("the scope restores its keys when its body throws and leaves the JVM's FileSystem cache alone") {
+  test("a LocalFiles write leaves the caller's conf and the JVM's cached file: FileSystem as they were") {
     val root = new URI("file:///")
     val cached = FileSystem.get(root, spark.sessionState.newHadoopConf())
-    spark.conf.set("fs.file.impl.disable.cache", "false")
-    try {
+    withConf("fs.file.impl.disable.cache" -> "false") {
       val before = scopeKeys.map(spark.conf.getOption)
-      var inside: FileSystem = null
-      intercept[IllegalStateException](LocalFiles.scoped(spark) {
-        LocalFiles.scoped(spark)(())
-        inside = FileSystem.get(root, spark.sessionState.newHadoopConf())
-        throw new IllegalStateException("body failed")
-      })
+      val write = spark.sessionState.newHadoopConfWithOptions(LocalFiles.writeOptions)
+      val inside = FileSystem.get(root, write)
+      spark.range(3).write.options(LocalFiles.writeOptions)
+        .parquet(tempDir("graft_files_write").getPath + "/t")
       assert(inside.isInstanceOf[LocalFiles.NoForkFileSystem])
       assert(!(inside eq cached))
       assert(scopeKeys.map(spark.conf.getOption) == before)
       assert(FileSystem.get(root, spark.sessionState.newHadoopConf()) eq cached)
       assert(FileSystem.get(root, new Configuration()) eq cached)
-    } finally spark.conf.unset("fs.file.impl.disable.cache")
+    }
   }
 
   /** A `FileSystem` of class `impl` on `file:`, outside the JVM cache,

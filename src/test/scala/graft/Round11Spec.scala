@@ -20,10 +20,6 @@ import graft.sources.{LocalFiles, Tables}
   *   - D15 dedup_recall grades candidates against the truth within
   *     ONE population: under sampling the candidate side is gated by
   *     the same doc sample.
-  *
-  * Tables.withScopedConf (VERDICT r10 what's-wrong #3): session-conf
-  * overrides inside operator bodies are scoped + serialized, never a
-  * hidden channel between concurrently planned ops.
   */
 class Round11Spec extends SparkSpec {
 
@@ -34,7 +30,7 @@ class Round11Spec extends SparkSpec {
   test("ssjoin sample rate is 1.0 at oracle scales; conf overrides it") {
     // sf0.001 has far fewer docs than the 500k target -> full rate
     assert(Dedup.ssjoinSampleE6(spark, sf) == 1000000L)
-    Tables.withScopedConf(spark, "graft.ssjoin.sampleE6", "123456") {
+    withConf("graft.ssjoin.sampleE6" -> "123456") {
       assert(Dedup.ssjoinSampleE6(spark, sf) == 123456L)
     }
     assert(Dedup.ssjoinSampleE6(spark, sf) == 1000000L)
@@ -55,8 +51,7 @@ class Round11Spec extends SparkSpec {
       val expected = pairSet(Dedup.exactJoinTruth(spark, sf)
         .filter(Dedup.inSsjoinSample(col("doc_a"), rate) &&
           Dedup.inSsjoinSample(col("doc_b"), rate)))
-      val sampled = Tables.withScopedConf(
-          spark, "graft.ssjoin.sampleE6", rate.toString) {
+      val sampled = withConf("graft.ssjoin.sampleE6" -> rate.toString) {
         pairSet(Dedup.exactJoinTruth(spark, sf))
       }
       assert(sampled == expected, s"rate=$rate")
@@ -66,8 +61,7 @@ class Round11Spec extends SparkSpec {
 
   test("dedup_recall under sampling grades candidates within the same doc sample") {
     val rate = 400000L
-    val row = Tables.withScopedConf(
-        spark, "graft.ssjoin.sampleE6", rate.toString) {
+    val row = withConf("graft.ssjoin.sampleE6" -> rate.toString) {
       run("dedup_recall").collect().head
     }
     val expectedTrue = Dedup.exactJoinTruth(spark, sf)
@@ -78,42 +72,6 @@ class Round11Spec extends SparkSpec {
         Dedup.inSsjoinSample(col("doc_b"), rate)).count()
     assert(row.getLong(row.fieldIndex("n_true")) == expectedTrue)
     assert(row.getLong(row.fieldIndex("n_cand")) == expectedCand)
-  }
-
-  test("withScopedConf restores prior values and unsets previously-missing keys") {
-    val key = "graft.test.scopedconf"
-    assert(spark.conf.getOption(key).isEmpty)
-    Tables.withScopedConf(spark, key, "inner") {
-      assert(spark.conf.get(key) == "inner")
-    }
-    assert(spark.conf.getOption(key).isEmpty, "missing key must be unset on exit")
-    spark.conf.set(key, "orig")
-    try {
-      Tables.withScopedConf(spark, key, "inner2") {
-        assert(spark.conf.get(key) == "inner2")
-      }
-      assert(spark.conf.get(key) == "orig", "prior value must be restored")
-    } finally spark.conf.unset(key)
-  }
-
-  test("withScopedConf serializes concurrent same-key users (no interleaved values)") {
-    val key = "graft.test.scopedconf.race"
-    val failures = new java.util.concurrent.atomic.AtomicInteger(0)
-    val threads = (1 to 4).map { tid =>
-      new Thread(() => {
-        var i = 0
-        while (i < 50) {
-          Tables.withScopedConf(spark, key, s"t$tid") {
-            if (spark.conf.get(key) != s"t$tid") failures.incrementAndGet()
-          }
-          i += 1
-        }
-      })
-    }
-    threads.foreach(_.start())
-    threads.foreach(_.join())
-    assert(failures.get() == 0, s"${failures.get()} interleaved observations")
-    assert(spark.conf.getOption(key).isEmpty)
   }
 
   test("eval-sample thinning is identity at oracle scales and a strict subset when engaged") {
@@ -203,9 +161,10 @@ class Round11Spec extends SparkSpec {
   test("components runs under a scoped conf and leaves the session width untouched") {
     import spark.implicits._
     val before = spark.conf.get("spark.sql.shuffle.partitions")
-    val labs = graft.functions.Clusters.components(
-        Seq((2L, 1L), (3L, 2L)).toDF("doc_a", "doc_b"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val frame = graft.functions.Clusters.components(
+      Seq((2L, 1L), (3L, 2L)).toDF("doc_a", "doc_b"))
+    assert(frame.sparkSession eq spark, "the labels must come back on the caller's session")
+    val labs = frame.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(labs == Map(1L -> 1L, 2L -> 1L, 3L -> 1L))
     assert(spark.conf.get("spark.sql.shuffle.partitions") == before)
   }

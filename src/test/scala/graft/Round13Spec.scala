@@ -184,8 +184,7 @@ class Round13Spec extends SparkSpec {
             .otherwise(col("text"))).as("new_h"))
         .write.bucketBy(8, "doc_id").sortBy("doc_id")
         .mode("overwrite").saveAsTable(newT)
-      graft.sources.Tables.withScopedConf(spark,
-        "spark.sql.autoBroadcastJoinThreshold", "-1") {
+      withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
         val diff = spark.table(oldT)
           .join(spark.table(newT), Seq("doc_id"), "full_outer")
           .filter(col("old_h").isNull || col("new_h").isNull ||

@@ -190,9 +190,8 @@ class Round14Spec extends SparkSpec {
            |JOIN $dim d ON b.l_partkey = d.p_partkey
            |WHERE d.p_size = 1""".stripMargin)
         .queryExecution.executedPlan.toString
-      graft.sources.Tables.withScopedConf(spark, "spark.sql.cbo.enabled", "true") {
-        graft.sources.Tables.withScopedConf(spark,
-            "spark.sql.autoBroadcastJoinThreshold", threshold.toString) {
+      withConf("spark.sql.cbo.enabled" -> "true") {
+        withConf("spark.sql.autoBroadcastJoinThreshold" -> threshold.toString) {
           val before = plan()
           assert(!before.contains("BroadcastHashJoin"),
             s"without stats the filtered dim must not broadcast:\n$before")
@@ -213,7 +212,7 @@ class Round14Spec extends SparkSpec {
       assert(math.abs(info("distinct_count").toLong - exactNdv) <=
         math.max(2L, exactNdv / 10))
       // rowCount surfaces in plan stats only under CBO
-      graft.sources.Tables.withScopedConf(spark, "spark.sql.cbo.enabled", "true") {
+      withConf("spark.sql.cbo.enabled" -> "true") {
         val rowCount = spark.table(dim).queryExecution.optimizedPlan
           .stats.rowCount.get
         assert(rowCount == BigInt(spark.table(dim).count()))
@@ -265,16 +264,10 @@ class Round14Spec extends SparkSpec {
       val stream = spark.readStream
         .schema(spark.read.parquet(srcDir).schema)
         .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      Streams.withStreamShards(spark, stream) {
-        val q = stream
-          .writeStream.option("checkpointLocation", ckpt)
-          .foreachBatch {
-            (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-              LiveStore.upsert(batch.toDF(), id, storeDir)
-          }
-          .outputMode("update").start()
-        q.processAllAvailable(); q.stop()
+      Streams.drain(stream, ckpt, "update", rowScaleState = false) { (batch, id) =>
+        LiveStore.upsert(batch, id, storeDir)
       }
+      ()
     }
     // uninterrupted reference
     val refStore = s"$root/store_ref"

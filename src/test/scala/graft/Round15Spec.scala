@@ -105,9 +105,8 @@ class Round15Spec extends SparkSpec {
       // the legacy flag restores sorted-bucket ordering REPORTING
       // (SPARK-28632 turned it off by default) — Spark still verifies
       // one file per bucket before claiming order
-      Tables.withScopedConf(spark,
-        "spark.sql.legacy.bucketedTableScan.outputOrdering", "true") {
-      Tables.withScopedConf(spark, "spark.sql.autoBroadcastJoinThreshold", "-1") {
+      withConf("spark.sql.legacy.bucketedTableScan.outputOrdering" -> "true",
+          "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
         val fact = Tables.lineitem(spark, sf)
           .select("l_orderkey", "l_returnflag", "l_extendedprice")
         val df = graft.operators.Relational.viewAgg(fact, spark.table(dim))
@@ -132,7 +131,6 @@ class Round15Spec extends SparkSpec {
             .select("o_orderkey", "o_orderdate"))
           .collect().map(_.toSeq).toSet
         assert(viaTable == plain)
-      }
       }
     } finally {
       spark.sql(s"DROP TABLE IF EXISTS $dim")
@@ -190,13 +188,8 @@ class Round15Spec extends SparkSpec {
       val stream = spark.readStream
         .schema(spark.read.parquet(srcDir).schema)
         .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      Streams.withStreamShards(spark, stream) {
-        val q = stream
-          .writeStream.option("checkpointLocation", ckpt)
-          .foreachBatch { (b: Dataset[Row], id: Long) => body(b.toDF(), id) }
-          .start()
-        q.processAllAvailable(); q.stop()
-      }
+      Streams.drain(stream, ckpt, "append", rowScaleState = false)(body)
+      ()
     }
     def killMatrix(name: String, src: DataFrame,
         rangeCols: Seq[org.apache.spark.sql.Column],
@@ -234,7 +227,7 @@ class Round15Spec extends SparkSpec {
       rec(root)
     }
     for (provider <- Seq("default", "rocksdb")) {
-      Tables.withScopedConf(spark, "graft.stream.stateStore", provider) {
+      withConf("graft.stream.stateStore" -> provider) {
         // D21: the maintained digest index's growth store
         val base = graft.functions.Dedup.digestIndexBase(spark, sf)
         killMatrix(s"idx_$provider",

@@ -55,39 +55,37 @@ class Round17Spec extends SparkSpec {
     assert(LiveStore.storeShards(root.getPath) == 5)
   }
 
-  test("withStreamShards sizes from the started frame's file-source mass") {
+  test("a stream's state shards size from the started frame's file-source mass") {
     import graft.streaming.{Ev, Streams}
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import org.apache.spark.sql.functions.lit
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
     val root = tempDir("graft_mass")
-    try {
-      spark.conf.set(key, "32")
+    withConf(key -> "32") {
       // a split dir of 3 files, 3,000,006 footer rows ⇒ 1,000,002
       // rows/batch ⇒ 3 shards (a constant column keeps the files tiny)
       val dir = s"$root/split"
       spark.range(0L, 3000006L, 1L, Streams.sourceBatches)
         .select(lit(0).as("x")).write.parquet(dir)
       val big = splitFrame(dir)
-      var seen = -1
-      Streams.withStreamShards(spark, big) { seen = spark.conf.get(key).toInt }
-      assert(seen == 3)
-      // row-scale state: the total mass is the state-key estimate
-      Streams.withStreamShards(spark, big, rowScaleState = true) {
-        seen = spark.conf.get(key).toInt
+      assert(Streams.stateShards(big, rowScaleState = false) == 3)
+      // the query's own session runs at that width; the caller's keeps 32
+      val seen = collection.mutable.Set.empty[String]
+      Streams.drain(big, s"$root/checkpoint", "append", rowScaleState = false) {
+        (batch, _) => seen += batch.sparkSession.conf.get(key)
       }
-      assert(seen == 32)
-      assert(spark.conf.get(key) == "32", "the session width must be restored")
+      assert(seen == Set("3"))
+      assert(spark.conf.get(key) == "32", "the caller's width must stay as it was")
+      // row-scale state: the total mass is the state-key estimate
+      assert(Streams.stateShards(big, rowScaleState = true) == 32)
       // a frame with no file source has unknown mass: the flat default,
       // never what the previous file-source run measured
       val mem = MemoryStream[Ev].toDF()
       assert(Streams.sourceRows(spark, mem).isEmpty)
-      Streams.withStreamShards(spark, mem) { seen = spark.conf.get(key).toInt }
-      assert(seen == 8)
-    } finally spark.conf.set(key, prev)
+      assert(Streams.stateShards(mem, rowScaleState = false) == 8)
+    }
   }
 
   private def splitFrame(dir: String) =

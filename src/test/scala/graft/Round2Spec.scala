@@ -113,7 +113,9 @@ class Round2Spec extends SparkSpec {
     val input = MemoryStream[Ev]
     val agg = Windows.matcherCounts(
       input.toDS().toDF().withWatermark("ts", "1 hour"))
-    val q = agg.writeStream.format("memory").queryName("signal_stream")
+    val q = agg.writeStream
+      .option("checkpointLocation", tempDir("graft_checkpoint").getPath)
+      .format("memory").queryName("signal_stream")
       .outputMode("complete").start()
     input.addData(
       Ev(1, ts(0), 9, "click", 1.0), Ev(2, ts(5), 9, "click", 1.0),

@@ -67,7 +67,9 @@ class Round3Spec extends SparkSpec {
     val out = eng.streamingCommands(input.toDS(), snapshot)
       .map(o => (o.command.event_id, o.aggregateId, o.accepted))
       .toDF("event_id", "user_id", "accepted")
-    val q = out.writeStream.format("memory").queryName("cmd_stream_test")
+    val q = out.writeStream
+      .option("checkpointLocation", tempDir("graft_checkpoint").getPath)
+      .format("memory").queryName("cmd_stream_test")
       .outputMode("update").start()
     // batch 1: 600-cent purchase — covered (1000 ≥ 600)
     input.addData(Ev(10, ts(1), 1, "purchase", 6.0))
@@ -241,7 +243,9 @@ class Round3Spec extends SparkSpec {
     def ts(min: Int) = new Timestamp(1704067200000L + min * 60000L)
     val input = MemoryStream[Ev]
     val q = Streams.tailStream(input.toDS(), 3).toDF()
-      .writeStream.format("memory").queryName("tail_test")
+      .writeStream
+      .option("checkpointLocation", tempDir("graft_checkpoint").getPath)
+      .format("memory").queryName("tail_test")
       .outputMode("update").start()
     // batch 1: four events — only the 3 most recent survive
     input.addData(Ev(1, ts(0), 1, "signup", 0.0), Ev(2, ts(1), 1, "click", 0.0),

@@ -16,6 +16,18 @@ abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   val sf: String = TestSpark.sf
   def run(name: String) = SparkEntry.queries(name)(spark, sf)
 
+  /** Run `body` with `conf` set on the test session, then put back
+    * what each key held before (an unset key is unset again). */
+  def withConf[T](conf: (String, String)*)(body: => T): T = {
+    val prev = conf.map { case (k, _) => k -> spark.conf.getOption(k) }
+    conf.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   private val tempDirs = collection.mutable.Buffer.empty[java.io.File]
 
   /** A fresh temp dir, deleted with its contents when the suite ends. */

@@ -13,7 +13,7 @@ class StreamArtifactStateSpec extends SparkSpec {
 
   private val isolationKey = "spark.sql.artifact.isolation.enabled"
 
-  test("two streams started through withStreamShards run their tasks under one class loader") {
+  test("two streams started through Streams.start run their tasks under one class loader") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val loader = udf(() => System.identityHashCode(Thread.currentThread.getContextClassLoader))
@@ -21,7 +21,8 @@ class StreamArtifactStateSpec extends SparkSpec {
     def taskLoaders(): Set[Int] = {
       val input = MemoryStream[Ev]
       val out = tempDir("graft_stream_loader").getPath
-      val q = Streams.foreachBatchSink(input.toDS().toDF().select(loader().as("cl")), out)
+      val q = Streams.foreachBatchSink(input.toDS().toDF().select(loader().as("cl")), out,
+        s"$out/_checkpoint")
       try {
         input.addData(Ev(1, new java.sql.Timestamp(0L), 1, "click", 1.0))
         q.processAllAvailable()
@@ -41,17 +42,26 @@ class StreamArtifactStateSpec extends SparkSpec {
     assert(compiled <= 2, s"$compiled classes compiled")
   }
 
-  test("the scope restores the caller's artifact isolation setting, also when its body throws") {
-    val df = spark.range(1).toDF()
+  test("a stream leaves the caller's isolation setting untouched, also when the sink throws") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    def drain(sink: org.apache.spark.sql.DataFrame => Unit) = {
+      val input = MemoryStream[Ev]
+      input.addData(Ev(1, new java.sql.Timestamp(0L), 1, "click", 1.0))
+      Streams.drain(input.toDS().toDF(), tempDir("graft_stream_isolation").getPath,
+        "append", rowScaleState = false)((batch, _) => sink(batch))
+    }
     try for (caller <- Seq(None, Some("true"), Some("false"))) {
       caller.fold(spark.conf.unset(isolationKey))(spark.conf.set(isolationKey, _))
       // an unset key reads as Spark's default
       val prev = spark.conf.getOption(isolationKey)
       assert(prev == caller.orElse(Some("true")))
-      assert(Streams.withStreamShards(spark, df)(spark.conf.get(isolationKey)) == "false")
+      var seen = ""
+      drain(batch => seen = batch.sparkSession.conf.get(isolationKey))
+      assert(seen == "false")
       assert(spark.conf.getOption(isolationKey) == prev)
-      intercept[IllegalStateException](
-        Streams.withStreamShards(spark, df)(throw new IllegalStateException("body failed")))
+      intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+        drain(_ => throw new IllegalStateException("sink failed")))
       assert(spark.conf.getOption(isolationKey) == prev)
     } finally spark.conf.unset(isolationKey)
   }

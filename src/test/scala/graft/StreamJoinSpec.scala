@@ -28,7 +28,9 @@ class StreamJoinSpec extends SparkSpec {
       col("p_user") === col("s_user") &&
         col("s_ts") <= col("p_ts") &&
         col("s_ts") >= col("p_ts") - expr("INTERVAL 2 HOURS"))
-    val q = joined.writeStream.format("memory").queryName("ssjoin_test")
+    val q = joined.writeStream
+      .option("checkpointLocation", tempDir("graft_checkpoint").getPath)
+      .format("memory").queryName("ssjoin_test")
       .outputMode("append").start()
     signups.addData(Ev(1, ts(0), 1, "signup", 0.0), Ev(2, ts(0), 2, "signup", 0.0))
     purchases.addData(

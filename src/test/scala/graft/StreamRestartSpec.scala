@@ -87,26 +87,16 @@ class StreamRestartSpec extends SparkSpec {
   private def runOnce(srcDir: String, ckpt: String, sink: java.io.File,
       transform: Dataset[Ev] => DataFrame): Set[String] = {
     val stream = transform(evStream(srcDir))
-    Streams.withStreamShards(spark, stream) {
-      val q = stream.writeStream
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-          batch.write.mode("overwrite").parquet(s"$sink/b_$id")
-          ()
-        }
-        .outputMode("update")
-        .start()
-      q.processAllAvailable()
-      val keys = q.recentProgress.reverseIterator
-        .find(_.stateOperators.nonEmpty)
-        .map { p =>
-          import scala.jdk.CollectionConverters._
-          p.stateOperators.head.customMetrics.keySet.asScala.toSet
-        }
-        .getOrElse(Set.empty[String])
-      q.stop()
-      keys
+    val q = Streams.drain(stream, ckpt, "update", rowScaleState = false) { (batch, id) =>
+      batch.write.mode("overwrite").parquet(s"$sink/b_$id")
     }
+    q.recentProgress.reverseIterator
+      .find(_.stateOperators.nonEmpty)
+      .map { p =>
+        import scala.jdk.CollectionConverters._
+        p.stateOperators.head.customMetrics.keySet.asScala.toSet
+      }
+      .getOrElse(Set.empty[String])
   }
 
   private type Row = org.apache.spark.sql.Row
@@ -129,11 +119,9 @@ class StreamRestartSpec extends SparkSpec {
       transform: Dataset[Ev] => DataFrame): Unit = {
     def scoped[T](body: => T): T =
       if (provider == "heap") body
-      else graft.sources.Tables.withScopedConf(
-          spark, "graft.stream.stateStore", provider) {
+      else withConf("graft.stream.stateStore" -> provider) {
         if (changelog)
-          graft.sources.Tables.withScopedConf(
-            spark, "graft.stream.rocksdbChangelog", "true")(body)
+          withConf("graft.stream.rocksdbChangelog" -> "true")(body)
         else body
       }
     scoped {

@@ -16,7 +16,9 @@ class StreamingAdvancedSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[Ev]
     val q = Streams.foldWithPassivation(input.toDS(), gapMinutes = 30)
-      .writeStream.format("memory").queryName("passivation_test")
+      .writeStream
+      .option("checkpointLocation", tempDir("graft_checkpoint").getPath)
+      .format("memory").queryName("passivation_test")
       .outputMode("append").start()
     // user 5 is active at t0..t1, then silent; a later event from
     // another user advances the watermark far past 5's timeout
@@ -39,7 +41,9 @@ class StreamingAdvancedSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[Ev]
     val q = Streams.sessionCounts(input.toDS().toDF(), "30 minutes")
-      .writeStream.format("memory").queryName("session_test")
+      .writeStream
+      .option("checkpointLocation", tempDir("graft_checkpoint").getPath)
+      .format("memory").queryName("session_test")
       .outputMode("append").start()
     input.addData(Ev(1, ts(0), 1, "click", 1.0), Ev(2, ts(10), 1, "click", 1.0),
       Ev(3, ts(50), 1, "click", 1.0)) // second session (gap 40 min > 30)
@@ -58,7 +62,7 @@ class StreamingAdvancedSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val dir = tempDir("graft_febatch").toString
     val input = MemoryStream[Ev]
-    val q = Streams.foreachBatchSink(input.toDS().toDF(), dir)
+    val q = Streams.foreachBatchSink(input.toDS().toDF(), dir, s"$dir/_checkpoint")
     input.addData(Ev(1, ts(0), 1, "click", 1.0), Ev(2, ts(1), 2, "view", 2.0))
     q.processAllAvailable()
     input.addData(Ev(3, ts(2), 3, "click", 3.0))

@@ -16,6 +16,7 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     val input = MemoryStream[Ev]
     val q = Streams.foldEvents(input.toDS()).writeStream
+      .option("checkpointLocation", tempDir("graft_checkpoint").getPath)
       .format("memory").queryName("fold_test").outputMode("update").start()
     // batch 1: user 1 signs up and buys; user 2 errors
     input.addData(
@@ -58,7 +59,9 @@ class StreamingSpec extends SparkSpec {
     val deduped = input.toDS().toDF()
       .withWatermark("ts", "1 hour")
       .dropDuplicates("event_id", "ts")
-    val q = deduped.writeStream.format("memory").queryName("dedup_test")
+    val q = deduped.writeStream
+      .option("checkpointLocation", tempDir("graft_checkpoint").getPath)
+      .format("memory").queryName("dedup_test")
       .outputMode("append").start()
     input.addData(Ev(1, ts(0), 1, "click", 1.0), Ev(1, ts(0), 1, "click", 1.0))
     q.processAllAvailable()
@@ -75,6 +78,7 @@ class StreamingSpec extends SparkSpec {
     // already-advanced watermark)
     var seen = List.empty[(Long, Long, Long, Long)] // (batchId, rows, minTs, maxTs)
     val q = Streams.eventStream(spark, "/root/testdata/sf0.001").toDF().writeStream
+      .option("checkpointLocation", tempDir("graft_checkpoint").getPath)
       .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
         val agg = b.agg(
           org.apache.spark.sql.functions.count(org.apache.spark.sql.functions.lit(1)),

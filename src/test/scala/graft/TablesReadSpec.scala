@@ -40,7 +40,7 @@ class TablesReadSpec extends SparkSpec {
 
   test("footer schema equals Spark's inferred schema on every test table, nanosAsLong on and off") {
     for (v <- Seq("true", "false"); t <- Tables.names)
-      Tables.withScopedConf(spark, nanosKey, v) { sameSchema(s"$sf/$t.parquet") }
+      withConf(nanosKey -> v) { sameSchema(s"$sf/$t.parquet") }
   }
 
   test("a LiveStore root written with partitionBy(shard) keeps its discovered shard column") {
@@ -67,7 +67,7 @@ class TablesReadSpec extends SparkSpec {
     sameSchema(paths: _*)
     assert(Tables.read(spark, paths: _*).schema.fieldNames.toSeq == Seq("id", "v", "high"))
     // with schema merging on, every file counts, as in Spark's read
-    Tables.withScopedConf(spark, "spark.sql.parquet.mergeSchema", "true") {
+    withConf("spark.sql.parquet.mergeSchema" -> "true") {
       sameSchema(paths: _*)
       assert(Set("low", "high").subsetOf(Tables.read(spark, paths: _*).schema.fieldNames.toSet))
     }
@@ -100,7 +100,7 @@ class TablesReadSpec extends SparkSpec {
         .append("event_type", "click").append("value", i * 1.5))
     } finally w.close()
     for (v <- Seq("true", "false"); form <- Seq("micros_utc", "micros_ntz", "nanos"))
-      Tables.withScopedConf(spark, nanosKey, v) {
+      withConf(nanosKey -> v) {
         val p = s"$root/$form"
         val ours = Try(Tables.read(spark, p).schema)
         val spark0 = Try(plain(p).schema)
@@ -108,7 +108,7 @@ class TablesReadSpec extends SparkSpec {
         assert(ours.isSuccess == spark0.isSuccess, s"$form nanosAsLong=$v: $ours vs $spark0")
         if (ours.isSuccess) assert(ours.get == spark0.get, s"$form nanosAsLong=$v")
       }
-    Tables.withScopedConf(spark, nanosKey, "true") {
+    withConf(nanosKey -> "true") {
       assert(Tables.normalizeTs(Tables.read(spark, s"$root/nanos")).schema ==
         Tables.normalizeTs(Tables.read(spark, s"$root/micros_ntz")).schema)
     }
