@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
-import graft.{GraftSession, Op, OpFamily}
+import graft.{GraftSession, Op, OpFamily, Sizing}
 import graft.sources.Tables
 
 /** Dup-cluster resolution — the step that turns candidate PAIRS into a
@@ -72,8 +72,7 @@ object Clusters extends OpFamily {
     // per partition keeps a 10^9-edge graph at full width while a
     // small graph runs its rounds in 1-2 partitions.
     val shuffleKey = "spark.sql.shuffle.partitions"
-    val loopParts = math.max(1L, math.min(
-      s.conf.get(shuffleKey).toLong, sym.count() / 500000L + 1L))
+    val loopParts = Sizing.ccLoopWidth(sym.count(), s.conf.get(shuffleKey).toInt)
     // the loop's frames run on a child session at that width; the
     // caller's session keeps its own
     val loop = GraftSession.child(s, shuffleKey -> loopParts.toString)

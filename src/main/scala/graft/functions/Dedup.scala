@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Op, OpFamily}
+import graft.{Op, OpFamily, Sizing}
 import graft.sources.Tables
 
 /** Deduplication for training-data pipelines (north-star addition).
@@ -484,24 +484,6 @@ object Dedup extends OpFamily {
     }.reduce(_ union _).distinct()
   }
 
-  /** Block count for a bucket of `cnt` rows under a pair budget of
-    * `budget` cosines per block-pair task. A block-pair task scores
-    * (cnt/g)² pairs, so the budget fixes the BLOCK SIZE, not the
-    * block count: g = ceil(cnt / √budget). (The r9 sizer used
-    * g = ceil(cnt²/budget) — correct only at cnt ≈ √budget, and
-    * quadratically OVERSPLIT beyond it: input replication grows as
-    * cnt·g = cnt³/budget, which at the sf100 profile's measured 113k-row
-    * bucket meant g = 649 and ~325× row replication, ~35 GB of band-join
-    * shuffle for a query whose correct tiling ships ~13×/26 blocks.
-    * Round10Spec pins pairs-per-task ≈ budget across scales.)
-    * Computed in DOUBLE (no squaring — nothing to overflow), capped at
-    * cnt (a block never holds fewer than one row) and at Int.MaxValue
-    * so the int cast cannot wrap. */
-  private[graft] def tileBlocks(cnt: Column, budget: Double): Column =
-    greatest(lit(1L),
-      least(ceil(cnt.cast("double") / lit(math.sqrt(budget))),
-        cnt.cast("long"), lit(Int.MaxValue.toLong))).cast("int")
-
   /** Max bucket size per band — the 6-row measurement the per-band
     * tiling decision plans from. The profile is a pure function of
     * (dataset, planes, bands), so it is persisted as per-dataset
@@ -568,7 +550,7 @@ object Dedup extends OpFamily {
     // EVERY within-bucket pair exactly once — so oversized buckets
     // get the D17 BLOCK-PAIR tiling instead: rows of a bucket of size
     // c split into g = ceil(c/√2e7) blocks (the budget fixes the BLOCK
-    // SIZE — see tileBlocks), each unordered block pair (i ≤ j) is its
+    // SIZE — see Sizing.tileBlocks), each unordered block pair (i ≤ j) is its
     // own join key, so every vector pair still meets exactly once but
     // the hot bucket becomes g(g+1)/2 bounded tasks of ≈2e7 cosines,
     // at c·(g+1)/2 input replication. The tiling machinery (count-agg + broadcast
@@ -588,7 +570,6 @@ object Dedup extends OpFamily {
     // max bucket size per band + max|component| — persisted
     // per-dataset capital (7 rows)
     val maxBucket: Map[Int, Long] = bandProfile(s, d, planes, bands, n)
-    val tileBudget = 2e7
     // 16-bit packed wire format when the measured range allows it
     // (any normalized embedding does): the quantized vector is the
     // ~550 B payload of EVERY band-join shuffle row, and 128 B of it
@@ -604,7 +585,7 @@ object Dedup extends OpFamily {
     (0 until bands).map { b =>
       // (band decision below squares in Double on the driver — no
       // int64 overflow at any bucket size)
-      if (maxBucket.getOrElse(b, 0L).toDouble * maxBucket.getOrElse(b, 0L) <= tileBudget) {
+      if (maxBucket.getOrElse(b, 0L).toDouble * maxBucket.getOrElse(b, 0L) <= Sizing.pairsPerTask) {
         // healthy band: the plain single-key self-join (the r8 shape)
         n.select(col(s"bk$b").as("bk"), col("vec_id").as("vec_a"),
             pv.as("av"), col("nn").as("an"))
@@ -618,12 +599,12 @@ object Dedup extends OpFamily {
         val rows = n.select(col(s"bk$b").as("bk"), col("vec_id"),
           pv.as("v"), col("nn"))
         val sizes = rows.groupBy("bk").agg(count(lit(1)).as("cnt"))
-          .select(col("bk"), tileBlocks(col("cnt"), tileBudget).as("g"))
+          .select(col("bk"), Sizing.tileBlocks(col("cnt")).as("g"))
         val blocked = rows.join(broadcast(sizes), "bk")
           .withColumn("blk", pmod(hash(col("vec_id")), col("g")))
         blocked.select(col("bk"), col("g"), col("blk").as("ba"),
             col("vec_id").as("va"), col("v").as("av"), col("nn").as("an"))
-          // pk in BIGINT: g caps at Int.MaxValue (tileBlocks), so the
+          // pk in BIGINT: g caps at Int.MaxValue (Sizing.tileBlocks), so the
           // int form ba*g + j wraps for g > √Int.MaxValue ≈ 46k under
           // non-ANSI semantics — colliding block-pair keys would score
           // some pairs twice and miss others (ADVICE r10).
@@ -851,9 +832,8 @@ object Dedup extends OpFamily {
   // dedup_recall grades LSH against it) and the prefix-filter join is
   // the expensive stage — recomputing it per consumer doubled its cost
   // in the bench (5.2 s + 5.4 s as two cold runs).
-  private[graft] def exactJoinTruth(s: SparkSession, d: String): DataFrame = {
-    val rateE6 = ssjoinSampleE6(s, d)
-    val suffix = if (rateE6 >= 1000000L) "" else s"s${rateE6}_"
+  private[graft] def exactJoinTruth(s: SparkSession, d: String, rateE6: Long): DataFrame = {
+    val suffix = if (rateE6 >= Sizing.fullRateE6) "" else s"s${rateE6}_"
     val path = s"${Tables.workDir(s)}/exact_truth_$suffix" +
       Tables.datasetTag(d)
     Tables.buildOnce(path)(exactJoinTruthBuild(s, d, rateE6))
@@ -870,26 +850,17 @@ object Dedup extends OpFamily {
   // family under an 'ssjoin:' salt; sampling DOCS at rate r keeps a
   // pair iff both endpoints survive, so truth pairs scale ~r².
   //
-  // The rate is auto-sized from the corpus doc count (parquet footer
-  // stats — no scan): rate = min(1, target/nDocs) holds the SAMPLED doc
-  // mass constant at the largest measured-green scale (sf10's 500k), so
-  // the truth's pair mass is bounded by construction at ANY corpus
-  // size (sf30 → ~33 %, sf100 → 10 %). At oracle scales the rate is
-  // 1.0 and NO gate is applied — plan, persisted path, and results are
+  // The rate is `Sizing.ssjoinRateE6` of the corpus doc count (parquet
+  // footer stats — no scan). At oracle scales the rate is 1.0 and NO
+  // gate is applied — plan, persisted path, and results are
   // byte-identical to the unsampled build, so CORRECTNESS and D15's
-  // consumption are untouched. `graft.ssjoin.sampleE6` overrides.
-  private val ssjoinTargetDocs = 500000L
+  // consumption are untouched.
   private[graft] def ssjoinSampleE6(s: SparkSession, d: String): Long =
-    s.conf.getOption("graft.ssjoin.sampleE6").map(_.toLong).getOrElse {
-      val n = Tables.maxIdFromStats(s, s"$d/documents.parquet", "doc_id",
-        Tables.documents(s, d)) + 1
-      if (n <= ssjoinTargetDocs) 1000000L
-      else math.max(1L, 1000000L * ssjoinTargetDocs / n)
-    }
+    Sizing.ssjoinRateE6(Tables.maxIdFromStats(s, s"$d/documents.parquet", "doc_id",
+      Tables.documents(s, d)) + 1)
 
   private[graft] def inSsjoinSample(docId: Column, rateE6: Long): Column =
-    conv(substring(md5(concat(lit("ssjoin:"), docId.cast("string"))), 1, 8),
-      16, 10).cast("long") % 1000000L < lit(rateE6)
+    Tables.md5Bucket(docId.cast("string"), "ssjoin:", Sizing.fullRateE6) < lit(rateE6)
 
   private def exactJoinTruthBuild(
       s: SparkSession, d: String, rateE6: Long): DataFrame = {
@@ -901,7 +872,7 @@ object Dedup extends OpFamily {
     // pairs with both endpoints in the sample (Round11Spec proves the
     // equivalence on the oracle corpus).
     val docs =
-      if (rateE6 >= 1000000L) Tables.documents(s, d)
+      if (rateE6 >= Sizing.fullRateE6) Tables.documents(s, d)
       else Tables.documents(s, d)
         .filter(inSsjoinSample(col("doc_id"), rateE6))
     val dsh = shingledDocs(docs).distinct().cache()
@@ -938,7 +909,7 @@ object Dedup extends OpFamily {
   }
 
   private def dedupExactJoin(s: SparkSession, d: String): DataFrame =
-    exactJoinTruth(s, d)
+    exactJoinTruth(s, d, ssjoinSampleE6(s, d))
       .withColumn("jaccard",
         col("inter_n").cast("double") / col("union_n").cast("double"))
 
@@ -986,9 +957,8 @@ object Dedup extends OpFamily {
   // verify threshold; THIS measures the candidate generator itself).
   // One full-outer join of two small pair sets (shuffle-hash, the E19
   // shape) + one global hash-agg to a single exact-integer row.
-  private def dedupRecall(s: SparkSession, d: String): DataFrame = {
-    val rateE6 = ssjoinSampleE6(s, d)
-    val t = exactJoinTruth(s, d)
+  private[graft] def dedupRecall(s: SparkSession, d: String, rateE6: Long): DataFrame = {
+    val t = exactJoinTruth(s, d, rateE6)
       .select(col("doc_a"), col("doc_b"), lit(1L).as("in_t"))
     // When the truth is sampled (probe scales only — rate 1.0 adds no
     // filter at oracle scales), the candidate side is gated by the SAME
@@ -998,7 +968,7 @@ object Dedup extends OpFamily {
     // their docs.
     val c0 = candidatePairs(s, d)
     val cg =
-      if (rateE6 >= 1000000L) c0
+      if (rateE6 >= Sizing.fullRateE6) c0
       else c0.filter(inSsjoinSample(col("doc_a"), rateE6) &&
         inSsjoinSample(col("doc_b"), rateE6))
     val c = cg
@@ -1045,47 +1015,25 @@ object Dedup extends OpFamily {
   // NOT a nested-loop scan, so the truth stage has the same plan
   // discipline as the generators it grades.
   private val bandSweepConfigs = Seq((4, 2), (8, 4), (16, 6))
-  private val bandSweepBlocks = 4
 
   /** Deterministic vec_id sample gate the D17 eval runs over. */
   private[graft] def inSweepSample(vecId: Column): Column =
-    conv(substring(md5(vecId.cast("string")), 1, 8), 16, 10)
-      .cast("long") % 2 === 0
+    Tables.md5Bucket(vecId.cast("string"), "", 2) === 0
 
   // SCALE finding 14 applies here too: the mod-2 gate keeps a fixed
   // 50 % FRACTION, so the sweep's exhaustive |S|²/2 truth grows
   // quadratically with the corpus. The absolute-size thinning bucket
-  // (salt 'sweep:') caps the sampled vector count at
-  // sweepTargetVectors (|S|² ≈ 1.25e9 cosines); 1.0 — no extra
-  // expression, oracle untouched — whenever the mod-2 sample already
-  // fits (every oracle scale).
-  private val sweepTargetVectors = 50000L
-  private[graft] def sweepThinE6(s: SparkSession, d: String): Long =
-    s.conf.getOption("graft.bandsweep.thinE6").map(_.toLong).getOrElse {
-      val n = math.max(1L, Tables.maxIdFromStats(s, s"$d/embeddings.parquet",
-        "vec_id", Tables.embeddings(s, d)) + 1)
-      val sAt50 = n / 2
-      if (sAt50 <= sweepTargetVectors) 1000000L
-      else math.max(1L, 1000000L * sweepTargetVectors / sAt50)
-    }
-
+  // (salt 'sweep:') caps the sampled vector count
+  // (`Sizing.sweepThinE6`); 1.0 — no extra expression, oracle
+  // untouched — whenever the mod-2 sample already fits (every oracle
+  // scale).
   private[graft] def inSweepSampleThinned(vecId: Column, thinE6: Long): Column =
-    if (thinE6 >= 1000000L) inSweepSample(vecId)
+    if (thinE6 >= Sizing.fullRateE6) inSweepSample(vecId)
     else inSweepSample(vecId) &&
-      conv(substring(md5(concat(lit("sweep:"), vecId.cast("string"))), 1, 8),
-        16, 10).cast("long") % 1000000L < lit(thinE6)
+      Tables.md5Bucket(vecId.cast("string"), "sweep:", Sizing.fullRateE6) < lit(thinE6)
 
-  private def dedupBandSweep(s: SparkSession, d: String): DataFrame = {
-    // block count sized from the CAPPED sample estimate so a
-    // block-pair task stays near the 2e7-cosine budget at any corpus
-    // (B was a fixed 4: at the 50 k cap that is (50k/4)² ≈ 1.5e8
-    // cosines per task — bounded, but 8× the budget). Result-invariant:
-    // B only shapes the Spark-side pair partitioning, never the pair
-    // set; oracle scales keep the familiar 4.
-    val nEst = math.max(1L, Tables.maxIdFromStats(s, s"$d/embeddings.parquet",
-      "vec_id", Tables.embeddings(s, d)) + 1)
-    val estS = math.min(nEst / 2, sweepTargetVectors).toDouble
-    val B = math.max(bandSweepBlocks, math.ceil(estS / math.sqrt(2e7)).toInt)
+  private[graft] def dedupBandSweep(s: SparkSession, d: String, thinE6: Long): DataFrame = {
+    val B = Sizing.sweepBlocks(Similarity.vectorCount(s, d))
     // Opt r14 NOTE: caching smp here (it feeds seven subtrees of the
     // one unioned plan) was MEASURED 3x slower at sf0.1 (warm 3.3 →
     // 10.1 s solo) — the InMemoryRelation pins the downstream block-
@@ -1095,7 +1043,7 @@ object Dedup extends OpFamily {
     // deliberately; the per-config bucketed frame inside
     // embCandidatesFrom is already cached where reuse is real.
     val smp = Tables.embeddings(s, d)
-      .filter(inSweepSampleThinned(col("vec_id"), sweepThinE6(s, d)))
+      .filter(inSweepSampleThinned(col("vec_id"), thinE6))
       .select(col("vec_id"), Similarity.quantize(col("embedding")).as("v"))
     val n = smp.withColumn("nn", Similarity.sqNorm(col("v")))
       .withColumn("bk", pmod(col("vec_id"), lit(B.toLong)))
@@ -1239,11 +1187,11 @@ object Dedup extends OpFamily {
   }
 
   /** Join-strategy gate for attaching the corpus-scaled gate index to
-    * the bloom-positive sliver: `Pipeline.hashBuildHint` over ~48 bytes
+    * the bloom-positive sliver: `Sizing.hashBuildHint` over ~48 bytes
     * per (h, dup_of) row, rows from parquet footers (zero scan); an
     * index without footers counts as unbounded, so it sort-merges. */
   private[graft] def bloomGateAttachHint(s: SparkSession, d: String): String =
-    Pipeline.hashBuildHint(
+    Sizing.hashBuildHint(
       Tables.rowCountFromStats(s, bloomGateIndexPath(s, d)).fold(Long.MaxValue)(_ * 48L),
       s.sessionState.conf.numShufflePartitions)
 
@@ -1406,9 +1354,11 @@ object Dedup extends OpFamily {
     Op("dedup_chunks", dedupChunks, Some(dedupChunksSql)),
     Op("dedup_index_maintain", indexMaintain, Some(indexMaintainSql)),
     Op("dedup_bloom_gate", dedupBloomGate, Some(bloomGateSql)),
-    Op("dedup_band_sweep", dedupBandSweep, Some(dedupBandSweepSql)),
+    Op("dedup_band_sweep", (s, d) =>
+      dedupBandSweep(s, d, Sizing.sweepThinE6(Similarity.vectorCount(s, d))),
+      Some(dedupBandSweepSql)),
     Op("dedup_exact_join", dedupExactJoin, Some(dedupExactJoinSql)),
-    Op("dedup_recall", dedupRecall, Some(dedupRecallSql)),
+    Op("dedup_recall", (s, d) => dedupRecall(s, d, ssjoinSampleE6(s, d)), Some(dedupRecallSql)),
     Op("dedup_sweep", dedupSweep, Some(dedupSweepSql)),
     Op("dedup_exact", dedupExact, Some(dedupExactSql)),
     Op("dedup_minhash_lsh", dedupMinhash, Some(candSql)),

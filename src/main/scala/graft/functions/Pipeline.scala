@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Op, OpFamily}
+import graft.{Op, OpFamily, Sizing}
 import graft.sources.Tables
 
 /** End-to-end training-data pipeline steps on top of the dedup /
@@ -478,8 +478,7 @@ object Pipeline extends OpFamily {
       .withColumn("n_min",
         min(col("n_lang")).over(org.apache.spark.sql.expressions.Window.partitionBy()))
       .select(col("lang"), expr("(10000 * n_min) div n_lang").as("rate_e4"))
-    val bucket = expr(
-      "cast(conv(substr(md5(concat('mix:', text)), 1, 8), 16, 10) as bigint) % 10000")
+    val bucket = Tables.md5Bucket(col("text"), "mix:", 10000)
     docs.join(broadcast(rates), "lang")
       .select(col("doc_id"), col("lang"), bucket.as("bucket_e4"), col("rate_e4"))
       .filter(col("bucket_e4") < col("rate_e4"))
@@ -496,8 +495,7 @@ object Pipeline extends OpFamily {
   private def corpusSplit(s: SparkSession, d: String): DataFrame =
     Tables.documents(s, d)
       .select(col("doc_id"), col("lang"),
-        expr("cast(conv(substr(md5(concat('split:', text)), 1, 8), 16, 10) as bigint) % 10000")
-          .as("bucket_e4"))
+        Tables.md5Bucket(col("text"), "split:", 10000).as("bucket_e4"))
       .withColumn("split",
         when(col("bucket_e4") < 9000, "train")
           .when(col("bucket_e4") < 9500, "validation")
@@ -552,8 +550,7 @@ object Pipeline extends OpFamily {
       .select(col("lang"),
         expr("n_max div n_lang").as("base"),
         expr("((n_max % n_lang) * 10000) div n_lang").as("frac_e4"))
-    val bucket = expr(
-      "cast(conv(substr(md5(concat('up:', text)), 1, 8), 16, 10) as bigint) % 10000")
+    val bucket = Tables.md5Bucket(col("text"), "up:", 10000)
     docs.join(broadcast(rates), "lang")
       .select(col("doc_id"), col("lang"),
         (col("base") + when(bucket < col("frac_e4"), 1L).otherwise(0L)).as("n_copies"))
@@ -1343,38 +1340,6 @@ object Pipeline extends OpFamily {
     *       back to the full shuffle form.
     * Shared by P26 (the ledger + rewrite) and P27 (the post-strip
     * acceptance re-scan). */
-  /** Raw-bytes budget for the strip re-attach broadcasts. The old
-    * cutoffs (16 M positions / 16 M keys) were row COUNTS — ~128 MB of
-    * raw int64s before the several-x broadcast-relation expansion,
-    * generous enough to risk driver/executor pressure on adversarial
-    * boilerplate-heavy corpora (the r13 advice finding). The gate is
-    * now the repo's measured-mass discipline: estimate the broadcast
-    * relation's raw bytes from the PROFILE (positions as int64 + 32 B
-    * per-row array/offset overhead for tier a; 24 B per key row for
-    * tier b) against a 32 MB budget — ~4 M positions / ~1.3 M keys.
-    * The sf100 measurement (533 k occurrences over 5 M docs) sits two
-    * orders of magnitude under it. */
-  private val stripBroadcastBudgetBytes = 32L << 20
-
-  /** Re-attach tier from the measured drop-list profile: 0 = broadcast
-    * the full drop lists, 1 = broadcast the affected doc-id KEY set and
-    * split the corpus in-scan, 2 = full shuffle (boilerplate at corpus
-    * scale — nothing small enough to broadcast). Pure so the
-    * tier-selection law is spec-testable without building a corpus. */
-  private[graft] def stripTier(nDupDocs: Long, nPos: Long): Int =
-    if (nPos * 8L + nDupDocs * 32L <= stripBroadcastBudgetBytes) 0
-    else if (nDupDocs * 24L <= stripBroadcastBudgetBytes) 1
-    else 2
-
-  /** The hash-build gate: a `shuffle_hash` hint on a profile-sized
-    * build side is licensed only while its estimated bytes, spread
-    * over the shuffle width, stay ≤ 32 MB per task — an order of
-    * magnitude inside the per-task execution-memory slice at full
-    * occupancy; beyond that the join must sort-merge. */
-  private[graft] def hashBuildHint(buildBytes: Long, shufflePartitions: Int): String =
-    if (buildBytes / math.max(1, shufflePartitions) <= (32L << 20)) "shuffle_hash"
-    else "merge"
-
   /** Join strategy for the drop-list attach in tiers (b)/(c): the
     * hash-build gate over the SAME byte estimate the broadcast gate
     * uses — a corpus-scaled drop set blows the per-task hash relation
@@ -1382,10 +1347,10 @@ object Pipeline extends OpFamily {
     * scale/strip_adversarial_r16.json: 4 M drop lists × 112 positions
     * ≈ 3.7 GB build ⇒ ~116 MB/task ⇒ "Can't acquire 134217728 bytes"
     * hash-relation abort at 5 M docs) and must sort-merge instead.
-    * Pure so Round16Spec pins the law beside stripTier's. */
+    * Pure so Round16Spec pins the law beside `Sizing.stripTier`'s. */
   private[graft] def stripAttachHint(
       nDupDocs: Long, nPos: Long, shufflePartitions: Int): String =
-    hashBuildHint(nPos * 8L + nDupDocs * 32L, shufflePartitions)
+    Sizing.hashBuildHint(Sizing.stripBytes(nDupDocs, nPos), shufflePartitions)
 
   private def stripBase(s: SparkSession, d: String): DataFrame = {
     val dropPath = s"${Tables.workDir(s)}/strip_drop_" + Tables.datasetTag(d)
@@ -1407,7 +1372,7 @@ object Pipeline extends OpFamily {
       coalesce(sum(size(col("drop_pos")).cast("long")), lit(0L)).as("n_pos"))
       .head()
     val (nDupDocs, nPos) = (prof.getLong(0), prof.getLong(1))
-    val tier = stripTier(nDupDocs, nPos)
+    val tier = Sizing.stripTier(nDupDocs, nPos)
     val attachHint = stripAttachHint(nDupDocs, nPos,
       s.sessionState.conf.numShufflePartitions)
     val docsT = Tables.documents(s, d)

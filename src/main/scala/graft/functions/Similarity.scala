@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Op, OpFamily}
+import graft.{Op, OpFamily, Sizing}
 import graft.sources.Tables
 
 /** Similarity search over embedding columns (north-star addition).
@@ -983,29 +983,14 @@ object Similarity extends OpFamily {
   // bucket-bounded). Cosines are IEEE doubles computed from exact
   // int64 dots/norms — identical in both engines — with vec_id as the
   // deterministic tiebreak.
-  /** Corpus-sized plane count for the SCALE path (the oracle-graded
-    * ops are pinned at `oraclePlanes` instead — see knnGraph): the
-    * smallest p with 2^p buckets of ≤ ~50 expected vectors, floored
-    * at 8. Candidate volume then stays ≈ 50·n at ANY corpus
-    * size instead of n²/2^8; the sf10 smoke measured the difference as
-    * 61 s (8-plane, 1.6e8 pairs, 390 MB spill) vs 27 s (12-plane,
-    * 1e7 pairs, no spill) at 200 k vectors. Sized from the footer-
-    * stats metadata pass (vec_ids are dense 0..n-1), not a scan;
-    * integer shift loop — no float-log edge cases at powers of two. */
-  private[graft] def planesFor(n: Long): Int = {
-    var p = 0
-    while ((50L << p) < n && p < 30) p += 1
-    math.max(8, p)
-  }
-
   /** The one config every oracle pins: the static DuckDB SQL for S10/
     * S13 hard-codes an 8-plane `lshBucketSql`, so the GRADED ops must
     * use exactly 8 planes too — self-sizing here would silently
     * diverge from the oracle the moment a corpus crosses 12,800
     * vectors (planesFor → 9). The corpus-sized production form is
-    * `knnGraphWith(s, d, planesFor(n))` — exercised by ScaleSmoke's
-    * `knn_graph_scaled` entry and the Round9b monotonicity spec, and
-    * what a 100 TB caller should use. */
+    * `knnGraphWith(s, d, Sizing.planesFor(n))` — exercised by
+    * ScaleSmoke's `knn_graph_scaled` entry and SizingSpec's plane-count
+    * table, and what a 100 TB caller should use. */
   private[graft] val oraclePlanes = 8
 
   private def knnGraph(s: SparkSession, d: String): DataFrame =
@@ -1041,21 +1026,17 @@ object Similarity extends OpFamily {
     // bucket — ~1% of the corpus in one tight sub-cluster —
     // concentrated a grossly outsized share of the 1.6e8 candidate
     // pairs into ONE straggler task. Bucket-size-adaptive salting splits that
-    // task: a bucket of n rows gets g = ceil(n²/2e7) salt groups, the
-    // probe side keeps ONE salt per vector (hash(vec_id) % g), the
-    // build side replicates each row to all g salts. Each (bucket,
+    // task: a bucket of n rows gets g = ceil(n²/2e7) salt groups
+    // (`Sizing.saltGroups`), the probe side keeps ONE salt per vector
+    // (hash(vec_id) % g), the build side replicates each row to all g
+    // salts. Each (bucket,
     // salt) task then scores ≈ n²/g ≤ 2e7 pairs, and — because a
     // vector's whole candidate list still lives in its single salt
     // group — the per-vector top-3 needs no cross-salt merge. The
     // count pass is one 2^planes-row aggregate, broadcast back.
     val counts = idx.groupBy("bucket").agg(count(lit(1)).as("bkt_n"))
-    val sized = idx.join(broadcast(counts), Seq("bucket")).withColumn(
-      "g", greatest(lit(1L), ceil(col("bkt_n") * col("bkt_n") / lit(2e7))).cast("int"))
-    // (salting keeps g = ceil(n²/budget): only the PROBE side splits,
-    // so a (bucket, salt) task scores n²/g ≤ budget pairs — unlike
-    // the dedup block-pair tiling, where both sides split and the
-    // budget fixes the block size instead.)
-    //
+    val sized = idx.join(broadcast(counts), Seq("bucket"))
+      .withColumn("g", Sizing.saltGroups(col("bkt_n")))
     // 16-bit packed wire format, same license as the dedup band joins
     // (measured per dataset+planes as buildOnce capital): the salted
     // build side replicates every vector g times, so the vector
@@ -1127,8 +1108,7 @@ object Similarity extends OpFamily {
   // eval ships at any corpus size by shrinking the rate, never by
   // changing shape. One exact-integer summary row.
   private[graft] def inEvalSample(vecId: Column): Column =
-    conv(substring(md5(vecId.cast("string")), 1, 8), 16, 10)
-      .cast("long") % 4 === 0
+    Tables.md5Bucket(vecId.cast("string"), "", 4) === 0
 
   // SCALE finding 14 (round 11): the mod-4 gate alone keeps a fixed
   // FRACTION of the corpus as eval queries, so the exact ground truth
@@ -1137,29 +1117,23 @@ object Similarity extends OpFamily {
   // queries × 600 k vectors) for a one-row recall summary. "Shrink
   // the rate, not the design" only holds if the rate actually
   // shrinks: an additional absolute-size md5 bucket (salt 'knnq:')
-  // caps the query count at ~targetTruthCosines / n, holding the
-  // truth's total work constant at ANY corpus size. Whenever the
-  // mod-4 sample already fits the budget (every oracle scale) the
-  // thinning term is not even added — bit-identical plan, oracle
-  // untouched. Same posture as the D14 sampled ssjoin truth.
-  private val targetTruthCosines = 2e9
-  private[graft] def evalThinE6(s: SparkSession, d: String): Long =
-    s.conf.getOption("graft.knnrecall.thinE6").map(_.toLong).getOrElse {
-      val n = math.max(1L, Tables.maxIdFromStats(s, s"$d/embeddings.parquet",
-        "vec_id", Tables.embeddings(s, d)) + 1)
-      val qCap = math.max(1L, (targetTruthCosines / n).toLong)
-      val qAt25 = n / 4
-      if (qAt25 <= qCap) 1000000L else math.max(1L, 1000000L * qCap / qAt25)
-    }
-
+  // caps the query count (`Sizing.evalThinE6`), holding the truth's
+  // total work constant at ANY corpus size. Whenever the mod-4 sample
+  // already fits the budget (every oracle scale) the thinning term is
+  // not even added — bit-identical plan, oracle untouched. Same
+  // posture as the D14 sampled ssjoin truth.
   private[graft] def inEvalSampleThinned(vecId: Column, thinE6: Long): Column =
-    if (thinE6 >= 1000000L) inEvalSample(vecId)
+    if (thinE6 >= Sizing.fullRateE6) inEvalSample(vecId)
     else inEvalSample(vecId) &&
-      conv(substring(md5(concat(lit("knnq:"), vecId.cast("string"))), 1, 8),
-        16, 10).cast("long") % 1000000L < lit(thinE6)
+      Tables.md5Bucket(vecId.cast("string"), "knnq:", Sizing.fullRateE6) < lit(thinE6)
+
+  /** Vectors in the corpus, from footer stats (vec_ids are dense 0..n-1). */
+  private[graft] def vectorCount(s: SparkSession, d: String): Long =
+    math.max(1L, Tables.maxIdFromStats(s, s"$d/embeddings.parquet", "vec_id",
+      Tables.embeddings(s, d)) + 1)
 
   private[graft] def knnRecallWith(s: SparkSession, d: String, planes: Int): DataFrame = {
-    val thin = evalThinE6(s, d)
+    val thin = Sizing.evalThinE6(vectorCount(s, d))
     // cache() BEFORE the expanding join: the interpreted quantize
     // transform left in the lineage gets CollapseProject-inlined into
     // the broadcast-join output and re-evaluated PER JOINED ROW (the
@@ -1203,7 +1177,7 @@ object Similarity extends OpFamily {
 
   // grades the graph at the oracle-pinned plane count — the SAME
   // config knnGraph itself runs (its static SQL hard-codes 8 planes);
-  // scale-sized recall goes through knnRecallWith(planesFor(n))
+  // scale-sized recall goes through knnRecallWith(Sizing.planesFor(n))
   private def knnRecall(s: SparkSession, d: String): DataFrame =
     knnRecallWith(s, d, oraclePlanes)
 

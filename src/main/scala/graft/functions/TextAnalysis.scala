@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Op, OpFamily}
+import graft.{Op, OpFamily, Sizing}
 import graft.sources.Tables
 
 /** Text analysis for training-data pipelines (north-star addition):
@@ -463,11 +463,12 @@ object TextAnalysis extends OpFamily {
     // CC-loop rule: ~500k rows/partition): the distinct-word table is
     // orders of magnitude smaller than the corpus at any scale, so the
     // K rounds shouldn't pay the session's full shuffle width per
-    // iteration — coalesce (no shuffle) to ⌈|vocab|/500k⌉ partitions;
-    // the count() doubles as the cache materialization, so the corpus
-    // is scanned exactly once for the whole trainer
+    // iteration — coalesce (no shuffle) to whole 500k-row blocks
+    // (`Sizing.bpeLoopWidth`); the count() doubles as the cache
+    // materialization, so the corpus is scanned exactly once for the
+    // whole trainer
     val vocabRows = words.count()
-    val loopParts = math.max(1L, vocabRows / 500000L).toInt
+    val loopParts = Sizing.bpeLoopWidth(vocabRows)
     var vocab = words.coalesce(loopParts).withColumn("repr",
       concat(lit("#"), array_join(split(col("w"), ""), "##"), lit("#")))
     for (_ <- 1 to merges) {
@@ -1056,9 +1057,7 @@ object TextAnalysis extends OpFamily {
 
   /** Hashing-trick feature index of one token (md5 first-8-hex mod
     * buckets — the engine-neutral T5 convention, 'qm:' salt). */
-  private def qmBucket(t: Column): Column =
-    conv(substring(md5(concat(lit("qm:"), t)), 1, 8), 16, 10)
-      .cast("long") % qmBuckets
+  private def qmBucket(t: Column): Column = Tables.md5Bucket(t, "qm:", qmBuckets)
 
   /** Deterministic stand-in weight vector: w(b) = (37·b + 11) mod 201,
     * range 0..200 (non-negative sidesteps signed-division questions

@@ -126,6 +126,12 @@ object Tables {
     * and in any engine. */
   def cents(c: Column): Column = round(c * lit(100), 0).cast("long")
 
+  /** The engine-neutral T5 md5 bucket of string `x`: md5(salt ++ x)'s
+    * first 8 hex digits as a long, mod `mod` (the oracles' SQL form). */
+  def md5Bucket(x: Column, salt: String, mod: Long): Column =
+    conv(substring(md5(if (salt.isEmpty) x else concat(lit(salt), x)), 1, 8),
+      16, 10).cast("long") % mod
+
   /** Fixed-point e4 / e6 scalings for multi-factor money expressions
     * (price*(1-disc) has 4 decimals, *(1+tax) has 6). */
   def e4(c: Column): Column = round(c * lit(10000), 0).cast("long")
@@ -392,15 +398,9 @@ object Tables {
   def dirBytes(s: SparkSession, dir: String): Long =
     listDataFiles(s, dir).map(_._2).sum
 
-  /** Shuffle width for an operator whose per-task work scales with a
-    * table's data volume: ~one task per `bytesPerTask` of source
-    * bytes, never below the session default (small inputs keep the
-    * session's parallelism; big inputs widen instead of spilling). */
-  def volumePartitions(s: SparkSession, dir: String,
-      bytesPerTask: Long = 32L << 20): Int = {
-    val default = s.sessionState.conf.numShufflePartitions
-    math.max(default, (dirBytes(s, dir) / bytesPerTask).toInt)
-  }
+  /** [[graft.Sizing.volumePartitions]] over the bytes of the table at `dir`. */
+  def volumePartitions(s: SparkSession, dir: String): Int =
+    graft.Sizing.volumePartitions(dirBytes(s, dir), s.sessionState.conf.numShufflePartitions)
 
   /** Build-once materialization with an ATOMIC commit — for persisted
     * index layouts (ANN buckets/cells/codes, the incremental dedup band

@@ -9,6 +9,7 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
+import graft.Sizing
 import graft.operators.EventSourcing
 import graft.sources.{LocalFiles, Tables}
 import graft.sources.LocalFiles.deleteRec
@@ -77,18 +78,11 @@ object LiveStore {
   // trigger to carry ~500 keys — the same constant-fan-out defect
   // class the r14 state-shard sizing removed. The layout now derives
   // from the source stream's TOTAL footer row mass at store creation
-  // (~500k rows/shard, min 2 so multi-shard pruning stays exercised,
-  // capped at the session default) and is RECORDED in the store dir
+  // (`Sizing.storeShardsFor`) and is RECORDED in the store dir
   // (`_nshards`), because the modulus is store METADATA: upsert and
   // lookup on an existing store must use the count it was created
   // with, whatever session reads it later. Absent marker = the
   // historical 16 (pre-existing stores, direct-upsert specs).
-  private[graft] def storeShardsFor(totalRows: Option[Long], sessionMax: Int): Int =
-    totalRows match {
-      case None => nShards
-      case Some(r) => Streams.widthFor(r, 2, sessionMax)
-    }
-
   private val shardCache =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Integer]()
 
@@ -335,8 +329,8 @@ object LiveStore {
     shardCache.remove(dir)
     val src = Streams.eventStream(s, d).toDF()
     // pin the fresh store's shard layout from the source's measured
-    // total mass (the _nshards marker — see storeShardsFor)
-    recordShards(dir, storeShardsFor(Streams.sourceRows(s, src),
+    // total mass (the _nshards marker)
+    recordShards(dir, Sizing.storeShardsFor(Streams.sourceRows(s, src),
       s.sessionState.conf.numShufflePartitions))
     Streams.drainFresh(src, s"${dir}_checkpoint", "update", rowScaleState = false)(
       upsert(_, _, dir))

@@ -6,7 +6,7 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.graftbridge.ListenerBridge
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery,
   StreamingQueryListener}
-import graft.{GraftSession, Op, OpFamily}
+import graft.{GraftSession, Op, OpFamily, Sizing}
 import graft.sources.{LocalFiles, Tables}
 import graft.sources.LocalFiles.deleteRec
 import graft.sources.Tables.cents
@@ -236,36 +236,6 @@ object Streams extends OpFamily {
     if (rows.nonEmpty && rows.forall(_.isDefined)) Some(rows.flatten.sum) else None
   }
 
-  /** The one streaming width law: ~500k rows per shard/bucket, at
-    * least `min`, capped at the session shuffle default. */
-  private[streaming] def widthFor(rows: Long, min: Int, sessionMax: Int): Int =
-    math.max(min.toLong, math.min(sessionMax.toLong, (rows + 499999L) / 500000L)).toInt
-
-  /** The sizing law: ~500k rows/shard of per-batch INPUT mass, at
-    * least 2, capped at the session shuffle default; unknown mass
-    * keeps the historical flat default. Ops whose STATE is row-scale
-    * (a key per event — command dedup's (user, idem_key), drop-
-    * duplicates on event_id, stream-stream join buffers) additionally
-    * pass their state-key estimate: the HDFS provider's per-batch map
-    * maintenance and complete-mode emission are O(state) work that
-    * PARALLELIZES with shards, so key-heavy state wants more shards
-    * than the input rule — measured at sf0.1, the 73k-key
-    * stream_command_dedup ran addBatch 2.1 s/batch at the input rule's
-    * 2 shards vs 0.65 s at 8 (~10k keys/shard), while 500-key ops are
-    * commit-overhead-bound and best at the floor. Pure, spec-pinned. */
-  private[graft] def stateShardsFor(
-      rowsPerBatch: Option[Long], sessionMax: Int,
-      stateKeys: Option[Long] = None): Int = {
-    val byInput = rowsPerBatch match {
-      case None => return 8
-      case Some(r) => widthFor(r, 2, sessionMax)
-    }
-    val byState = stateKeys
-      .map(k => math.min(sessionMax.toLong, (k + 9999L) / 10000L))
-      .getOrElse(0L)
-    math.max(byInput.toLong, byState).toInt
-  }
-
   // RocksDB CHANGELOG checkpointing (round 11): by default the RocksDB
   // provider snapshots the full state store to the checkpoint every
   // batch; with changelog checkpointing each batch uploads only the
@@ -279,7 +249,7 @@ object Streams extends OpFamily {
   private val rocksChangelogKey =
     "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
 
-  /** The state shard count [[start]] runs `df` at: [[stateShardsFor]]
+  /** The state shard count [[start]] runs `df` at: [[Sizing.stateShardsFor]]
     * over its MEASURED per-batch row mass (its file sources' footer
     * rows over [[sourceBatches]]), capped at its session's shuffle
     * width, so production widths still grow with throughput. */
@@ -287,7 +257,7 @@ object Streams extends OpFamily {
     val s = df.sparkSession
     val total = sourceRows(s, df)
     val perBatch = total.map(r => math.max(1L, (r + sourceBatches - 1) / sourceBatches))
-    stateShardsFor(perBatch, s.conf.get("spark.sql.shuffle.partitions").toInt,
+    Sizing.stateShardsFor(perBatch, s.conf.get("spark.sql.shuffle.partitions").toInt,
       if (rowScaleState) total else None)
   }
 
@@ -1419,19 +1389,6 @@ object Streams extends OpFamily {
     })
   }
 
-  /** Bucket count for a bucketed external dimension table from its
-    * MEASURED (estimated) row mass: ~500k rows/bucket, at least 1,
-    * capped at the session shuffle default — the same sizing law the
-    * corpus-proportional shuffles use. None (unlistable source — row
-    * mass unknown) falls back to the session default: over-bucketing a
-    * small delta costs a few empty files, under-bucketing a 100x delta
-    * costs 190 M-row SMJ tasks. Pure, so Round16Spec pins the law. */
-  private[graft] def dimBucketsFor(estRows: Option[Long], sessionMax: Int): Int =
-    estRows match {
-      case None => sessionMax
-      case Some(r) => widthFor(r, 1, sessionMax)
-    }
-
   private def streamViewMaintain(s: SparkSession, d: String): DataFrame = {
     import graft.operators.Relational
     val inv = viewMaintainInvocations.incrementAndGet()
@@ -1480,7 +1437,7 @@ object Streams extends OpFamily {
     val ordRows = Tables.rowCountFromStats(s, s"$d/orders.parquet")
     val estDelta = ordRows.map(r =>
       (r * ((maxOk - t).toDouble / maxOk)).toLong)
-    val dimBuckets = dimBucketsFor(
+    val dimBuckets = Sizing.dimBucketsFor(
       estDelta, s.sessionState.conf.numShufflePartitions)
     val dimTable = s"view_dim_${Tables.datasetTag(d)}_$inv"
     // EXTERNAL table under the scratch root: a managed table would

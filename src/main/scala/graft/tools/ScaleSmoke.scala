@@ -112,7 +112,7 @@ object ScaleSmoke {
         s, s"$dir/embeddings.parquet", "vec_id",
         graft.sources.Tables.embeddings(s, dir)) + 1
       graft.functions.Similarity.knnGraphWith(
-        s, dir, graft.functions.Similarity.planesFor(n))
+        s, dir, graft.Sizing.planesFor(n))
     }),
       // knn_recall at the corpus-sized plane count — the op itself
       // grades the ORACLE-pinned 8-plane graph (its static SQL), which
@@ -163,7 +163,7 @@ object ScaleSmoke {
         s, s"$dir/embeddings.parquet", "vec_id",
         graft.sources.Tables.embeddings(s, dir)) + 1
       graft.functions.Similarity.knnRecallWith(
-        s, dir, graft.functions.Similarity.planesFor(n))
+        s, dir, graft.Sizing.planesFor(n))
     }))
 
   /** One z-order write-probe measurement: a point predicate over one

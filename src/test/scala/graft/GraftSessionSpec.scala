@@ -52,6 +52,24 @@ class GraftSessionSpec extends AnyFunSuite {
       elsewhere.head.contains("spark.sql.legacy.parquet.nanosAsLong"), elsewhere)
   }
 
+  test("sizing constants are written only in Sizing; no sample-rate override is read") {
+    // a constant spelled out elsewhere is a second copy of a law; the
+    // sample rates are values each op computes (or a spec passes)
+    val constant = """\b(500000L|499999L|2e7|32L << 20)\b""".r
+    val copies = scalaFiles("src/main").filterNot(_.getFileName.toString == "Sizing.scala")
+      .flatMap { f =>
+        java.nio.file.Files.readAllLines(f).asScala.zipWithIndex.collect {
+          case (l, i) if !l.trim.startsWith("*") && !l.trim.startsWith("/*") &&
+              constant.findFirstIn(l.split("//", 2)(0)).isDefined =>
+            s"${f.getFileName}:${i + 1}: ${l.trim}"
+        }
+      }
+    assert(copies.isEmpty, copies)
+    val overrides = linesWith(
+      "getOption(\"graft.ssjoin", "getOption(\"graft.bandsweep", "getOption(\"graft.knnrecall")
+    assert(overrides.isEmpty, overrides)
+  }
+
   test("the test session is the factory's, at the census width") {
     val conf = TestSpark.spark.conf
     assert(conf.get("spark.sql.shuffle.partitions") == PlanCensus.cores.toString)

@@ -2,60 +2,10 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** Round 10 fixes.
-  *
-  * Tiling sizer overflow (VERDICT r9 "what's wrong" #2): the D5
-  * block-pair sizer squared a LongType count in int64 — past
-  * cnt ≈ 3.04e9 the square wraps negative under non-ANSI semantics and
-  * g silently collapses to 1 task, reverting the hot bucket to a
-  * single-core grind at exactly the degenerate scale the tiling path
-  * exists for. The sizer now squares in Double and caps at (cnt,
-  * Int.MaxValue).
+/** Round 10 fixes: bucket-local contraction. (The block-pair tiling
+  * sizer's overflow tests live in SizingSpec.)
   */
 class Round10Spec extends SparkSpec {
-
-  private def g(cnt: Long, budget: Double = 2e7): Long = {
-    import spark.implicits._
-    Seq(cnt).toDF("cnt")
-      .select(graft.functions.Dedup.tileBlocks(col("cnt"), budget).cast("long"))
-      .head.getLong(0)
-  }
-
-  test("tileBlocks holds pairs-per-task at the budget across scales") {
-    // the budget fixes the BLOCK SIZE: g = ceil(c/√budget), so a
-    // block-pair task scores (c/g)² ≈ budget pairs at ANY bucket size.
-    // (The r9 sizer g = ceil(c²/budget) oversplit quadratically: the
-    // sf100 profile's 113k-row bucket got 649 blocks and ~325× input
-    // replication — ~35 GB of band-join shuffle where 26 blocks ship
-    // ~13×.)
-    for (c <- Seq(5000L, 20000L, 113864L, 1000000L, 100000000L)) {
-      val blocks = g(c)
-      val pairsPerTask = (c.toDouble / blocks) * (c.toDouble / blocks)
-      assert(pairsPerTask <= 2e7 * 1.05,
-        s"c=$c g=$blocks pairs/task=$pairsPerTask over budget")
-      assert(blocks <= math.ceil(c / math.sqrt(2e7)).toLong,
-        s"c=$c oversplit: g=$blocks")
-    }
-    // the sf100 measured hot bucket: 113,864 rows -> 26 blocks, ~19M
-    // pairs per block-pair task
-    assert(g(113864L) == 26L)
-    // healthy bucket under budget: 1 block (single-task join)
-    assert(g(1000L) == 1L)
-    assert(g(0L) >= 1L) // never zero or negative
-  }
-
-  test("tileBlocks cannot wrap or collapse at degenerate bucket sizes") {
-    // no squaring anywhere: 4e9 rows -> ceil(4e9/4472) ≈ 894k blocks,
-    // positive, monotone, far under the Int.MaxValue cap
-    val huge = g(4000000000L)
-    assert(huge == math.ceil(4e9 / math.sqrt(2e7)).toLong, s"got $huge")
-    assert(g(3000000000L) <= g(3100000000L) && g(3100000000L) <= huge)
-  }
-
-  test("tileBlocks is capped by the row count itself") {
-    // a tiny budget cannot demand more blocks than rows
-    assert(g(5L, budget = 0.5) == 5L)
-  }
 
   // ---- bucket-local contraction (the round-10 scale-killer fix) ----
   //

@@ -27,12 +27,8 @@ class Round11Spec extends SparkSpec {
     df.select("doc_a", "doc_b", "inter_n", "union_n").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
 
-  test("ssjoin sample rate is 1.0 at oracle scales; conf overrides it") {
+  test("ssjoin sample rate is 1.0 at oracle scales") {
     // sf0.001 has far fewer docs than the 500k target -> full rate
-    assert(Dedup.ssjoinSampleE6(spark, sf) == 1000000L)
-    withConf("graft.ssjoin.sampleE6" -> "123456") {
-      assert(Dedup.ssjoinSampleE6(spark, sf) == 123456L)
-    }
     assert(Dedup.ssjoinSampleE6(spark, sf) == 1000000L)
   }
 
@@ -46,14 +42,12 @@ class Round11Spec extends SparkSpec {
   }
 
   test("sampled ssjoin truth equals the full truth restricted to the doc sample") {
-    val full = pairSet(Dedup.exactJoinTruth(spark, sf))
+    val full = pairSet(Dedup.exactJoinTruth(spark, sf, Sizing.fullRateE6))
     for (rate <- Seq(700000L, 400000L)) {
-      val expected = pairSet(Dedup.exactJoinTruth(spark, sf)
+      val expected = pairSet(Dedup.exactJoinTruth(spark, sf, Sizing.fullRateE6)
         .filter(Dedup.inSsjoinSample(col("doc_a"), rate) &&
           Dedup.inSsjoinSample(col("doc_b"), rate)))
-      val sampled = withConf("graft.ssjoin.sampleE6" -> rate.toString) {
-        pairSet(Dedup.exactJoinTruth(spark, sf))
-      }
+      val sampled = pairSet(Dedup.exactJoinTruth(spark, sf, rate))
       assert(sampled == expected, s"rate=$rate")
       assert(sampled.subsetOf(full), s"rate=$rate not a truth subset")
     }
@@ -61,10 +55,8 @@ class Round11Spec extends SparkSpec {
 
   test("dedup_recall under sampling grades candidates within the same doc sample") {
     val rate = 400000L
-    val row = withConf("graft.ssjoin.sampleE6" -> rate.toString) {
-      run("dedup_recall").collect().head
-    }
-    val expectedTrue = Dedup.exactJoinTruth(spark, sf)
+    val row = Dedup.dedupRecall(spark, sf, rate).collect().head
+    val expectedTrue = Dedup.exactJoinTruth(spark, sf, Sizing.fullRateE6)
       .filter(Dedup.inSsjoinSample(col("doc_a"), rate) &&
         Dedup.inSsjoinSample(col("doc_b"), rate)).count()
     val expectedCand = Dedup.candidatePairs(spark, sf)
@@ -78,8 +70,9 @@ class Round11Spec extends SparkSpec {
     import graft.functions.Similarity
     // oracle scales: the thinning term must not even be added — the
     // gate is the bare mod-4 sample (bit-identical plan)
-    assert(Similarity.evalThinE6(spark, sf) == 1000000L)
-    assert(Dedup.sweepThinE6(spark, sf) == 1000000L)
+    val vectors = Similarity.vectorCount(spark, sf)
+    assert(Sizing.evalThinE6(vectors) == 1000000L)
+    assert(Sizing.sweepThinE6(vectors) == 1000000L)
     val ids = Tables.embeddings(spark, sf).select("vec_id")
     val full = ids.filter(Similarity.inEvalSampleThinned(col("vec_id"), 1000000L)).count()
     val bare = ids.filter(Similarity.inEvalSample(col("vec_id"))).count()

@@ -4,8 +4,7 @@ import org.apache.spark.sql.functions._
 
 /** Round-16 additions: the r13-advice fixes (the bench epoch parser
   * must parse the COMMITTED artifact format — escaped tail — and
-  * refuse cross-sf mover ratios), measured-mass sizing for R32's
-  * bucketed dimension, schema-driven R33 ANALYZE proven on a second
+  * refuse cross-sf mover ratios), schema-driven R33 ANALYZE proven on a second
   * table, and the P23 compaction plan EXECUTED with a content-identity
   * oracle.
   */
@@ -36,26 +35,6 @@ class Round16Spec extends SparkSpec {
       !queries.contains("value"))
   }
 
-  // ---- R32 bucketed-dimension sizing (r13 verdict item 1) ----
-
-  test("dimBucketsFor sizes buckets from measured delta mass: ~500k rows/bucket, capped") {
-    import graft.streaming.Streams
-    // small deltas: one bucket (a 30k-row sf0.1 delta must not pay
-    // 16 single-row files)
-    assert(Streams.dimBucketsFor(Some(0L), 32) == 1)
-    assert(Streams.dimBucketsFor(Some(30000L), 32) == 1)
-    assert(Streams.dimBucketsFor(Some(500000L), 32) == 1)
-    assert(Streams.dimBucketsFor(Some(500001L), 32) == 2)
-    // sf100's ~30 M-row delta: 60 wanted, capped at the session default
-    assert(Streams.dimBucketsFor(Some(30000000L), 32) == 32)
-    // a 100x delta still caps — parallelism beyond the session width
-    // belongs to the session config, not the table layout
-    assert(Streams.dimBucketsFor(Some(3000000000L), 32) == 32)
-    // unknown mass (unlistable source): session default, never 1 —
-    // under-bucketing an unknown corpus is the expensive failure
-    assert(Streams.dimBucketsFor(None, 32) == 32)
-  }
-
   test("rowCountFromStats reads exact row counts off parquet footers") {
     import graft.sources.Tables
     val got = Tables.rowCountFromStats(spark, s"$sf/orders.parquet")
@@ -64,19 +43,6 @@ class Round16Spec extends SparkSpec {
   }
 
   // ---- strip re-attach tiers by measured bytes (r13 advice) ----
-
-  test("stripTier gates broadcasts on estimated relation bytes, not raw row counts") {
-    import graft.functions.Pipeline
-    // sf100's measured profile (533k positions / ~half that in docs):
-    // two orders of magnitude inside the budget — tier (a)
-    assert(Pipeline.stripTier(300000L, 533000L) == 0)
-    // positions overflow the 32 MB budget but the key set fits — tier (b)
-    assert(Pipeline.stripTier(1000000L, 100000000L) == 1)
-    // boilerplate at corpus scale: nothing broadcasts — tier (c)
-    assert(Pipeline.stripTier(50000000L, 5000000000L) == 2)
-    // the old 16 M-position cutoff (≈128 MB raw) now lands in tier (b)
-    assert(Pipeline.stripTier(1000000L, 16000000L) == 1)
-  }
 
   test("stripAttachHint licenses shuffle_hash by per-task build bytes, sort-merge beyond") {
     import graft.functions.Pipeline

@@ -6,55 +6,6 @@ package graft
   */
 class Round17Spec extends SparkSpec {
 
-  test("stateShardsFor sizes state shards from measured per-batch mass") {
-    import graft.streaming.Streams
-    // bench-scale batches (33k events / 5k docs): the 2-shard floor —
-    // never 1, so cross-shard state merge stays exercised
-    assert(Streams.stateShardsFor(Some(1L), 32) == 2)
-    assert(Streams.stateShardsFor(Some(33000L), 32) == 2)
-    assert(Streams.stateShardsFor(Some(500000L), 32) == 2)
-    // ~500k rows/shard beyond the floor
-    assert(Streams.stateShardsFor(Some(1000001L), 32) == 3)
-    // sf100-scale batches: wanted width caps at the session default —
-    // production parallelism belongs to the session config
-    assert(Streams.stateShardsFor(Some(33000000L), 32) == 32)
-    assert(Streams.stateShardsFor(Some(33000000L), 256) == 66)
-    // unknown mass (e.g. the broker-backed source): the historical
-    // flat default, unchanged behavior
-    assert(Streams.stateShardsFor(None, 32) == 8)
-  }
-
-  test("row-scale state lifts the shard count above the input rule") {
-    import graft.streaming.Streams
-    // the stream_command_dedup finding: 73k state keys at the input
-    // rule's 2 shards measured addBatch 2.1 s/batch vs 0.65 s at 8 —
-    // state maintenance is O(state) work that parallelizes with
-    // shards, budgeted at ~10k keys/shard
-    assert(Streams.stateShardsFor(Some(33000L), 32, Some(73000L)) == 8)
-    assert(Streams.stateShardsFor(Some(33000L), 32, Some(100000L)) == 10)
-    // tiny state never drags the count below the input rule
-    assert(Streams.stateShardsFor(Some(33000L), 32, Some(500L)) == 2)
-    // and the cap still wins at scale
-    assert(Streams.stateShardsFor(Some(33000000L), 32, Some(1000000000L)) == 32)
-  }
-
-  test("live-store shard layout derives from source mass and is store metadata") {
-    import graft.streaming.LiveStore
-    // sizing law: ~500k rows/shard, min 2, session cap; unknown mass
-    // keeps the historical 16 (direct-upsert stores, e.g. this spec's)
-    assert(LiveStore.storeShardsFor(None, 32) == 16)
-    assert(LiveStore.storeShardsFor(Some(100000L), 32) == 2)
-    assert(LiveStore.storeShardsFor(Some(1000001L), 32) == 3)
-    assert(LiveStore.storeShardsFor(Some(100000000L), 32) == 32)
-    // the modulus is STORE metadata: a recorded layout is read back by
-    // any later session; an unmarked store keeps the default
-    val root = tempDir("graft_shards")
-    assert(LiveStore.storeShards(root.getPath + "/unmarked") == 16)
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(root.getPath, "_nshards"), "5")
-    assert(LiveStore.storeShards(root.getPath) == 5)
-  }
-
   test("a stream's state shards size from the started frame's file-source mass") {
     import graft.streaming.{Ev, Streams}
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream

@@ -33,17 +33,6 @@ class Round9bSpec extends SparkSpec {
     assert(viaFallback == direct)
   }
 
-  test("corpus-sized plane count floors at the oracle config and grows with n") {
-    import graft.functions.Similarity.planesFor
-    // every driver test scale lands exactly on the oracle-pinned 8
-    assert(planesFor(200) == 8 && planesFor(2000) == 8 && planesFor(12800) == 8)
-    // growth: ~50-vector expected buckets
-    assert(planesFor(12801) == 9)
-    assert(planesFor(20000) == 9)
-    assert(planesFor(200000) == 12) // the sf10 smoke's measured-right config
-    assert(planesFor(20000000) == 19)
-  }
-
   test("the incremental threshold derived from stats matches the scan form") {
     val viaStats = graft.functions.Dedup.incThreshold(spark, sf)
     val viaScan = graft.sources.Tables.documents(spark, sf)
