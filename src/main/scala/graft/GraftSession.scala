@@ -10,6 +10,10 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
   *    standalone-cluster evidence runs), else `local[cores]`;
   *  - `cores` shuffle partitions, UTC, AQE on, UI off, log level WARN,
   *    warehouse under /tmp (no graft main writes a managed table);
+  *  - a code cache of [[codeCacheEntries]] generated classes: a pass
+  *    over the four ingest stream ops and their benchmark's checks
+  *    generates 109 distinct ones, and with Spark's 100 each pass
+  *    compiled about 20 again;
   *  - `GRAFT_STATESTORE=rocksdb` puts stateful streams on the RocksDB
   *    provider (`graft.stream.stateStore`);
   *  - `GRAFT_RELIABLE=true` routes lineage cuts through the filesystem
@@ -30,6 +34,10 @@ object GraftSession {
   def defaultCores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
     .getOrElse(Runtime.getRuntime.availableProcessors)
 
+  /** Spark's `spark.sql.codegen.cache.maxEntries`, a static conf: only
+    * the session's creator can set it. */
+  val codeCacheEntries = 1000
+
   def apply(cores: Int = defaultCores): SparkSession = {
     val spark = SparkSession.builder()
       .master(sys.env.getOrElse("GRAFT_MASTER", s"local[$cores]"))
@@ -39,6 +47,7 @@ object GraftSession {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
+      .config("spark.sql.codegen.cache.maxEntries", codeCacheEntries.toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     sys.env.get("GRAFT_STATESTORE")

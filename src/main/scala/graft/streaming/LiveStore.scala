@@ -1,8 +1,12 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+import org.apache.parquet.column.statistics.Statistics
+import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.expressions.{Attribute, UnsafeProjection}
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.datasources.PartitionedFile
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
@@ -38,8 +42,11 @@ import graft.sources.LocalFiles.deleteRec
   *    hash aggregate. A point lookup is `getAggregateBytes` while
   *    ingestion runs, answered from the files as surge answers it from
   *    its local store: the driver reads only the key's shard file of
-  *    each live root and folds those ≤ 1 + [[compactEvery]] rows with
-  *    the same monoid in Scala — no Spark job;
+  *    each live root, and of it only the row groups whose footer stats
+  *    can hold the key, and folds those ≤ 1 + [[compactEvery]] rows
+  *    with the same monoid in Scala — no Spark job. Spark's parquet
+  *    reader and the decode are built once per session, so a lookup
+  *    broadcasts and analyses nothing;
   *  - when live deltas exceed [[compactEvery]], upsert folds them into
   *    a new `base_v<upToBatch>` — the RocksDB background-compaction
   *    analog that bounds read fan-in. E21's log-cleaner is the same
@@ -288,15 +295,102 @@ object LiveStore {
 
   private val tombstoneCode = 1L // evTypes.indexOf("error")
 
+  /** What every lookup on one session shares, built once per session
+    * and again when its SQL conf changes (the conf it was built under
+    * is `conf`):
+    *
+    *  - Spark's parquet reader of [[packedSchema]], with no filter: its
+    *    build broadcasts the Hadoop conf, and the key differs per call,
+    *    so [[rowGroups]] skips row groups instead;
+    *  - the decode: `decodeState` analysed over the packed schema once.
+    *    The analysed plan is a stack of `Project`s (`CollapseProject`
+    *    keeps the two apart, since `pay` is used twice); their bound
+    *    projections run on the 0 or 1 merged row, under a lock, since a
+    *    projection reuses its output row. `output` is the decoded
+    *    schema's attributes.
+    *
+    * Nothing here refers to the session or to store contents. */
+  private final class LookupPieces(val conf: Map[String, String],
+      val read: PartitionedFile => Iterator[InternalRow],
+      val output: Seq[Attribute], projections: Seq[UnsafeProjection]) {
+    def decode(row: InternalRow): InternalRow = synchronized {
+      projections.foldLeft(row)((r, p) => p(r)).copy()
+    }
+  }
+
+  private def buildPieces(s: SparkSession, conf: Map[String, String]): LookupPieces = {
+    val decoded = EventSourcing.decodeState(ColumnBridge.dataFrame(s,
+      LocalRelation(DataTypeUtils.toAttributes(packedSchema)))).queryExecution.analyzed
+    def stack(p: LogicalPlan): List[UnsafeProjection] = p match {
+      case Project(list, child) => UnsafeProjection.create(list, child.output) :: stack(child)
+      case _: LocalRelation => Nil
+      case other => sys.error(s"decodeState analysed to ${other.nodeName}, not a projection")
+    }
+    new LookupPieces(conf,
+      new ParquetFileFormat().buildReaderWithPartitionValues(s, packedSchema,
+        new StructType(), packedSchema, Nil, Map("returning_batch" -> "false"),
+        s.sessionState.newHadoopConf()),
+      decoded.output, stack(decoded).reverse)
+  }
+
+  /** Per session, weakly: a collected session's pieces go with it. */
+  private val lookupPieces = new java.util.WeakHashMap[SparkSession, LookupPieces]()
+
+  private def piecesFor(s: SparkSession): LookupPieces = {
+    val conf = s.sessionState.conf.getAllConfs
+    Option(lookupPieces.synchronized(lookupPieces.get(s))).filter(_.conf == conf)
+      .getOrElse {
+        val p = buildPieces(s, conf)
+        lookupPieces.synchronized(lookupPieces.put(s, p))
+        p
+      }
+  }
+
+  private val footers = new ParquetMetadataConverter()
+
+  /** The byte ranges of `f`'s row groups whose `user_id` stats can hold
+    * `key` (a row group without them is kept), as (start, length).
+    * The footer is read straight off the local file. A file that does
+    * not end in parquet's magic is one range, for the reader to
+    * refuse. */
+  private def rowGroups(f: java.io.File, key: Long): Seq[(Long, Long)] = {
+    val in = new java.io.RandomAccessFile(f, "r")
+    try {
+      val n = in.length
+      val tail = new Array[Byte](8)
+      if (n >= 12) { in.seek(n - 8); in.readFully(tail) }
+      if (new String(tail, 4, 4, java.nio.charset.StandardCharsets.US_ASCII) != "PAR1")
+        Seq(0L -> n)
+      else {
+        val len = java.nio.ByteBuffer.wrap(tail).order(java.nio.ByteOrder.LITTLE_ENDIAN).getInt
+        val meta = new Array[Byte](len)
+        in.seek(n - 8 - len)
+        in.readFully(meta)
+        footers.readParquetMetadata(new java.io.ByteArrayInputStream(meta),
+          ParquetMetadataConverter.NO_FILTER).getBlocks.asScala.toSeq
+          .filter(_.getColumns.asScala.find(_.getPath.toDotString == "user_id").forall { c =>
+            val st: Statistics[_] = c.getStatistics
+            st == null || !st.hasNonNullValue || (
+              st.genericGetMin.asInstanceOf[java.lang.Long] <= key &&
+                key <= st.genericGetMax.asInstanceOf[java.lang.Long])
+          })
+          .map(b => b.getStartingPos -> b.getCompressedSize)
+      }
+    } finally in.close()
+  }
+
   /** Point lookup BY KEY, read on the driver with no Spark job. Each
     * live root contributes only its `shard=<floorMod(key, n)>` data
     * files (the modulus `upsert`'s pmod writes with, negative keys
-    * included); no other shard's file is opened. Spark's own parquet
-    * reader reads them with the key filter pushed down, so row groups
-    * skip by their stats and decimal and timestamp conversion stay
-    * Spark's. The ≤ 1 + [[compactEvery]] rows of the key fold through
-    * [[mergedKey]], and the 0 or 1 row decodes over a local relation,
-    * which the optimizer folds: `collect()` runs no job either. */
+    * included); no other shard's file is opened. Of those, only the
+    * row groups whose footer `user_id` stats can hold the key are read,
+    * by Spark's own parquet reader, so decimal and timestamp
+    * conversion stay Spark's. The reader and the decode are the
+    * session's [[LookupPieces]]: a call broadcasts nothing and
+    * analyses nothing. The ≤ 1 + [[compactEvery]] rows of the key fold
+    * through [[mergedKey]], and the 0 or 1 row is decoded and returned
+    * as a local relation on fresh attributes, so `collect()` runs no
+    * job either. Listing, footers and rows are read on every call. */
   def lookup(s: SparkSession, dir: String, key: Long): DataFrame = {
     val roots = livePaths(dir)
     if (roots.isEmpty) sys.error(s"live store at $dir has no committed data")
@@ -304,17 +398,17 @@ object LiveStore {
     val files = roots.flatMap(r =>
       Option(new java.io.File(r, shard).listFiles()).getOrElse(Array.empty))
       .filter(f => f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
-    val read = new ParquetFileFormat().buildReaderWithPartitionValues(s, packedSchema,
-      new StructType(), packedSchema, Seq(org.apache.spark.sql.sources.EqualTo("user_id", key)),
-      Map("returning_batch" -> "false"), s.sessionState.newHadoopConf())
+    val pieces = piecesFor(s)
     val rows = files.flatMap { f =>
-      read(PartitionedFile(InternalRow.empty,
-        org.apache.spark.paths.SparkPath.fromPath(new org.apache.hadoop.fs.Path(f.toURI)),
-        0L, f.length(), Array.empty, f.lastModified(), f.length()))
-        .filter(r => !r.isNullAt(0) && r.getLong(0) == key).map(_.copy())
+      val path = org.apache.spark.paths.SparkPath.fromPath(new org.apache.hadoop.fs.Path(f.toURI))
+      rowGroups(f, key).flatMap { case (start, length) =>
+        pieces.read(PartitionedFile(InternalRow.empty, path, start, length, Array.empty,
+          f.lastModified(), f.length()))
+          .filter(r => !r.isNullAt(0) && r.getLong(0) == key).map(_.copy())
+      }
     }
-    EventSourcing.decodeState(ColumnBridge.dataFrame(s,
-      LocalRelation(DataTypeUtils.toAttributes(packedSchema), mergedKey(key, rows).toSeq)))
+    ColumnBridge.analyzedFrame(s, LocalRelation(pieces.output.map(_.newInstance()),
+      mergedKey(key, rows).map(pieces.decode).toSeq))
   }
 
   /** Full decoded snapshot (the read-side view of the whole store):

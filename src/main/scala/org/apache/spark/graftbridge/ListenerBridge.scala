@@ -2,6 +2,7 @@ package org.apache.spark.graftbridge
 
 import scala.jdk.CollectionConverters._
 import org.apache.spark.SparkContext
+import org.apache.spark.storage.BroadcastBlockId
 import org.apache.spark.util.ListenerBus
 
 /** `SparkContext.listenerBus` is `private[spark]`; metrics probes that
@@ -12,7 +13,8 @@ import org.apache.spark.util.ListenerBus
   * cell k can land after the sleep and be wiped by (or attributed to)
   * cell k+1 (the r12 advice finding). Same shim pattern as
   * sql.graftbridge.ColumnBridge; nothing else reaches into core
-  * internals.
+  * internals. [[broadcastIds]] reads the context's block manager, the
+  * one place a broadcast is visible.
   */
 object ListenerBridge {
   def waitUntilEmpty(sc: SparkContext, timeoutMs: Long): Unit =
@@ -33,4 +35,9 @@ object ListenerBridge {
         case _ => false
       }
       .foreach(sc.listenerBus.removeListener)
+
+  /** Ids of the broadcasts whose blocks `sc`'s block manager holds. */
+  def broadcastIds(sc: SparkContext): Set[Long] =
+    sc.env.blockManager.getMatchingBlockIds(_.isBroadcast)
+      .collect { case BroadcastBlockId(id, _) => id }.toSet
 }

@@ -37,9 +37,14 @@ object ColumnBridge {
     * on and writes its source log through that session's Hadoop conf,
     * so each one is re-pointed at `spark` too. */
   def rebind(spark: SparkSession, df: Dataset[_]): DataFrame = {
-    val plan = df.queryExecution.analyzed.transform {
+    analyzedFrame(spark, df.queryExecution.analyzed.transform {
       case r: StreamingRelation => r.copy(dataSource = r.dataSource.copy(sparkSession = spark))
-    }
+    })
+  }
+
+  /** A frame on `spark` over `plan`, which is resolved already: marked
+    * analyzed, so the frame runs no analysis. */
+  def analyzedFrame(spark: SparkSession, plan: LogicalPlan): DataFrame = {
     plan.setAnalyzed()
     dataFrame(spark, plan)
   }

@@ -4,6 +4,7 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicBoolean
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.DataFrame
+import graft.streaming.{Ev, LiveStore}
 
 /** graft runs every setting of its own on a child session, so ops may
   * share their caller's session across threads: a batch op run over
@@ -86,5 +87,46 @@ class ConcurrentSessionSpec extends SparkSpec {
     val deadline = System.nanoTime() + 30000000000L
     while (settled() != before && System.nanoTime() < deadline) Thread.sleep(20)
     assert(settled() == before)
+  }
+
+  test("lookups from 4 threads on one session each equal the filtered snapshot") {
+    import spark.implicits._
+    val dir = tempDir("graft_concurrent_lookup").getPath + "/store"
+    val t0 = 1704067200000L
+    (0 until 3).foreach { b =>
+      LiveStore.upsert((0 until 40).map { i =>
+        Ev(b * 100L + i, new java.sql.Timestamp(t0 + (b * 40 + i) * 1000L), (i * 7 + b) % 30 - 5L,
+          graft.operators.EventSourcing.evTypes((i + b) % 5), i / 8.0)
+      }.toDF(), b, dir)
+    }
+    val snap = LiveStore.snapshot(spark, dir).collect().map(r => r.getAs[Long]("user_id") -> r).toMap
+    val keys = (-6L to 26L).toSeq // absent keys too
+    val failures = new ConcurrentLinkedQueue[Throwable]()
+    val mismatches = new ConcurrentLinkedQueue[Long]()
+    (0 until 4).map { t =>
+      thread((0 until 5).foreach(_ => keys.map(_ + t % 2).foreach { k =>
+        if (LiveStore.lookup(spark, dir, k).collect().toSeq != snap.get(k).toSeq) mismatches.add(k)
+      }), failures)
+    }.foreach(_.join())
+    assert(failures.isEmpty, failures.asScala.map(_.toString).mkString("; "))
+    assert(mismatches.isEmpty, s"lookups that differ from the snapshot: $mismatches")
+  }
+
+  test("a child session's lookup pieces do not keep the child alive") {
+    import spark.implicits._
+    import org.apache.spark.graftbridge.ListenerBridge
+    val dir = tempDir("graft_child_lookup").getPath + "/store"
+    LiveStore.upsert(Seq(Ev(1, new java.sql.Timestamp(0L), 7, "click", 1.0)).toDF(), 0L, dir)
+    var child = GraftSession.child(spark)
+    assert(LiveStore.lookup(child, dir, 7L).collect().length == 1)
+    val ref = new java.lang.ref.WeakReference(child)
+    child = null
+    val deadline = System.nanoTime() + 30000000000L
+    while (ref.get != null && System.nanoTime() < deadline) {
+      ListenerBridge.waitUntilEmpty(spark.sparkContext, 30000L)
+      System.gc()
+      Thread.sleep(50)
+    }
+    assert(ref.get == null, "the child session is still reachable")
   }
 }

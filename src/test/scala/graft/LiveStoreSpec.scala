@@ -238,4 +238,80 @@ class LiveStoreSpec extends SparkSpec {
     val absent = LiveStore.lookup(spark, dir, 999L)
     assert(absent.schema == snap.schema && absent.collect().isEmpty)
   }
+
+  test("a lookup sees a delta published just before it and the new base right after a compaction") {
+    import spark.implicits._
+    val dir = storeDir("graft_livestore_fresh")
+    def looked(k: Long) = LiveStore.lookup(spark, dir, k).collect().toSeq
+    def filtered(k: Long) =
+      LiveStore.snapshot(spark, dir).filter(col("user_id") === k).collect().toSeq
+    LiveStore.upsert(Seq(Ev(1, ts(0), 7, "click", 1.0)).toDF(), 0L, dir)
+    assert(looked(7L).map(_.getAs[Long]("n_events")) == Seq(1L))
+    assert(looked(23L).isEmpty)
+    // each publish is seen by the next lookup, in the shard it touches
+    LiveStore.upsert(Seq(Ev(2, ts(1), 7, "view", 2.0)).toDF(), 1L, dir)
+    assert(looked(7L).map(_.getAs[Long]("n_events")) == Seq(2L))
+    LiveStore.upsert(Seq(Ev(3, ts(2), 23, "purchase", 3.0)).toDF(), 2L, dir)
+    assert(looked(23L).map(_.getAs[String]("last_type")) == Seq("purchase"))
+    LiveStore.upsert(Seq(Ev(4, ts(3), 23, "error", 0.0)).toDF(), 3L, dir)
+    assert(looked(23L).map(_.getAs[String]("last_type")) == Seq("error"))
+    Seq(7L, 23L).foreach(k => assert(looked(k) == filtered(k), s"key $k"))
+    // the cleaner folds the four deltas into base_v3 without key 23,
+    // whose latest record is a tombstone, and deletes the deltas
+    LiveStore.compact(spark, dir, purgeTombstones = true)
+    assert(new java.io.File(dir).list().toSet.filter(_.matches("(base_v|delta_b).*")) ==
+      Set("base_v3"))
+    assert(looked(23L).isEmpty)
+    assert(looked(7L) == filtered(7L) && looked(7L).map(_.getAs[Long]("n_events")) == Seq(2L))
+  }
+
+  test("a lookup reads only the row groups whose user_id stats can hold its key") {
+    import spark.implicits._
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import scala.jdk.CollectionConverters._
+    // 400 keys of shard 7 in a 16-shard store, two events each
+    val keys = (0 until 400).map(i => 7L + 16L * i)
+    val src = storeDir("graft_livestore_rg_src")
+    LiveStore.upsert(keys.zipWithIndex.flatMap { case (k, i) =>
+      Seq(Ev(2L * i, ts(0), k, "click", 1.0), Ev(2L * i + 1, ts(1), k, "purchase", i / 4.0))
+    }.toDF(), 0L, src)
+    // the same rows as one base file, sorted by key, 50 rows a row group
+    val dir = storeDir("graft_livestore_rg")
+    spark.read.parquet(s"$src/delta_b0").repartition(1).sortWithinPartitions("shard", "user_id")
+      .write.options(graft.sources.LocalFiles.writeOptions)
+      .option("parquet.block.row.count.limit", "50")
+      .partitionBy("shard").parquet(s"$dir/base_v0")
+    val file = dataFiles(new java.io.File(dir)).keys.toSeq match {
+      case Seq(f) => new java.io.File(f)
+      case fs => fail(s"want one data file: $fs")
+    }
+    val blocks = {
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(file.toURI), spark.sessionState.newHadoopConf()))
+      try r.getFooter.getBlocks.asScala.toSeq finally r.close()
+    }
+    assert(blocks.size == 8, s"want 8 row groups, got ${blocks.size}")
+    val key = keys(123)
+    def holds(b: org.apache.parquet.hadoop.metadata.BlockMetaData) = {
+      val st: org.apache.parquet.column.statistics.Statistics[_] =
+        b.getColumns.asScala.find(_.getPath.toDotString == "user_id").get.getStatistics
+      st.genericGetMin.asInstanceOf[java.lang.Long] <= key &&
+        key <= st.genericGetMax.asInstanceOf[java.lang.Long]
+    }
+    val (kept, others) = blocks.partition(holds)
+    assert(kept.size == 1)
+    // every other row group's bytes become garbage; the footer stays.
+    // The checksum sidecar goes, or every read would fail its check.
+    val out = new java.io.RandomAccessFile(file, "rw")
+    try others.foreach { b =>
+      out.seek(b.getStartingPos)
+      out.write(Array.fill(b.getCompressedSize.toInt)(0x5a.toByte))
+    } finally out.close()
+    assert(new java.io.File(file.getParent, s".${file.getName}.crc").delete())
+    val want = LiveStore.snapshot(spark, src).filter(col("user_id") === key).collect().toSeq
+    assert(want.map(_.getAs[Double]("last_value")) == Seq(123 / 4.0))
+    assert(LiveStore.lookup(spark, dir, key).collect().toSeq == want)
+    intercept[Exception](LiveStore.snapshot(spark, dir).collect())
+  }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.sources.Tables
 
 /** The plan-shape gate over every batch op, off ONE census walk
   * (PlanCensus): exchange counts pinned in the golden file, the
@@ -180,6 +181,18 @@ class PlanCensusSpec extends SparkSpec {
       assert(!plan.contains("SortMergeJoin"),
         s"$name should plan its full-outer join sort-free:\n$plan")
       assert(plan.contains("ShuffledHashJoin"), s"$name lost its hash join")
+    }
+  }
+
+  test("PlanDump writes byte-identical text for an op planned twice in one session") {
+    import org.apache.spark.sql.execution.FormattedMode
+    // localCheckpoint RDDs, a lambda, a work-dir index
+    for (name <- Seq("dedup_substring", "api_commands", "ann_ivf")) {
+      val raw = Seq.fill(2)(PlanCensus.capture(spark, sf, name).explainString(FormattedMode))
+      assert(raw(0) != raw(1), s"$name: two raw captures are already equal")
+      val dumps = raw.map(tools.PlanDump.normalised(spark, _))
+      assert(dumps(0) == dumps(1), s"$name:\n${dumps(0)}\n---\n${dumps(1)}")
+      assert(!dumps(0).contains(Tables.workDir(spark)), name)
     }
   }
 }

@@ -42,6 +42,18 @@ class StreamArtifactStateSpec extends SparkSpec {
     assert(compiled <= 2, s"$compiled classes compiled")
   }
 
+  test("a second pass over the ingest stream ops and a join op compiles at most 2 classes") {
+    // ~110 distinct generated classes, more than Spark's default code
+    // cache of 100 holds: with it, each later pass compiled ~50 again
+    val pass = Seq("stream_fold", "es_live_store", "stream_dedup", "stream_command_dedup",
+      "q5_multijoin")
+    pass.foreach(op => assert(run(op).count() > 0, op))
+    val before = tools.Profile.compiles()
+    pass.foreach(op => assert(run(op).count() > 0, op))
+    val compiled = tools.Profile.compiles() - before
+    assert(compiled <= 2, s"$compiled classes compiled")
+  }
+
   test("a stream leaves the caller's isolation setting untouched, also when the sink throws") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext

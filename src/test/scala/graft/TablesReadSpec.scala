@@ -137,6 +137,26 @@ class TablesReadSpec extends SparkSpec {
     assert(got == Seq(2L))
   }
 
+  test("warm lookups broadcast nothing; a conf change builds the reader once more") {
+    import spark.implicits._
+    import org.apache.spark.graftbridge.ListenerBridge.broadcastIds
+    val dir = tmp("graft_read_bcast") + "/store"
+    LiveStore.upsert(Seq(Ev(1, new Timestamp(0L), 7, "click", 1.0)).toDF(), 0L, dir)
+    LiveStore.upsert(Seq(Ev(2, new Timestamp(60000L), 7, "purchase", 2.5)).toDF(), 1L, dir)
+    def looked() = LiveStore.lookup(spark, dir, 7L).collect().map(_.getAs[Long]("n_events")).toSeq
+    def newBroadcasts(body: => Unit): Int = {
+      val before = broadcastIds(spark.sparkContext)
+      body
+      (broadcastIds(spark.sparkContext) -- before).size
+    }
+    assert(looked() == Seq(2L))
+    assert(newBroadcasts((1 to 20).foreach(_ => assert(looked() == Seq(2L)))) == 0)
+    withConf("spark.sql.parquet.enableVectorizedReader" -> "false") {
+      assert(newBroadcasts(assert(looked() == Seq(2L))) == 1)
+      assert(newBroadcasts((1 to 5).foreach(_ => assert(looked() == Seq(2L)))) == 0)
+    }
+  }
+
   test("src/main reads parquet only through Tables.read") {
     // the one plain read left is Tables.read's no-data-file fallback
     val call = java.util.regex.Pattern.quote("read" + ".parquet(").r
