@@ -2,14 +2,24 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import scala.jdk.CollectionConverters._
+import org.apache.hadoop.conf.Configuration
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.column.statistics.Statistics
-import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.filter2.compat.FilterCompat
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.BlockMetaData
+import org.apache.parquet.io.{ColumnIOFactory, LocalInputFile, MessageColumnIO}
+import org.apache.parquet.schema.MessageType
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
-import org.apache.spark.sql.execution.datasources.PartitionedFile
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
+import org.apache.spark.sql.execution.datasources.DataSourceUtils
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetReadSupport,
+  ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.execution.datasources.parquet.graftbridge.ParquetBridge
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
@@ -44,16 +54,18 @@ import graft.sources.LocalFiles.deleteRec
   *    its local store: the driver reads only the key's shard file of
   *    each live root, and of it only the row groups whose footer stats
   *    can hold the key, and folds those ≤ 1 + [[compactEvery]] rows
-  *    with the same monoid in Scala — no Spark job. Spark's parquet
-  *    reader and the decode are built once per session, so a lookup
-  *    broadcasts and analyses nothing;
+  *    with the same monoid in Scala — no Spark job. Each shard file
+  *    is opened once, off the local file, and its records become rows
+  *    through Spark's own row materializer; what depends on the session
+  *    is built once per session, so a lookup broadcasts and analyses
+  *    nothing;
   *  - when live deltas exceed [[compactEvery]], upsert folds them into
   *    a new `base_v<upToBatch>` — the RocksDB background-compaction
   *    analog that bounds read fan-in. E21's log-cleaner is the same
   *    pass with tombstone purge switched on.
   *
   * Every directory that readers can see is COMMITTED ATOMICALLY:
-  * writers build `_staging_*` (invisible to [[livePaths]]), then one
+  * writers build `_staging_*` (invisible to [[Roots]]), then one
   * atomic rename publishes it (surge's producer commits state+events in
   * one Kafka transaction — `KafkaProducerActorImpl.scala:124,165,324`;
   * a filesystem rename is the one atomic primitive a parquet store
@@ -115,53 +127,47 @@ object LiveStore {
   private def shardOf(dir: String, c: Column) =
     pmod(c, lit(storeShards(dir).toLong))
 
-  private def subdirs(dir: String, prefix: String): Seq[java.io.File] =
-    Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith(prefix)).toSeq
+  /** One listing of a store dir: its bases and its deltas, each
+    * sorted by version. `_staging_*` and `_retired_*` dirs are neither:
+    * uncommitted writes are invisible to every reader by construction. */
+  private final case class Roots(bases: Seq[(Long, java.io.File)],
+      deltas: Seq[(Long, java.io.File)]) {
+    /** The newest base's version, -1 without a base. */
+    val version: Long = bases.lastOption.fold(-1L)(_._1)
 
-  private def deltaDirs(dir: String): Seq[(Long, java.io.File)] =
-    subdirs(dir, "delta_b")
-      .map(f => (f.getName.stripPrefix("delta_b").toLong, f)).sortBy(_._1)
+    /** The deltas past the newest base. */
+    def liveDeltas: Seq[(Long, java.io.File)] = deltas.filter(_._1 > version)
 
-  private def baseDirOf(dir: String): Option[(Long, java.io.File)] =
-    subdirs(dir, "base_v")
-      .map(f => (f.getName.stripPrefix("base_v").toLong, f)).sortBy(_._1).lastOption
+    /** The committed, live store roots: newest base + deltas past it.
+      * Dirs RETIRED by a compaction are invisible here, but stay on
+      * disk for one grace cycle — see [[stale]]. */
+    def live: Seq[java.io.File] = bases.lastOption.map(_._2).toSeq ++ liveDeltas.map(_._2)
 
-  /** The committed, live store roots: newest base + deltas past it.
-    * `_staging_*` dirs are never listed — uncommitted writes are
-    * invisible to every reader by construction. Dirs RETIRED by a
-    * compaction (older bases, deltas at or below the newest base's
-    * version) are equally invisible here, but stay on disk for one
-    * grace cycle — see [[staleDirs]]. */
-  private def livePaths(dir: String): Seq[String] = {
-    val base = baseDirOf(dir)
-    val v = base.map(_._1).getOrElse(-1L)
-    base.map(_._2.getPath).toSeq ++
-      deltaDirs(dir).collect { case (id, f) if id > v => f.getPath }
+    /** Dirs a PREVIOUS compaction retired: every base but the newest,
+      * and deltas already folded into it. New readers never list them
+      * ([[live]] filters by version), but a scan that planned over
+      * the old roots may still be draining — so retirement is deferred
+      * one full compaction cycle instead of deleting inputs the moment
+      * the new base lands (deleting eagerly would hand an in-flight scan
+      * a FileNotFoundException; planning-time atomicity alone doesn't
+      * cover execution). */
+    def stale: Seq[java.io.File] =
+      bases.dropRight(1).map(_._2) ++ deltas.filter(_._1 <= version).map(_._2)
   }
 
-  /** Dirs a PREVIOUS compaction retired: every base but the newest,
-    * and deltas already folded into it. New readers never list them
-    * ([[livePaths]] filters by version), but a scan that planned over
-    * the old roots may still be draining — so retirement is deferred
-    * one full compaction cycle instead of deleting inputs the moment
-    * the new base lands (deleting eagerly would hand an in-flight scan
-    * a FileNotFoundException; planning-time atomicity alone doesn't
-    * cover execution). */
-  private def staleDirs(dir: String): Seq[java.io.File] = {
-    val v = baseDirOf(dir).map(_._1).getOrElse(-1L)
-    subdirs(dir, "base_v").filter(_.getName.stripPrefix("base_v").toLong < v) ++
-      deltaDirs(dir).collect { case (id, f) if id <= v => f }
+  private def roots(dir: String): Roots = {
+    val dirs = Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
+      .filter(_.isDirectory).toSeq
+    def versioned(prefix: String) = dirs.filter(_.getName.startsWith(prefix))
+      .map(f => (f.getName.stripPrefix(prefix).toLong, f)).sortBy(_._1)
+    Roots(versioned("base_v"), versioned("delta_b"))
   }
 
   /** base ∪ live deltas, one scan per root (a multi-path read would
     * try to infer ONE partition scheme across the roots and reject the
     * delta_b / base_v dir names). Fan-in ≤ 1 + compactEvery. */
-  private def readPacked(s: SparkSession, dir: String): Option[DataFrame] = {
-    val paths = livePaths(dir)
-    if (paths.isEmpty) None
-    else Some(paths.map(p => Tables.read(s, p)).reduce(_.unionByName(_)))
-  }
+  private def readPacked(s: SparkSession, live: Seq[java.io.File]): Option[DataFrame] =
+    live.map(f => Tables.read(s, f.getPath)).reduceOption(_.unionByName(_))
 
   /** The commutative-monoid fold — base rows and any number of delta
     * rows merge through ONE hash aggregate, in any order. [[mergedKey]]
@@ -205,7 +211,7 @@ object LiveStore {
     val staging = new java.io.File(dir, s"_staging_$name")
     deleteRec(staging)
     writePacked(df, staging)
-    if (skipEmpty && subdirs(staging.getPath, "shard=").isEmpty) {
+    if (skipEmpty && !Option(staging.list()).exists(_.exists(_.startsWith("shard=")))) {
       deleteRec(staging)
       false
     } else {
@@ -223,21 +229,22 @@ object LiveStore {
     * directory IS the idempotence marker: a replayed id finds its dir
     * and returns. Cost per call: one packedState agg over the batch +
     * one write of the batch's keys, a single job. The store is never
-    * read. An empty batch learns it is empty from that write: it
-    * publishes no delta and triggers no compaction. */
+    * read, and its dir is listed once. An empty batch learns it is
+    * empty from that write: it publishes no delta and triggers no
+    * compaction. */
   def upsert(batch: DataFrame, batchId: Long, dir: String): Unit = {
     val s = batch.sparkSession
     new java.io.File(dir).mkdirs()
-    val alreadyCommitted = new java.io.File(dir, s"delta_b$batchId").exists ||
-      baseDirOf(dir).exists(_._1 >= batchId) // folded into a base already
+    val before = roots(dir)
+    val alreadyCommitted = before.deltas.exists(_._1 == batchId) ||
+      before.version >= batchId // folded into a base already
     if (alreadyCommitted) return
     if (!publish(
       EventSourcing.packedState(batch).withColumn("shard", shardOf(dir, col("user_id"))),
       dir, s"delta_b$batchId", skipEmpty = true)) return // an empty batch
-    // trigger on LIVE deltas only — retired ones awaiting their grace
-    // deletion don't add read fan-in
-    val v = baseDirOf(dir).map(_._1).getOrElse(-1L)
-    if (deltaDirs(dir).count(_._1 > v) > compactEvery)
+    // trigger on LIVE deltas only, this one included — retired ones
+    // awaiting their grace deletion don't add read fan-in
+    if (before.liveDeltas.size + 1 > compactEvery)
       compact(s, dir, purgeTombstones = false)
   }
 
@@ -253,12 +260,12 @@ object LiveStore {
       purgeTombstones: Boolean): Unit = {
     // drain the grace period: dirs the PREVIOUS compaction retired have
     // had a full cycle for in-flight scans to finish — delete them now
-    staleDirs(dir).foreach(deleteRec)
-    val base = baseDirOf(dir)
-    val deltas = deltaDirs(dir).filter { case (id, _) => id > base.map(_._1).getOrElse(-1L) }
-    if (deltas.isEmpty && !(purgeTombstones && base.isDefined)) return
-    val upTo = (base.map(_._1).toSeq ++ deltas.map(_._1)).max
-    val folded = merged(readPacked(s, dir).get)
+    val r = roots(dir)
+    r.stale.foreach(deleteRec)
+    val deltas = r.liveDeltas
+    if (deltas.isEmpty && !(purgeTombstones && r.bases.nonEmpty)) return
+    val upTo = (r.bases.lastOption.map(_._1).toSeq ++ deltas.map(_._1)).max
+    val folded = merged(readPacked(s, r.live).get)
     val kept =
       if (purgeTombstones)
         folded.filter(
@@ -290,7 +297,7 @@ object LiveStore {
     // (tombstone purge) is the exception: it runs post-stream with no
     // concurrent readers by contract, and "physically purges dead keys"
     // must mean the store's FILES — so it drains its own inputs now.
-    if (purgeTombstones) staleDirs(dir).foreach(deleteRec)
+    if (purgeTombstones) roots(dir).stale.foreach(deleteRec)
   }
 
   private val tombstoneCode = 1L // evTypes.indexOf("error")
@@ -299,9 +306,12 @@ object LiveStore {
     * and again when its SQL conf changes (the conf it was built under
     * is `conf`):
     *
-    *  - Spark's parquet reader of [[packedSchema]], with no filter: its
-    *    build broadcasts the Hadoop conf, and the key differs per call,
-    *    so [[rowGroups]] skips row groups instead;
+    *  - the read: the Hadoop conf carrying the schema converter's keys
+    *    as Spark's parquet reader sets them, the converter built from
+    *    it, the session's rebase modes and its INT96 conversion zone.
+    *    Per file schema, the requested schema and its `ColumnIO` are
+    *    built once too ([[layout]]): both are immutable, so every
+    *    file of that schema, on every thread, shares them;
     *  - the decode: `decodeState` analysed over the packed schema once.
     *    The analysed plan is a stack of `Project`s (`CollapseProject`
     *    keeps the two apart, since `pay` is used twice); their bound
@@ -310,13 +320,76 @@ object LiveStore {
     *    schema's attributes.
     *
     * Nothing here refers to the session or to store contents. */
-  private final class LookupPieces(val conf: Map[String, String],
-      val read: PartitionedFile => Iterator[InternalRow],
+  private[graft] final class LookupPieces(val conf: Map[String, String],
+      hadoop: Configuration, rebase: ParquetOptions, int96Zone: Option[java.time.ZoneId],
       val output: Seq[Attribute], projections: Seq[UnsafeProjection]) {
+    private val converter = new ParquetToSparkSchemaConverter(hadoop)
+    private val layouts =
+      new java.util.concurrent.ConcurrentHashMap[(String, MessageType), (MessageType, MessageColumnIO)]()
+
+    /** The requested schema of a file of `schema` written by `createdBy`,
+      * clipped as `ParquetReadSupport.init` clips it (vectorized reader
+      * off), and its `ColumnIO`, which depends on the writer too. */
+    private def layout(createdBy: String, schema: MessageType): (MessageType, MessageColumnIO) =
+      layouts.computeIfAbsent((createdBy, schema), _ => {
+        val requested = ParquetReadSupport.getRequestedSchema(schema, packedSchema, hadoop, false)
+        (requested, new ColumnIOFactory(createdBy).getColumnIO(requested, schema, true))
+      })
+
+    /** The rows of key `key` in local parquet file `f`. The file is
+      * opened once, straight off the local file system: its footer's
+      * `user_id` stats pick the row groups that can hold the key (a row
+      * group without them is kept), and only those are read. Records
+      * become rows through Spark's own row materializer, the one
+      * `ParquetReadSupport.prepareForRead` builds for Spark's
+      * non-vectorized read, so decimal and timestamp conversion stay
+      * Spark's: rebase specs come from the footer metadata under the
+      * session's read modes, and INT96 values are converted to the
+      * session time zone where `spark.sql.parquet.int96TimestampConversion`
+      * asks for it and the writer is not parquet-mr. A file that is not
+      * parquet fails the open. */
+    def read(f: java.io.File, key: Long): Seq[InternalRow] = {
+      // read options per file, from the session's Hadoop conf: they
+      // carry parquet-mr's codec factory, whose decompressors are cached
+      // unsynchronized and released when the reader closes
+      val in = ParquetFileReader.open(new LocalInputFile(f.toPath),
+        HadoopReadOptions.builder(hadoop).build())
+      try {
+        val meta = in.getFooter.getFileMetaData
+        val kv = meta.getKeyValueMetaData
+        val (requested, io) = layout(meta.getCreatedBy, meta.getSchema)
+        // the materializer holds the row being assembled: one per file
+        val materializer = ParquetBridge.materializer(requested, packedSchema, converter,
+          int96Zone.filterNot(_ => Option(meta.getCreatedBy).exists(_.startsWith("parquet-mr"))),
+          DataSourceUtils.datetimeRebaseSpec(kv.get, rebase.datetimeRebaseModeInRead),
+          DataSourceUtils.int96RebaseSpec(kv.get, rebase.int96RebaseModeInRead))
+        in.setRequestedSchema(requested)
+        in.getRowGroups.asScala.toSeq.zipWithIndex.flatMap { case (g, i) =>
+          if (!mayHold(g, key)) Nil
+          else {
+            val records = io.getRecordReader(in.readRowGroup(i), materializer, FilterCompat.NOOP)
+            // the materializer reuses its row: copy each kept one before the next read
+            Iterator.fill(g.getRowCount.toInt)(records.read())
+              .filter(r => !r.isNullAt(0) && r.getLong(0) == key).map(_.copy()).toVector
+          }
+        }
+      } finally in.close()
+    }
+
     def decode(row: InternalRow): InternalRow = synchronized {
       projections.foldLeft(row)((r, p) => p(r)).copy()
     }
   }
+
+  /** Whether row group `g`'s `user_id` stats can hold `key`; a row
+    * group without them can. */
+  private def mayHold(g: BlockMetaData, key: Long): Boolean =
+    g.getColumns.asScala.find(_.getPath.toDotString == "user_id").forall { c =>
+      val st: Statistics[_] = c.getStatistics
+      st == null || !st.hasNonNullValue || (
+        st.genericGetMin.asInstanceOf[java.lang.Long] <= key &&
+          key <= st.genericGetMax.asInstanceOf[java.lang.Long])
+    }
 
   private def buildPieces(s: SparkSession, conf: Map[String, String]): LookupPieces = {
     val decoded = EventSourcing.decodeState(ColumnBridge.dataFrame(s,
@@ -326,17 +399,26 @@ object LiveStore {
       case _: LocalRelation => Nil
       case other => sys.error(s"decodeState analysed to ${other.nodeName}, not a projection")
     }
-    new LookupPieces(conf,
-      new ParquetFileFormat().buildReaderWithPartitionValues(s, packedSchema,
-        new StructType(), packedSchema, Nil, Map("returning_batch" -> "false"),
-        s.sessionState.newHadoopConf()),
+    val sql = s.sessionState.conf
+    val hadoop = s.sessionState.newHadoopConf()
+    Seq(SQLConf.PARQUET_BINARY_AS_STRING, SQLConf.PARQUET_INT96_AS_TIMESTAMP,
+      SQLConf.CASE_SENSITIVE, SQLConf.NESTED_SCHEMA_PRUNING_ENABLED,
+      SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED, SQLConf.LEGACY_PARQUET_NANOS_AS_LONG,
+      SQLConf.PARQUET_FIELD_ID_READ_ENABLED, SQLConf.PARQUET_IGNORE_VARIANT_ANNOTATION,
+      SQLConf.PARQUET_READER_RESPECT_UNKNOWN_TYPE_ANNOTATION)
+      .foreach(e => hadoop.setBoolean(e.key, sql.getConf(e)))
+    new LookupPieces(conf, hadoop,
+      new ParquetOptions(Map.empty[String, String], sql),
+      Option.when(sql.isParquetINT96TimestampConversion)(
+        DateTimeUtils.getZoneId(sql.sessionLocalTimeZone)),
       decoded.output, stack(decoded).reverse)
   }
 
   /** Per session, weakly: a collected session's pieces go with it. */
   private val lookupPieces = new java.util.WeakHashMap[SparkSession, LookupPieces]()
 
-  private def piecesFor(s: SparkSession): LookupPieces = {
+  /** The session's [[LookupPieces]], rebuilt when its SQL conf changed. */
+  private[graft] def piecesFor(s: SparkSession): LookupPieces = {
     val conf = s.sessionState.conf.getAllConfs
     Option(lookupPieces.synchronized(lookupPieces.get(s))).filter(_.conf == conf)
       .getOrElse {
@@ -346,76 +428,46 @@ object LiveStore {
       }
   }
 
-  private val footers = new ParquetMetadataConverter()
-
-  /** The byte ranges of `f`'s row groups whose `user_id` stats can hold
-    * `key` (a row group without them is kept), as (start, length).
-    * The footer is read straight off the local file. A file that does
-    * not end in parquet's magic is one range, for the reader to
-    * refuse. */
-  private def rowGroups(f: java.io.File, key: Long): Seq[(Long, Long)] = {
-    val in = new java.io.RandomAccessFile(f, "r")
-    try {
-      val n = in.length
-      val tail = new Array[Byte](8)
-      if (n >= 12) { in.seek(n - 8); in.readFully(tail) }
-      if (new String(tail, 4, 4, java.nio.charset.StandardCharsets.US_ASCII) != "PAR1")
-        Seq(0L -> n)
-      else {
-        val len = java.nio.ByteBuffer.wrap(tail).order(java.nio.ByteOrder.LITTLE_ENDIAN).getInt
-        val meta = new Array[Byte](len)
-        in.seek(n - 8 - len)
-        in.readFully(meta)
-        footers.readParquetMetadata(new java.io.ByteArrayInputStream(meta),
-          ParquetMetadataConverter.NO_FILTER).getBlocks.asScala.toSeq
-          .filter(_.getColumns.asScala.find(_.getPath.toDotString == "user_id").forall { c =>
-            val st: Statistics[_] = c.getStatistics
-            st == null || !st.hasNonNullValue || (
-              st.genericGetMin.asInstanceOf[java.lang.Long] <= key &&
-                key <= st.genericGetMax.asInstanceOf[java.lang.Long])
-          })
-          .map(b => b.getStartingPos -> b.getCompressedSize)
-      }
-    } finally in.close()
+  /** The data files of `key`'s shard in each live root of store `dir`:
+    * one listing of the store dir, then one of each root's
+    * `shard=<floorMod(key, n)>` dir (the modulus `upsert`'s pmod
+    * writes with, negative keys included). */
+  private[graft] def shardFiles(dir: String, key: Long): Seq[java.io.File] = {
+    val live = roots(dir).live
+    if (live.isEmpty) sys.error(s"live store at $dir has no committed data")
+    val shard = s"shard=${Math.floorMod(key, storeShards(dir).toLong)}"
+    live.flatMap(r => Option(new java.io.File(r, shard).listFiles()).getOrElse(Array.empty))
+      .filter(f => f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
   }
 
-  /** Point lookup BY KEY, read on the driver with no Spark job. Each
-    * live root contributes only its `shard=<floorMod(key, n)>` data
-    * files (the modulus `upsert`'s pmod writes with, negative keys
-    * included); no other shard's file is opened. Of those, only the
-    * row groups whose footer `user_id` stats can hold the key are read,
-    * by Spark's own parquet reader, so decimal and timestamp
-    * conversion stay Spark's. The reader and the decode are the
-    * session's [[LookupPieces]]: a call broadcasts nothing and
-    * analyses nothing. The ≤ 1 + [[compactEvery]] rows of the key fold
-    * through [[mergedKey]], and the 0 or 1 row is decoded and returned
-    * as a local relation on fresh attributes, so `collect()` runs no
-    * job either. Listing, footers and rows are read on every call. */
-  def lookup(s: SparkSession, dir: String, key: Long): DataFrame = {
-    val roots = livePaths(dir)
-    if (roots.isEmpty) sys.error(s"live store at $dir has no committed data")
-    val shard = s"shard=${Math.floorMod(key, storeShards(dir).toLong)}"
-    val files = roots.flatMap(r =>
-      Option(new java.io.File(r, shard).listFiles()).getOrElse(Array.empty))
-      .filter(f => f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
-    val pieces = piecesFor(s)
-    val rows = files.flatMap { f =>
-      val path = org.apache.spark.paths.SparkPath.fromPath(new org.apache.hadoop.fs.Path(f.toURI))
-      rowGroups(f, key).flatMap { case (start, length) =>
-        pieces.read(PartitionedFile(InternalRow.empty, path, start, length, Array.empty,
-          f.lastModified(), f.length()))
-          .filter(r => !r.isNullAt(0) && r.getLong(0) == key).map(_.copy())
-      }
-    }
+  /** `key`'s rows folded through [[mergedKey]], decoded, as a local
+    * relation on fresh attributes, so `collect()` runs no job. */
+  private[graft] def answer(s: SparkSession, pieces: LookupPieces, key: Long,
+      rows: Seq[InternalRow]): DataFrame =
     ColumnBridge.analyzedFrame(s, LocalRelation(pieces.output.map(_.newInstance()),
       mergedKey(key, rows).map(pieces.decode).toSeq))
+
+  /** Point lookup BY KEY, read on the driver with no Spark job. Each
+    * live root contributes only its key's shard files ([[shardFiles]]);
+    * no other shard's file is opened. Each of those is opened once, off
+    * the local file, and of it only the row groups whose footer
+    * `user_id` stats can hold the key are read, through Spark's row
+    * materializer ([[LookupPieces.read]]). What the read and the
+    * decode take from the session is built once, in its
+    * [[LookupPieces]]: a call broadcasts nothing, analyses nothing and
+    * reads nothing through Hadoop's file system. The
+    * ≤ 1 + [[compactEvery]] rows of the key fold and decode in
+    * [[answer]]. Listing, footers and rows are read on every call. */
+  def lookup(s: SparkSession, dir: String, key: Long): DataFrame = {
+    val pieces = piecesFor(s)
+    answer(s, pieces, key, shardFiles(dir, key).flatMap(pieces.read(_, key)))
   }
 
   /** Full decoded snapshot (the read-side view of the whole store):
     * merge-on-read in one hash aggregate, then decode. */
   def snapshot(s: SparkSession, dir: String): DataFrame =
     EventSourcing.decodeState(merged(
-      readPacked(s, dir).getOrElse(
+      readPacked(s, roots(dir).live).getOrElse(
         sys.error(s"live store at $dir has no committed data"))))
 
   private def runStoreTo(s: SparkSession, d: String, dir: String): Unit = {
@@ -442,7 +494,7 @@ object LiveStore {
     runStoreTo(s, d, dir)
     compact(s, dir, purgeTombstones = true)
     EventSourcing.decodeCompacted(
-      readPacked(s, dir).get.select(col("user_id"), col("pk")))
+      readPacked(s, roots(dir).live).get.select(col("user_id"), col("pk")))
   }
 
   /** Driver query: maintain the store from the event stream, then

@@ -27,12 +27,22 @@ import org.apache.spark.sql.streaming.StreamingQueryListener._
   * counts. An op is any registered name or a `ScaleSmoke.extraQueries`
   * variant.
   *
+  * The `lookup` mode times `LiveStore.lookup` step by step instead
+  * ([[lookups]]).
+  *
   * Usage: runMain graft.tools.Profile <sfDir> <reps> <op>...
+  *        runMain graft.tools.Profile <sfDir> <reps> lookup <roots>
   */
 object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val reps = args(1).toInt
+    if (args.lift(2).contains("lookup")) {
+      val spark = graft.GraftSession()
+      try lookups(spark, sfDir, reps, args.lift(3).fold(5)(_.toInt))
+      finally spark.stop()
+      return
+    }
     val ops = args.drop(2).toSeq
     def lookup(op: String) =
       ScaleSmoke.extraQueries.get(op).orElse(graft.SparkEntry.queries.get(op))
@@ -75,6 +85,59 @@ object Profile {
         s"compiles=$compiled forks=${starts.size} [$byCommand]")
     }
     spark.stop()
+  }
+
+  /** Builds the `es_live_store` store of `sfDir`, compacts it to one
+    * base and upserts slices of the event log as deltas until it has
+    * `roots` live roots, then times `reps` lookups of its keys twice
+    * (the first round warms the JIT and the session's lookup pieces)
+    * and prints the second round's median per step: listing the key's
+    * shard files, reading them (the pieces included), the fold and
+    * decode into the returned frame, and the caller's `collect()`. */
+  def lookups(spark: org.apache.spark.sql.SparkSession, sfDir: String, reps: Int,
+      roots: Int): Unit = {
+    import org.apache.spark.sql.functions.{col, lit, pmod}
+    import graft.streaming.LiveStore
+    require(1 <= roots && roots <= 1 + LiveStore.compactEvery,
+      s"roots must be 1..${1 + LiveStore.compactEvery}: more deltas compact")
+    graft.SparkEntry.queries("es_live_store")(spark, sfDir).count()
+    val dir = s"${graft.sources.Tables.workDir(spark)}/livestore"
+    LiveStore.compact(spark, dir, purgeTombstones = false)
+    val events = graft.sources.Tables.events(spark, sfDir)
+    // batch ids past every id the stream committed
+    (1 until roots).foreach(i => LiveStore.upsert(
+      events.filter(pmod(col("event_id"), lit(roots - 1)) === i - 1), 1000L + i, dir))
+    val keys = events.select("user_id").distinct().orderBy("user_id").collect().map(_.getLong(0))
+    def round(): (Seq[Array[Double]], Int) = {
+      val steps = Seq.fill(4)(new Array[Double](reps))
+      var files = 0
+      for (rep <- 0 until reps) {
+        val key = keys(rep % keys.length)
+        val t0 = System.nanoTime()
+        val found = LiveStore.shardFiles(dir, key)
+        val t1 = System.nanoTime()
+        val pieces = LiveStore.piecesFor(spark)
+        val rows = found.flatMap(pieces.read(_, key))
+        val t2 = System.nanoTime()
+        val df = LiveStore.answer(spark, pieces, key, rows)
+        val t3 = System.nanoTime()
+        df.collect()
+        val t4 = System.nanoTime()
+        Seq(t0, t1, t2, t3, t4).sliding(2).zip(steps).foreach { case (Seq(a, b), s) =>
+          s(rep) = (b - a) / 1e6
+        }
+        files += found.size
+      }
+      (steps, files)
+    }
+    round()
+    val (steps, files) = round()
+    def median(xs: Array[Double]) = xs.sorted.apply(xs.length / 2)
+    val Seq(listing, read, decode, collect) = steps.map(median)
+    println(f"[profile] lookup roots=$roots keys=${keys.length} reps=$reps " +
+      f"files/lookup=${files.toDouble / reps}%.2f median ms: listing=$listing%.3f " +
+      f"read=$read%.3f decode=$decode%.3f collect=$collect%.3f " +
+      f"total=${median(Array.tabulate(reps)(i => steps.map(_(i)).sum))}%.3f")
   }
 
   /** Classes Spark's code generator has compiled in this JVM so far. */

@@ -12,8 +12,10 @@ import org.apache.spark.sql.execution.streaming.runtime.StreamingRelation
   * `private[sql]` (`org.apache.spark.sql.classic.ExpressionUtils`).
   * Custom Catalyst expressions still need to surface as `Column`s, so
   * this shim lives inside the sql package tree — the established
-  * pattern for Spark extension libraries. Nothing else in graft
-  * reaches into Spark internals.
+  * pattern for Spark extension libraries. Besides the other two shims,
+  * `org.apache.spark.graftbridge.ListenerBridge` and
+  * `sql.execution.datasources.parquet.graftbridge.ParquetBridge`,
+  * nothing else in graft reaches into Spark internals.
   */
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)

@@ -314,4 +314,64 @@ class LiveStoreSpec extends SparkSpec {
     assert(LiveStore.lookup(spark, dir, key).collect().toSeq == want)
     intercept[Exception](LiveStore.snapshot(spark, dir).collect())
   }
+
+  test("a lookup equals the filtered snapshot under every parquet timestamp output type") {
+    import spark.implicits._
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.io.LocalInputFile
+    // sub-second and pre-1970 times too: the lookup converts them with
+    // Spark's row materializer, the snapshot with Spark's vectorized reader
+    val batches = Seq(
+      Seq(Ev(1, ts(0), 7, "signup", 0.0), Ev(2, new Timestamp(1704067200123L), -3, "click", 1.25),
+        Ev(3, Timestamp.valueOf("1850-06-01 12:00:00.5"), 40, "view", 2.0)),
+      Seq(Ev(4, new Timestamp(1704067260987L), 7, "purchase", 12.34),
+        Ev(5, ts(3), -3, "error", 0.5)))
+    val physical = Map("INT96" -> "INT96", "TIMESTAMP_MICROS" -> "INT64 TIMESTAMP(MICROS,true)",
+      "TIMESTAMP_MILLIS" -> "INT64 TIMESTAMP(MILLIS,true)")
+    for ((outputType, mts) <- physical) {
+      val dir = storeDir(s"graft_livestore_ts_$outputType")
+      withConf("spark.sql.parquet.outputTimestampType" -> outputType) {
+        batches.zipWithIndex.foreach { case (b, i) => LiveStore.upsert(b.toDF(), i, dir) }
+      }
+      val file = dataFiles(new java.io.File(dir)).keys.head
+      val schema = {
+        val r = ParquetFileReader.open(new LocalInputFile(java.nio.file.Paths.get(file)))
+        try r.getFooter.getFileMetaData.getSchema finally r.close()
+      }
+      val written = schema.getType(schema.getFieldIndex("mts")).asPrimitiveType()
+      assert(Seq(Some(written.getPrimitiveTypeName.name), Option(written.getLogicalTypeAnnotation))
+        .flatten.mkString(" ") == mts, outputType)
+      val snap = LiveStore.snapshot(spark, dir)
+      for (k <- Seq(7L, -3L, 40L, 999L)) {
+        val want = snap.filter(col("user_id") === k).collect().toSeq
+        assert(want.nonEmpty == (k != 999L), s"$outputType key $k")
+        assert(LiveStore.lookup(spark, dir, k).collect().toSeq == want, s"$outputType key $k")
+      }
+      // a file that is not parquet in the key's shard dir fails the lookup
+      val shard7 = new java.io.File(dir, "delta_b1/shard=7")
+      java.nio.file.Files.write(new java.io.File(shard7, "part-junk.parquet").toPath,
+        Array[Byte](1, 2, 3))
+      intercept[Exception](LiveStore.lookup(spark, dir, 7L).collect())
+    }
+  }
+
+  test("warm lookups read nothing through Hadoop's file system") {
+    import spark.implicits._
+    import org.apache.hadoop.fs.FileSystem
+    import scala.jdk.CollectionConverters._
+    val dir = storeDir("graft_livestore_nohadoop")
+    LiveStore.upsert(Seq(Ev(1, ts(0), 7, "click", 1.0), Ev(2, ts(1), 23, "view", 2.0)).toDF(), 0L, dir)
+    LiveStore.upsert(Seq(Ev(3, ts(2), 7, "purchase", 3.0)).toDF(), 1L, dir)
+    def looked() = LiveStore.lookup(spark, dir, 7L).collect().map(_.getAs[Long]("n_events")).toSeq
+    assert(looked() == Seq(2L))
+    // the `file` scheme's read counters (bytes, ops), as Hadoop keeps them
+    def reads(): Map[String, Long] =
+      Option(FileSystem.getGlobalStorageStatistics.get("file")).toSeq
+        .flatMap(_.getLongStatistics.asScala)
+        .filter(_.getName.toLowerCase.contains("read")).map(l => l.getName -> l.getValue).toMap
+    val before = reads()
+    assert(before.nonEmpty, "the upserts' commit reads no Hadoop counter")
+    (1 to 20).foreach(_ => assert(looked() == Seq(2L)))
+    assert(reads() == before)
+  }
 }

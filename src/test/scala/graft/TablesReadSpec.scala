@@ -149,11 +149,16 @@ class TablesReadSpec extends SparkSpec {
       body
       (broadcastIds(spark.sparkContext) -- before).size
     }
-    assert(looked() == Seq(2L))
+    assert(newBroadcasts(assert(looked() == Seq(2L))) == 0)
+    val warm = LiveStore.piecesFor(spark)
     assert(newBroadcasts((1 to 20).foreach(_ => assert(looked() == Seq(2L)))) == 0)
+    assert(LiveStore.piecesFor(spark) eq warm)
     withConf("spark.sql.parquet.enableVectorizedReader" -> "false") {
-      assert(newBroadcasts(assert(looked() == Seq(2L))) == 1)
+      assert(newBroadcasts(assert(looked() == Seq(2L))) == 0)
+      val rebuilt = LiveStore.piecesFor(spark)
+      assert(!(rebuilt eq warm), "a conf change must rebuild the pieces")
       assert(newBroadcasts((1 to 5).foreach(_ => assert(looked() == Seq(2L)))) == 0)
+      assert(LiveStore.piecesFor(spark) eq rebuilt)
     }
   }
 
